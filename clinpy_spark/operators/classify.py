@@ -98,18 +98,14 @@ def _fit_logistic_driver(x_indptr, x_indices, x_values, y, n_features,
     n = len(y)
     yv = np.asarray(y, dtype=np.float64)
     counts = np.diff(x_indptr)
+    row_of = np.repeat(np.arange(n), counts)
 
     def f_g(wb):
         w, b = wb[:-1], wb[-1]
-        zseg = x_values * w[x_indices]
-        if len(zseg):
-            # reduceat rejects offsets == len (trailing all-zero rows);
-            # clamp, then zero empty rows via the counts mask below
-            z = np.add.reduceat(zseg, np.minimum(x_indptr[:-1],
-                                                 len(zseg) - 1))
-        else:
-            z = np.zeros(n)
-        z = np.where(counts > 0, z, 0.0) + b
+        # per-row segment sum of the CSR products; rows with no features
+        # (anywhere, trailing ones included) get exactly 0
+        z = np.bincount(row_of, weights=x_values * w[x_indices],
+                        minlength=n) + b
         # stable log(1+exp(-yz)) with y in {0,1}: loss = log1p(exp(z)) - y*z
         loss = np.logaddexp(0.0, z) - yv * z
         p = 1.0 / (1.0 + np.exp(-z))

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from clinpy_spark.session import collect_bounded
+
 # Cap on per-event-time grid rows the Newton fitters may pull to the
 # driver (r13 verdict #2): cells are design-bounded but DISTINCT EVENT
 # TIMES come from the data, so past this cap the fitters keep the
@@ -37,6 +39,25 @@ from pyspark.sql.window import Window
 # grid. 100k rows of 4-8 numerics is ~a few MB — far under any
 # maxResultSize — while every declared fixture's grid is ~1.5k rows.
 _GRID_DRIVER_MAX = 100_000
+
+
+def _literal_row(spark, cols: list[tuple[str, object]]) -> DataFrame:
+    """1-row DataFrame of driver-computed (name, value) columns: an int
+    is a BIGINT, a float or None a DOUBLE. One ``selectExpr`` parsed on
+    the JVM instead of a Py4J round trip per ``F.lit`` column; a double
+    travels as its shortest round-trip repr, so it parses back to the
+    same bits (nan and inf included)."""
+    from numbers import Integral
+
+    exprs = []
+    for name, v in cols:
+        if isinstance(v, Integral):
+            exprs.append(f"CAST({int(v)} AS BIGINT) AS `{name}`")
+        elif v is None:
+            exprs.append(f"CAST(NULL AS DOUBLE) AS `{name}`")
+        else:
+            exprs.append(f"CAST('{float(v)!r}' AS DOUBLE) AS `{name}`")
+    return spark.range(1).selectExpr(*exprs)
 
 
 def _per_time(df: DataFrame, time_col: str, event_col: str,
@@ -929,21 +950,26 @@ def _newton_beta(spark, grid: DataFrame, iterations: int) -> DataFrame:
     crossJoin(broadcast(beta)) recurrence paid one broadcast-exchange
     job plus one grid aggregate per step — ~0.8s of pure scheduling per
     fit at sf0.1 across the five cox/finegray callers. Arithmetic is
-    replicated per-row in collect order with the same expression
-    shapes (s1 = n1*e^b; s0 = (n-n1)+s1; u += d1 - d*frac;
-    i += d*frac*(1-frac)), so the float stream matches the previous
-    single-partition aggregate's operand order; emission stays behind
-    the callers' round-6 as before.
+    replicated per-row with the same expression shapes (s1 = n1*e^b;
+    s0 = (n-n1)+s1; u += d1 - d*frac; i += d*frac*(1-frac)) in time
+    order (below); emission stays behind the callers' round-6 as
+    before.
 
     The driver loop only engages when the grid is provably bounded
     (r13 verdict #2): distinct event times come from the data, so past
     ``_GRID_DRIVER_MAX`` rows the steps fall back to the pre-r13
     distributed recurrence (one grid aggregate + broadcast crossJoin
-    per step) and nothing data-sized reaches the driver."""
+    per step) and nothing data-sized reaches the driver.
+
+    The collected rows are sorted by (time, n, n1, d, d1) before any
+    float touches them, so the accumulation order does not depend on
+    the partition layout (rows equal on every field contribute equal
+    terms, so their relative order cannot matter)."""
     import math
 
-    rows = grid.select("n", "n1", "d", "d1").take(_GRID_DRIVER_MAX + 1)
-    if len(rows) > _GRID_DRIVER_MAX:
+    rows = collect_bounded(grid.select("__t", "n", "n1", "d", "d1"),
+                           _GRID_DRIVER_MAX)
+    if rows is None:
         beta_df = spark.range(1).select(F.lit(0.0).alias("beta"))
         for _ in range(iterations):
             j = grid.crossJoin(F.broadcast(beta_df))
@@ -964,6 +990,9 @@ def _newton_beta(spark, grid: DataFrame, iterations: int) -> DataFrame:
                 ).alias("beta")
             )
         return beta_df
+    # NULL times sort first, as in the grid's ascending window order
+    rows = sorted((tuple(r) for r in rows),
+                  key=lambda r: (r[0] is not None,) + r)
     beta: float | None = 0.0
     for _ in range(iterations):
         if beta is None:
@@ -977,15 +1006,14 @@ def _newton_beta(spark, grid: DataFrame, iterations: int) -> DataFrame:
             # -> NULL beta, never a driver crash (divergent step on a
             # separated / rare-exposure cohort)
             eb = math.inf
-        for r in rows:
-            s1 = r[1] * eb
-            frac = s1 / ((r[0] - r[1]) + s1)
-            u += r[3] - r[2] * frac
-            i += r[2] * frac * (1 - frac)
+        for _t, n, n1, d, d1 in rows:
+            s1 = n1 * eb
+            frac = s1 / ((n - n1) + s1)
+            u += d1 - d * frac
+            i += d * frac * (1 - frac)
         # empty grid: the old agg yielded NULL sums -> NULL beta
         beta = beta + u / i if (rows and i > 0) else None
-    return spark.range(1).select(
-        F.lit(beta).cast("double").alias("beta"))
+    return _literal_row(spark, [("beta", beta)])
 
 
 def cox_newton(
@@ -1115,30 +1143,54 @@ def cox_newton_multi(
                                          digits=digits)
 
 
-def cox_newton_multi_from_leavers(
-    leav: DataFrame,
-    d: int,
-    iterations: int = 4,
-    digits: int | None = 5,
-) -> DataFrame:
-    """:func:`cox_newton_multi` from the per-(cell, time) leaver table
-    (__x1..__xd, __t, __r, __d) — r/d are integer-ADDITIVE, so a
-    streaming fold maintains them per (cell, time) and this refits the
-    d-covariate Cox MLE on read (streaming/survival.py
-    finalize_cox_multi), the same fold/recompute-on-read architecture
-    as the KM twin. At-risk counts rebuild from the folded leavers via
-    the cumulative window, never from subject history."""
-    import math
+def _cox_grid_rows_driver(raw: list, d: int) -> list | None:
+    """The (cell x event-time) grid of :func:`_cox_grid_distributed` from
+    the collected leaver rows (x1..xd, t, r, d), keyed by (cell, t):
+    rows (t, n, d, x1..xd) sorted by (t, x1..xd), or None when cells x
+    event times exceed ``_GRID_DRIVER_MAX``.
 
-    import numpy as np
+    The at-risk count of a cell at event time t is the cell's leaver
+    total minus its leavers strictly before t, an exact integer prefix
+    sum, so every row equals the distributed build's. The sort pins the
+    reduction order BY CONSTRUCTION (r13 verdict #1): within each time
+    the cells accumulate in x-lexicographic order and times accumulate
+    ascending. The oracle CTEs pin the identical order with DuckDB
+    ordered aggregates (sum(... ORDER BY x1..xd) per time, ORDER BY t
+    across times), so the two float streams are operand-for-operand
+    identical, not merely within rounding distance."""
+    cells: dict = {}
+    event_times = set()
+    for r in raw:
+        t, n_leave, n_event = r[d], int(r[d + 1]), int(r[d + 2])
+        cells.setdefault(tuple(float(x) for x in r[:d]), []).append(
+            (t, n_leave, n_event))
+        if n_event > 0:
+            event_times.add(t)
+    times = sorted(event_times)
+    if len(cells) * len(times) > _GRID_DRIVER_MAX:
+        return None
+    grid = []
+    for cell, leavers in cells.items():
+        leavers.sort(key=lambda v: v[0])
+        at_risk = sum(v[1] for v in leavers)
+        events = {t: e for t, _, e in leavers if e > 0}
+        k = 0
+        for t in times:
+            while k < len(leavers) and leavers[k][0] < t:
+                at_risk -= leavers[k][1]
+                k += 1
+            grid.append((t, float(at_risk), events.get(t, 0), *cell))
+    grid.sort(key=lambda row: (row[0],) + row[3:])
+    return grid
 
-    from clinpy_spark.functions.cramer import solve2, solve3, var3_diag
 
-    xs = [f"__x{i}" for i in range(1, d + 1)]
-    leav = leav.localCheckpoint(eager=False)
-    # event-time probe rows cross-joined with the bounded cell table so
-    # every cell's at-risk count exists at every event time (a cell
-    # without a leaver at t has no natural row there)
+def _cox_grid_distributed(leav: DataFrame, xs: list[str]) -> DataFrame:
+    """The (cell x event-time) grid (__t, __n, __d, x1..xd) built in
+    Spark, for leaver tables past the driver cap: event-time probe rows
+    cross-joined with the bounded cell table so every cell's at-risk
+    count exists at every event time (a cell without a leaver at t has
+    no natural row there), then one cumulative-leavers window per
+    cell."""
     cells = leav.groupBy(*xs).agg(F.sum("__r").alias("__tot"))
     times = (leav.filter(F.col("__d") > 0)
              .select("__t").distinct())
@@ -1164,39 +1216,58 @@ def cox_newton_multi_from_leavers(
         .select(*xs, "__t", "__n")
     )
     dgrid = leav.filter(F.col("__d") > 0).select(*xs, "__t", "__d")
-    grid = (
+    return (
         atrisk.join(dgrid, [*xs, "__t"], "left")
         .withColumn("__d", F.coalesce("__d", F.lit(0)))
     )
+
+
+def cox_newton_multi_from_leavers(
+    leav: DataFrame,
+    d: int,
+    iterations: int = 4,
+    digits: int | None = 5,
+) -> DataFrame:
+    """:func:`cox_newton_multi` from the per-(cell, time) leaver table
+    (__x1..__xd, __t, __r, __d) — r/d are integer-ADDITIVE, so a
+    streaming fold maintains them per (cell, time) and this refits the
+    d-covariate Cox MLE on read (streaming/survival.py
+    finalize_cox_multi), the same fold/recompute-on-read architecture
+    as the KM twin. At-risk counts rebuild from the folded leavers
+    (integer prefix sums per cell, :func:`_cox_grid_rows_driver`), never
+    from subject history. The leaver table is keyed by (cell, time)."""
+    import math
+
+    import numpy as np
+
+    from clinpy_spark.functions.cramer import solve2, solve3, var3_diag
+
+    xs = [f"__x{i}" for i in range(1, d + 1)]
     spark = leav.sparkSession
 
-    # ONE bounded probe of the (cell x event-time) grid — built
-    # distributed exactly as before. Cells are design-bounded, but the
-    # TIME axis comes from the data (a continuous time column at scale
-    # has ~one distinct time per event), so the driver-side fast path
-    # only engages when the grid is provably small; past the cap every
-    # Newton step stays a distributed grid aggregate (the pre-r13
+    # ONE bounded collect of the leaver table, then the (cell x
+    # event-time) grid on the driver from integer prefix sums. Cells are
+    # design-bounded, but the TIME axis comes from the data (a continuous
+    # time column at scale has ~one distinct time per event), so the
+    # driver path only engages when both the leaver table and the grid
+    # are provably small; past the cap the grid is built distributed and
+    # every Newton step stays a distributed grid aggregate (the pre-r13
     # recurrence), so no data-sized collect can ever reach the driver.
-    raw = grid.select("__t", "__n", "__d", *xs).take(_GRID_DRIVER_MAX + 1)
-    driver_side = len(raw) <= _GRID_DRIVER_MAX
-    if driver_side:
-        # Deterministic reduction order BY CONSTRUCTION (r13 verdict
-        # #1): collect order depends on partition layout (core count,
-        # AQE), so the rows are sorted by (t, x1..xd) before any float
-        # touches them — within each time the cells accumulate in
-        # x-lexicographic order and times accumulate ascending. The
-        # oracle CTEs pin the identical order with DuckDB ordered
-        # aggregates (sum(... ORDER BY x1..xd) per time, ORDER BY t
-        # across times), so the two float streams are operand-for-
-        # operand identical, not merely within rounding distance.
-        g_rows = sorted(
-            ((r["__t"], float(r["__n"]), int(r["__d"]),
-              *[float(r[x]) for x in xs])
-             for r in raw),
-            key=lambda row: (row[0],) + row[3:])
+    raw = collect_bounded(leav.select(*xs, "__t", "__r", "__d"),
+                          _GRID_DRIVER_MAX)
+    g_rows = None if raw is None else _cox_grid_rows_driver(raw, d)
+    if g_rows is not None:
         by_t: dict = {}
         for row in g_rows:
             by_t.setdefault(row[0], []).append(row)
+        # every subject leaves exactly once, so the leaver totals ARE
+        # the cohort size (works from a folded stream state too)
+        n_subjects = sum(int(r[d + 1]) for r in raw)
+    else:
+        leav = leav.localCheckpoint(eager=False)
+        grid = _cox_grid_distributed(leav, xs)
+        n_subjects = int(
+            leav.agg(F.sum("__r").alias("n")).collect()[0].n or 0)
 
     def _exp(v: float) -> float:
         # mirror the distributed plan's F.exp: overflow propagates as
@@ -1283,7 +1354,7 @@ def cox_newton_multi_from_leavers(
                 for a in range(d) for b in range(a, d)}
         return u, info, int(row["n_events"])
 
-    moments = moments_driver if driver_side else moments_distributed
+    moments = moments_driver if g_rows is not None else moments_distributed
 
     def step(beta, u, info):
         """One Newton update.  For d <= 3 the solve is EXPLICIT Cramer
@@ -1350,20 +1421,13 @@ def cox_newton_multi_from_leavers(
             return None
         return list(np.diag(np.linalg.inv(a)))
 
-    # every subject leaves exactly once, so the leaver totals ARE the
-    # cohort size (works from a folded stream state too)
-    n_subjects = int(
-        leav.agg(F.sum("__r").alias("n")).collect()[0].n or 0)
-
     def null_result(n_events):
-        cols = []
-        for pref in ("beta", "hr", "se", "wald_chi2_"):
-            cols += [F.lit(None).cast("double").alias(f"{pref}{i}")
-                     for i in range(1, d + 1)]
-        cols += [F.lit(n_events).cast("long").alias("n_events"),
-                 F.lit(n_subjects).cast("long").alias("n_subjects"),
-                 F.lit(None).cast("double").alias("score_norm")]
-        return spark.range(1).select(*cols)
+        cols = [(f"{pref}{i}", None)
+                for pref in ("beta", "hr", "se", "wald_chi2_")
+                for i in range(1, d + 1)]
+        cols += [("n_events", n_events), ("n_subjects", n_subjects),
+                 ("score_norm", None)]
+        return _literal_row(spark, cols)
 
     beta = [0.0] * d
     n_events = 0
@@ -1395,20 +1459,15 @@ def cox_newton_multi_from_leavers(
         score_norm = score_norm + v * v
     score_norm = math.sqrt(score_norm)
 
-    cols = [F.lit(r5(beta[i - 1])).alias(f"beta{i}") for i in range(1, d + 1)]
-    cols += [F.lit(r5(math.exp(beta[i - 1]))).alias(f"hr{i}")
-             for i in range(1, d + 1)]
-    cols += [F.lit(r5(math.sqrt(var[i - 1]))).alias(f"se{i}")
-             for i in range(1, d + 1)]
-    cols += [
-        F.lit(r5(beta[i - 1] * beta[i - 1] / var[i - 1]))
-        .alias(f"wald_chi2_{i}")
-        for i in range(1, d + 1)
-    ]
-    cols += [F.lit(n_events).cast("long").alias("n_events"),
-             F.lit(n_subjects).cast("long").alias("n_subjects"),
-             F.lit(r5(score_norm)).alias("score_norm")]
-    return spark.range(1).select(*cols)
+    ids = range(1, d + 1)
+    cols = [(f"beta{i}", r5(beta[i - 1])) for i in ids]
+    cols += [(f"hr{i}", r5(math.exp(beta[i - 1]))) for i in ids]
+    cols += [(f"se{i}", r5(math.sqrt(var[i - 1]))) for i in ids]
+    cols += [(f"wald_chi2_{i}", r5(beta[i - 1] * beta[i - 1] / var[i - 1]))
+             for i in ids]
+    cols += [("n_events", n_events), ("n_subjects", n_subjects),
+             ("score_norm", r5(score_norm))]
+    return _literal_row(spark, cols)
 
 
 def cox_ph_check(
@@ -1839,9 +1898,10 @@ def _finegray_grid_rows_driver(leav: DataFrame):
     column arithmetic operand-for-operand."""
     import math
 
-    raw = leav.select("__x", "__t", "__r", "__d1", "__d2", "__c").take(
-        _GRID_DRIVER_MAX + 1)
-    if len(raw) > _GRID_DRIVER_MAX:
+    raw = collect_bounded(
+        leav.select("__x", "__t", "__r", "__d1", "__d2", "__c"),
+        _GRID_DRIVER_MAX)
+    if raw is None:
         return None
     rows = sorted(
         ((int(r[0]), r[1], int(r[2]), int(r[3]), int(r[4]), int(r[5]))
@@ -1921,6 +1981,13 @@ def _finegray_grid_rows_driver(leav: DataFrame):
     return grid, total_r, n_competing
 
 
+def _round_col(c, digits: int | None):
+    """Column twin of the driver paths' emission rounding:
+    ``round(x, digits) + 0.0``, or ``x`` unrounded when ``digits`` is
+    None (the boundary-margin audits)."""
+    return c if digits is None else F.round(c, digits) + 0.0
+
+
 def _finegray_counts(leav: DataFrame) -> DataFrame:
     """1-row (n_subjects, n_competing) from the leaver table — every
     subject leaves exactly once, so the leaver totals ARE the cohort."""
@@ -1942,8 +2009,6 @@ def finegray_score_from_leavers(
     driver-side in the pinned deterministic order
     (:func:`_finegray_grid_rows_driver`) and the row emits as literals;
     past the cap the distributed window pipeline below runs unchanged."""
-    if not leav.isStreaming:
-        leav = leav.localCheckpoint(eager=False)
     spark = leav.sparkSession
     data = None if leav.isStreaming else _finegray_grid_rows_driver(leav)
     if data is not None:
@@ -1963,14 +2028,15 @@ def finegray_score_from_leavers(
                 return float(x)
             return round(float(x), digits) + 0.0
 
-        return spark.range(1).select(
-            (F.lit(r6(u * u / v)) if v > 0
-             else F.lit(None).cast("double")).alias("chi2"),
-            F.lit(r6(u)).alias("u"),
-            F.lit(n_events).cast("long").alias("n_events"),
-            F.lit(n_competing).cast("long").alias("n_competing"),
-            F.lit(n_subjects).cast("long").alias("n_subjects"),
-        )
+        return _literal_row(spark, [
+            ("chi2", r6(u * u / v) if v > 0 else None),
+            ("u", r6(u)),
+            ("n_events", n_events),
+            ("n_competing", n_competing),
+            ("n_subjects", n_subjects),
+        ])
+    if not leav.isStreaming:
+        leav = leav.localCheckpoint(eager=False)
     per_t = _finegray_weighted_grid(leav)
     xbar = F.col("n1") / F.col("n")
     u_t = F.col("d1") - F.col("d") * xbar
@@ -1987,9 +2053,9 @@ def finegray_score_from_leavers(
     return agg.crossJoin(F.broadcast(_finegray_counts(leav))).select(
         F.when(
             F.col("__v") > 0,
-            F.round(F.col("__u") * F.col("__u") / F.col("__v"), 6) + 0.0,
+            _round_col(F.col("__u") * F.col("__u") / F.col("__v"), digits),
         ).alias("chi2"),
-        (F.round("__u", 6) + 0.0).alias("u"),
+        _round_col(F.col("__u"), digits).alias("u"),
         F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
         "n_competing", "n_subjects",
     )
@@ -2044,8 +2110,6 @@ def finegray_newton_from_leavers(
     the cap the distributed pipeline below runs unchanged."""
     import math
 
-    if not leav.isStreaming:
-        leav = leav.localCheckpoint(eager=False)
     spark = leav.sparkSession
     data = None if leav.isStreaming else _finegray_grid_rows_driver(leav)
     if data is not None:
@@ -2090,17 +2154,17 @@ def finegray_newton_from_leavers(
                 return float(x)
             return round(float(x), digits) + 0.0
 
-        null_d = F.lit(None).cast("double")
-        return spark.range(1).select(
-            (F.lit(r6(beta)) if ok else null_d).alias("beta"),
-            (F.lit(r6(math.exp(beta))) if ok else null_d).alias("hr"),
-            (F.lit(r6(1 / math.sqrt(i_fin))) if ok else null_d).alias("se"),
-            (F.lit(r6(beta * beta * i_fin)) if ok else null_d)
-            .alias("wald_chi2"),
-            F.lit(n_events).cast("long").alias("n_events"),
-            F.lit(n_competing).cast("long").alias("n_competing"),
-            F.lit(n_subjects).cast("long").alias("n_subjects"),
-        )
+        return _literal_row(spark, [
+            ("beta", r6(beta) if ok else None),
+            ("hr", r6(math.exp(beta)) if ok else None),
+            ("se", r6(1 / math.sqrt(i_fin)) if ok else None),
+            ("wald_chi2", r6(beta * beta * i_fin) if ok else None),
+            ("n_events", n_events),
+            ("n_competing", n_competing),
+            ("n_subjects", n_subjects),
+        ])
+    if not leav.isStreaming:
+        leav = leav.localCheckpoint(eager=False)
     grid = _finegray_weighted_grid(leav).localCheckpoint(eager=False)
     beta = _newton_beta(spark, grid, iterations)
     fin = grid.crossJoin(F.broadcast(beta))
@@ -2113,10 +2177,11 @@ def finegray_newton_from_leavers(
         F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
     return stats.crossJoin(F.broadcast(_finegray_counts(leav))).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
+        F.when(ok, _round_col(F.col("beta"), digits)).alias("beta"),
+        F.when(ok, _round_col(F.exp("beta"), digits)).alias("hr"),
+        F.when(ok, _round_col(1 / F.sqrt("__i"), digits)).alias("se"),
+        F.when(ok, _round_col(F.col("beta") * F.col("beta") * F.col("__i"),
+                              digits))
         .alias("wald_chi2"),
         F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
         "n_competing", "n_subjects",

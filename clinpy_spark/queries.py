@@ -50,6 +50,7 @@ from clinpy_spark.functions.vectors import cosine_similarity
 from clinpy_spark.operators.similarity import brute_force_topk, lsh_topk
 from clinpy_spark.operators.windows import sessionize, tumbling_counts
 from clinpy_spark.operators.multimodal import as_media, extract_features, frame_sample
+from clinpy_spark.session import session_catalog
 
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
@@ -76,16 +77,20 @@ _PUNCT_RE_SQL = "[.,;:!?''\"()\\[\\]{}-]"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh read of star table ``name`` through the session's catalog
+    over ``sf_dir`` (session.py): its schema is inferred once per table
+    version, so a warm build runs no Spark job."""
+    catalog = session_catalog(spark, sf_dir)
     if name == "events":
         # The events table is written with TIMESTAMP(NANOS), which the
         # Spark parquet reader rejects; read nanos as long and truncate
         # to microseconds (exactly what DuckDB's reader does).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = catalog.read(name)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return catalog.read(name)
 
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -8278,12 +8283,12 @@ FROM (SELECT *, i11 * i22 - i12 * i12 AS det,
 def surv_cox_multi_q(spark, sf):
     # Multi-covariate Cox MLE (operators/survival.py cox_newton_multi,
     # r11 verdict #4): the URGENT-vs-LOW hazard ratio ADJUSTED for a
-    # customer-parity confounder, jointly. Subjects collapse to the
-    # bounded (event-time x covariate-cell) grid via per-cell
-    # cumulative-leavers windows; each Newton step is one grid
-    # aggregate collected as a single bounded row plus a driver-side
-    # 2x2 solve. The oracle replays the identical recurrence with
-    # Cramer CTE updates over the same windowed grid.
+    # customer-parity confounder, jointly. Subjects collapse to
+    # per-(covariate-cell, time) leaver counts, collected once (bounded);
+    # the driver rebuilds the (event-time x cell) at-risk grid by
+    # integer prefix sums and runs each Newton step with a 2x2 Cramer
+    # solve. The oracle replays the identical recurrence with Cramer
+    # CTE updates over the same grid built with windows.
     from clinpy_spark.operators.survival import cox_newton_multi
 
     o = _t(spark, sf, "orders").filter(
@@ -8441,8 +8446,8 @@ def surv_cox_multi3_q(spark, sf):
     # d = 3 Cox MLE (r12 verdict #5): the URGENT-vs-LOW hazard ratio
     # adjusted for BOTH customer-parity bands jointly — the rung that
     # driver-proves the multi fitter beyond the d = 2 Cramer oracle.
-    # Same bounded (event-time x 12-cell) grid; each Newton step is one
-    # grid aggregate + the driver-side 3x3 Cramer solve whose operand
+    # Same bounded (event-time x 12-cell) grid; each Newton step is a
+    # driver-side grid reduction + 3x3 Cramer solve whose operand
     # order the oracle's cofactor CTEs replay token-for-token.
     from clinpy_spark.operators.survival import cox_newton_multi
 

@@ -3,8 +3,18 @@
 The reference opens one SQLite engine per project and reflects its schema
 once (assay_base.py:10-18). Here a "project" is a directory of Parquet
 tables; the catalog lazily registers each as a temp view and hands out
-DataFrames (schema comes free from the Parquet footer - no reflection
-round-trip, no double query execution like reference junction.py:59-61).
+DataFrames (no reflection round-trip, no double query execution like
+reference junction.py:59-61).
+
+Table resolution has one path. :meth:`ProjectCatalog.read` infers a
+table's schema from its Parquet footers once per table VERSION and every
+later read is ``spark.read.schema(s).parquet(path)``, which runs no Spark
+job. The version key is the table path plus the size and ``mtime_ns`` of
+every file under it, taken from filesystem metadata only, so a rewrite
+in place or an appended file is seen on the next read. The query
+registry reaches the same path through :func:`session_catalog` (one
+catalog per session and directory), assays through their project's
+catalog.
 """
 
 from __future__ import annotations
@@ -18,7 +28,8 @@ try:
 except ImportError:  # non-POSIX: cross-process locking degrades to in-process
     fcntl = None
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.types import StructType
 
 #: Tables of the driver's star schema (TESTDATA.md).
 STAR_TABLES = (
@@ -94,6 +105,32 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def collect_bounded(df: DataFrame, cap: int) -> list[Row] | None:
+    """``df``'s rows on the driver if it has at most ``cap`` of them,
+    else None: one action that brings at most ``cap + 1`` rows back, so
+    a data-sized result never reaches the driver. The guard of every
+    "collect if small, else stay distributed" decision."""
+    rows = df.take(cap + 1)
+    return rows if len(rows) <= cap else None
+
+
+def _files_version(path: str) -> tuple:
+    """A table's version: (relative path, size, mtime_ns) of every file
+    under ``path`` (or of ``path`` itself for a single-file table), from
+    filesystem metadata only. Empty when nothing is there."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for dp, dirs, fs in os.walk(path):
+        dirs.sort()
+        for f in sorted(fs):
+            fp = os.path.join(dp, f)
+            st = os.stat(fp)
+            out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
 
 
 def _parse_size_conf(conf: str) -> int:
@@ -185,15 +222,17 @@ class ProjectCatalog:
     """Lazy table access over a directory of Parquet tables.
 
     Analogue of the reference's schema reflection (assay_base.py:13-16,
-    ``Table(name, metadata, autoload=True)``): a table is resolved on
-    first touch and cached as a lazy DataFrame; nothing is scanned until
-    an action runs.
+    ``Table(name, metadata, autoload=True)``): a table's schema is
+    inferred on first touch of each table version and kept; nothing is
+    scanned until an action runs.
     """
 
     def __init__(self, spark: SparkSession, project_dir: str):
         self.spark = spark
         self.project_dir = project_dir
-        self._cache: dict[str, DataFrame] = {}
+        # path -> (version, schema); name -> (version, DataFrame)
+        self._schemas: dict[str, tuple[tuple, StructType]] = {}
+        self._tables: dict[str, tuple[tuple, DataFrame]] = {}
 
     # -- table statistics ---------------------------------------------------
     #
@@ -328,16 +367,38 @@ class ProjectCatalog:
         if self.spark.catalog.tableExists(qual):
             self.spark.sql(f"DROP TABLE IF EXISTS `{qual}`")
 
+    def _read(self, path: str, version: tuple) -> DataFrame:
+        hit = self._schemas.get(path)
+        if hit is not None and hit[0] == version:
+            return self.spark.read.schema(hit[1]).parquet(path)
+        df = self.spark.read.parquet(path)  # the one inference job per version
+        self._schemas[path] = (version, df.schema)
+        return df
+
+    def read(self, name: str) -> DataFrame:
+        """A NEW lazy DataFrame over the table's current files (distinct
+        attribute ids on every call, so two reads of one table self-join
+        cleanly). No Spark job once the version's schema is known."""
+        path = self.path(name)
+        return self._read(path, _files_version(path))
+
     def table(self, name: str) -> DataFrame:
         """Catalog-registered (bucketed) tables first, then parquet dirs —
-        bucket metadata only flows into plans via the catalog entry."""
-        if name not in self._cache:
+        bucket metadata only flows into plans via the catalog entry. The
+        same DataFrame comes back while the table's version holds; any
+        write, in this process or not, makes the next call resolve
+        again."""
+        path = self.path(name)
+        version = _files_version(path)
+        hit = self._tables.get(name)
+        if hit is None or hit[0] != version:
             qual = self._bucket_name(name)
             if self.spark.catalog.tableExists(qual):
-                self._cache[name] = self.spark.table(qual)
+                df = self.spark.table(qual)
             else:
-                self._cache[name] = self.spark.read.parquet(self.path(name))
-        return self._cache[name]
+                df = self._read(path, version)
+            hit = self._tables[name] = (version, df)
+        return hit[1]
 
     def __getattr__(self, name: str) -> DataFrame:
         if name.startswith("_"):
@@ -374,7 +435,6 @@ class ProjectCatalog:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name) if self.exists(name) else os.path.join(self.project_dir, name))
         self._drop_bucket_entry(name)
-        self._cache.pop(name, None)
         self._record_stats(name)
 
     def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024,
@@ -400,7 +460,7 @@ class ProjectCatalog:
                 for dp, _, fs in os.walk(path) for f in fs
             )
             n_files = max(1, -(-total // target_file_bytes))
-            df = self.spark.read.parquet(path)
+            df = self.read(name)
             if sort_within_by:
                 df = df.repartition(n_files).sortWithinPartitions(*sort_within_by)
             else:
@@ -409,7 +469,6 @@ class ProjectCatalog:
             df.write.mode("overwrite").parquet(staging)
             _atomic_swap(path, staging)
         self._drop_bucket_entry(name)
-        self._cache.pop(name, None)
         self._record_stats(name)
         return sum(
             1 for dp, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
@@ -443,7 +502,6 @@ class ProjectCatalog:
         with _table_lock(path):
             _atomic_swap(path, staging)
         self._drop_bucket_entry(name)
-        self._cache.pop(name, None)
         self._record_stats(name)
 
     def update_staged(self, name: str, transform) -> None:
@@ -465,12 +523,11 @@ class ProjectCatalog:
         """
         path = self.path(name)
         with _table_lock(path):
-            out = transform(self.spark.read.parquet(path))
+            out = transform(self.read(name))
             staging = self._staging_dir(path, "staged")
             out.write.mode("overwrite").parquet(staging)
             _atomic_swap(path, staging)
         self._drop_bucket_entry(name)
-        self._cache.pop(name, None)
         self._record_stats(name)
 
     def write_bucketed(
@@ -503,10 +560,20 @@ class ProjectCatalog:
         if sort_cols:
             w = w.sortBy(*sort_cols)
         w.option("path", os.path.join(self.project_dir, name)).saveAsTable(self._bucket_name(name))
-        self._cache.pop(name, None)
         self._record_stats(name)
+
+
+def session_catalog(spark: SparkSession, project_dir: str) -> ProjectCatalog:
+    """The catalog over ``project_dir`` shared by every caller on
+    ``spark``, so a table's schema is inferred once per session and
+    table version. It lives on the session object and ends with it."""
+    catalogs = spark.__dict__.setdefault("_clinpy_catalogs", {})
+    key = os.path.abspath(project_dir)
+    if key not in catalogs:
+        catalogs[key] = ProjectCatalog(spark, project_dir)
+    return catalogs[key]
 
 
 def load_star(spark: SparkSession, sf_dir: str) -> ProjectCatalog:
     """Catalog over one of the driver's testdata scale-factor dirs."""
-    return ProjectCatalog(spark, sf_dir)
+    return session_catalog(spark, sf_dir)

@@ -50,7 +50,6 @@ def stream_to_catalog(
         w = w.trigger(availableNow=True)
     elif trigger_interval:
         w = w.trigger(processingTime=trigger_interval)
-    catalog._cache.pop(name, None)
     return w.start()
 
 

@@ -6,12 +6,14 @@ build side has to be a constant-row subtree, so a rotted allowlist entry
 still fails."""
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.explain_audit import (  # noqa: E402
     EXPECTED_UNBOUNDED,

@@ -17,6 +17,12 @@
 - Divergent Newton steps (huge beta) emit NULL like the old
   inf -> NaN distributed plan instead of raising OverflowError
   (ADVICE r13).
+- The Cox-multi (cell x event-time) grid built on the driver from one
+  bounded leaver collect equals the Spark-built grid row for row, and a
+  leaver table under the cap whose grid is over it takes the
+  distributed fallback.
+- The Fine-Gray distributed fallback honours ``digits``; the
+  logistic driver fit is exact with trailing empty-feature rows.
 """
 
 import pytest
@@ -164,3 +170,134 @@ def test_newton_divergence_emits_null_not_overflow(spark):
         [Row(__t=1.0, n=10**12, n1=1, d=1, d1=1)])
     out = surv._newton_beta(spark, grid, 3).collect()
     assert len(out) == 1 and out[0]["beta"] is None
+
+
+def test_newton_beta_reduction_order_partition_invariant(spark):
+    # the binary-covariate driver loop sorts the grid by time before
+    # accumulating, so the unrounded beta does not depend on the grid's
+    # partition layout or row order
+    df = _cohort(spark, n=60)
+    grid_rows = surv._binary_event_grid(df, "t", "e", "x").collect()
+    base = None
+    for rows, parts in ((grid_rows, 1), (grid_rows[::-1], 3),
+                        (grid_rows[1::2] + grid_rows[::2], 7)):
+        grid = spark.createDataFrame(rows).repartition(parts)
+        beta = surv._newton_beta(spark, grid, 3).collect()[0]["beta"]
+        if base is None:
+            base = beta
+        else:
+            assert beta == base, parts
+
+
+def _leavers(df, x_cols):
+    xs = [f"__x{i}" for i in range(1, len(x_cols) + 1)]
+    return df.select(
+        F.col("t").alias("__t"), F.col("e").cast("int").alias("__e"),
+        *[F.col(c).cast("double").alias(x) for c, x in zip(x_cols, xs)],
+    ).groupBy(*xs, "__t").agg(
+        F.count(F.lit(1)).alias("__r"), F.sum("__e").alias("__d")), xs
+
+
+def _spark_grid_rows(leav, xs):
+    rows = surv._cox_grid_distributed(leav, xs).select(
+        "__t", "__n", "__d", *xs).collect()
+    return sorted(((r[0], float(r[1]), int(r[2]), *[float(v) for v in r[3:]])
+                   for r in rows), key=lambda row: (row[0],) + row[3:])
+
+
+def test_cox_multi_driver_grid_equals_spark_grid(spark, monkeypatch):
+    df = _cohort(spark)
+    x_cols = ["x", "x2", "x3"]
+    leav, xs = _leavers(df, x_cols)
+    spark_rows = _spark_grid_rows(leav, xs)
+    driver_rows = surv._cox_grid_rows_driver(
+        leav.select(*xs, "__t", "__r", "__d").collect(), len(xs))
+    assert driver_rows == spark_rows
+    assert all(type(a) is type(b) for ra, rb in zip(driver_rows, spark_rows)
+               for a, b in zip(ra, rb))
+
+    new = surv.cox_newton_multi(df, "t", "e", x_cols, iterations=4,
+                                digits=None).collect()
+    # the previous path: the Spark-built grid, collected and sorted
+    monkeypatch.setattr(surv, "_cox_grid_rows_driver",
+                        lambda raw, d: _spark_grid_rows(leav, xs))
+    old = surv.cox_newton_multi(df, "t", "e", x_cols, iterations=4,
+                                digits=None).collect()
+    assert [tuple(r) for r in new] == [tuple(r) for r in old]
+
+
+def test_cox_multi_grid_over_cap_takes_fallback(spark, monkeypatch):
+    df = _cohort(spark)
+    x_cols = ["x", "x2", "x3"]
+    leav, xs = _leavers(df, x_cols)
+    n_leavers = leav.count()
+    n_cells = leav.select(*xs).distinct().count()
+    n_times = leav.filter(F.col("__d") > 0).select("__t").distinct().count()
+    assert n_leavers < n_cells * n_times
+    fast = surv.cox_newton_multi(df, "t", "e", x_cols,
+                                 iterations=4).collect()
+
+    built = []
+    spark_grid = surv._cox_grid_distributed
+
+    def spy(leav_, xs_):
+        built.append(1)
+        return spark_grid(leav_, xs_)
+
+    monkeypatch.setattr(surv, "_cox_grid_distributed", spy)
+    monkeypatch.setattr(surv, "_GRID_DRIVER_MAX", n_leavers)
+    slow = surv.cox_newton_multi(df, "t", "e", x_cols,
+                                 iterations=4).collect()
+    assert built, "the fallback grid was not built"
+    assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
+
+
+def test_finegray_fallback_honours_digits(spark, monkeypatch):
+    rows = [Row(t=float(i % 13 + 1), st=(0, 1, 2, 1)[i % 4] if i % 7 else 1,
+                x=i % 2) for i in range(80)]
+    leav = surv.finegray_leavers(spark.createDataFrame(rows), "t", "st", "x")
+    fitters = (surv.finegray_score_from_leavers,
+               surv.finegray_newton_from_leavers)
+    driver = [f(leav, digits=None).collect()[0] for f in fitters]
+    monkeypatch.setattr(surv, "_GRID_DRIVER_MAX", 0)
+    for f, ref in zip(fitters, driver):
+        raw = f(leav, digits=None).collect()[0]
+        r3 = f(leav, digits=3).collect()[0]
+        for k in ref.asDict():
+            if isinstance(ref[k], float):
+                assert raw[k] == pytest.approx(ref[k], rel=1e-12, abs=1e-12), k
+                assert r3[k] == round(ref[k], 3), k
+            else:
+                assert raw[k] == ref[k] == r3[k], k
+        # unrounded on the fallback too, not silently rounded to 6
+        assert any(isinstance(v, float) and v != round(v, 6)
+                   for v in raw.asDict().values())
+
+
+def test_logistic_driver_fit_exact_with_trailing_empty_rows():
+    # rows with no features after the last non-empty row used to clamp
+    # that row's reduceat segment and drop its final feature term
+    import numpy as np
+
+    from clinpy_spark.operators.classify import _fit_logistic_driver
+
+    feats = [[(0, 1.0), (1, 2.0), (2, 4.0)], [(1, 0.5)], [(0, -1.0), (2, 3.0)],
+             [(0, 0.5), (1, 1.5), (2, -2.0)], [], []]
+    y = [1, 0, 1, 0, 1, 0]
+
+    def fit(order):
+        indptr, indices, values = [0], [], []
+        for i in order:
+            indices += [j for j, _ in feats[i]]
+            values += [v for _, v in feats[i]]
+            indptr.append(len(indices))
+        return _fit_logistic_driver(
+            np.asarray(indptr, dtype=np.int64),
+            np.asarray(indices, dtype=np.int64),
+            np.asarray(values, dtype=np.float64),
+            [y[i] for i in order], 3, 0.1, 50)
+
+    w_tail, b_tail = fit([0, 1, 2, 3, 4, 5])   # empty rows trailing
+    w_head, b_head = fit([4, 5, 0, 1, 2, 3])   # empty rows leading
+    assert np.allclose(w_tail, w_head, rtol=1e-9, atol=1e-12)
+    assert b_tail == pytest.approx(b_head, rel=1e-9, abs=1e-12)

@@ -15,9 +15,11 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

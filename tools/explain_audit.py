@@ -20,10 +20,12 @@ from __future__ import annotations
 
 import io
 import re
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from clinpy_spark import queries as Q  # noqa: E402
 from clinpy_spark.session import get_spark  # noqa: E402
@@ -514,7 +516,7 @@ def main() -> None:
     if only:
         print("(subset run: PLANS.md not rewritten)")
     else:
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
             f.write("\n".join(lines))
 
     for r in results:

@@ -24,7 +24,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -32,7 +33,7 @@ from clinpy_spark.queries import _t  # noqa: E402
 from clinpy_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/_scaledata/sf1"
+DST = os.path.join(ROOT, "_scaledata", "sf1")
 SHIFT = 1_000_000_000  # > any key at sf0.1
 
 #: table -> integer key columns shifted per copy.

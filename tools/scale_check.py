@@ -21,7 +21,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from clinpy_spark import queries as Q  # noqa: E402
@@ -90,7 +91,7 @@ def main() -> None:
             f"| {name} | " + " | ".join(f"{t:.3f}s" for t in ts) + f" | {alpha:.2f} |"
         )
     lines.append("")
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines))
 
     for alpha, name in sorted(worst, reverse=True):

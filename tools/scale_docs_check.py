@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -91,7 +92,7 @@ def main() -> None:
         lines.append(f"| {name} | {ts[0]:.2f}s | {ts[1]:.2f}s | {ts[1]/ts[0]:.1f}x |")
         print(lines[-1])
     lines.append("")
-    with open("/root/repo/SCALING_DOCS.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING_DOCS.md"), "w") as f:
         f.write("\n".join(lines))
     print("-> SCALING_DOCS.md")
 
