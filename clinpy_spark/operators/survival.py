@@ -26,6 +26,8 @@ no join wider than the per-time table.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -58,6 +60,28 @@ def _literal_row(spark, cols: list[tuple[str, object]]) -> DataFrame:
         else:
             exprs.append(f"CAST('{float(v)!r}' AS DOUBLE) AS `{name}`")
     return spark.range(1).selectExpr(*exprs)
+
+
+def _exp(v: float) -> float:
+    """``math.exp`` that overflows to inf like Spark's ``F.exp``, so a
+    divergent fit propagates inf -> NaN moments -> NULL emission
+    instead of raising on the driver."""
+    try:
+        return math.exp(v)
+    except OverflowError:
+        return math.inf
+
+
+def _round(x, digits: int | None):
+    """Driver-side emission rounding: ``round(x, digits) + 0.0`` (the
+    ``+ 0.0`` folds -0.0), or ``x`` unrounded when ``digits`` is None
+    (the boundary-margin audits)."""
+    return float(x) if digits is None else round(float(x), digits) + 0.0
+
+
+def _round_col(c, digits: int | None):
+    """Column twin of :func:`_round`."""
+    return c if digits is None else F.round(c, digits) + 0.0
 
 
 def _per_time(df: DataFrame, time_col: str, event_col: str,
@@ -909,9 +933,8 @@ def _binary_event_grid(
 ) -> DataFrame:
     """Per-event-time grid (__t, d, d1, n, n1) for a binary covariate:
     total/arm-1 events and at-risk counts, risk sets as total-minus-
-    prefix windows, lineage cut once (the grid feeds every Newton
-    step — without the cut the cohort groupBy+window replays per
-    step)."""
+    prefix windows. :func:`_fit_binary_cox` reads it once (one bounded
+    collect, or one checkpoint on its distributed fallback)."""
     base = df.select(
         F.col(time_col).alias("__t"),
         F.col(event_col).cast("int").alias("__e"),
@@ -934,86 +957,97 @@ def _binary_event_grid(
             - F.coalesce(F.sum("r1").over(w_prev), F.lit(0)))
         .filter(F.col("d") > 0)
         .select("__t", "d", "d1", "n", "n1")
-        .localCheckpoint(eager=False)
     )
 
 
-def _newton_beta(spark, grid: DataFrame, iterations: int) -> DataFrame:
+def _fit_binary_cox(grid, iterations: int):
     """``iterations`` Newton-Raphson steps on the Breslow partial
-    likelihood over a binary-covariate grid: 1-row (beta) DataFrame,
-    NULL on zero information at any step.
+    likelihood over a binary-covariate grid (t, n, n1, d, d1): a
+    DataFrame with columns (__t, n, n1, d, d1), or those rows already
+    on the driver. Returns (beta, info, n_events): ``info`` is the
+    information at the final beta, ``beta`` is None when any step's
+    information is not > 0 (empty or constant-covariate cohort,
+    separation, or a divergent step).
 
-    The steps iterate in the DRIVER over the collected grid (the
-    batch-4/5 factoring of the GLM family): the grid is BOUNDED by the
-    statistical design (per-event-time cells — the distributed work is
-    building it, which stays in Spark), while the previous chained
-    crossJoin(broadcast(beta)) recurrence paid one broadcast-exchange
-    job plus one grid aggregate per step — ~0.8s of pure scheduling per
-    fit at sf0.1 across the five cox/finegray callers. Arithmetic is
-    replicated per-row with the same expression shapes (s1 = n1*e^b;
-    s0 = (n-n1)+s1; u += d1 - d*frac; i += d*frac*(1-frac)) in time
-    order (below); emission stays behind the callers' round-6 as
-    before.
+    With x in {0,1} every risk-set exponential moment is a grid row:
+    s1 = n1 e^b, s0 = (n - n1) + s1, and one ``moments(beta)`` is
+    U = sum d1 - d s1/s0 and I = sum d (s1/s0)(1 - s1/s0), in the
+    operand association of the ``surv_cox_beta`` oracle CTEs. e^b is
+    taken once per step on the driver (:func:`_exp`: overflow -> inf
+    -> NaN moments -> NULL beta, as ``F.exp`` behaves).
 
-    The driver loop only engages when the grid is provably bounded
-    (r13 verdict #2): distinct event times come from the data, so past
-    ``_GRID_DRIVER_MAX`` rows the steps fall back to the pre-r13
-    distributed recurrence (one grid aggregate + broadcast crossJoin
-    per step) and nothing data-sized reaches the driver.
-
-    The collected rows are sorted by (time, n, n1, d, d1) before any
-    float touches them, so the accumulation order does not depend on
-    the partition layout (rows equal on every field contribute equal
-    terms, so their relative order cannot matter)."""
-    import math
-
-    rows = collect_bounded(grid.select("__t", "n", "n1", "d", "d1"),
-                           _GRID_DRIVER_MAX)
+    The moments have two backends. A grid of at most
+    ``_GRID_DRIVER_MAX`` rows is collected once and summed on the
+    driver, sorted by (t, n, n1, d, d1) with NULL times first, so the
+    float accumulation order does not depend on the partition layout.
+    Past the cap (distinct event times come from the data) the grid
+    is checkpointed once and each step is one grid aggregate
+    collected as one row, so nothing data-sized reaches the driver."""
+    cols = ("__t", "n", "n1", "d", "d1")
+    rows = (collect_bounded(grid.select(*cols), _GRID_DRIVER_MAX)
+            if isinstance(grid, DataFrame) else grid)
     if rows is None:
-        beta_df = spark.range(1).select(F.lit(0.0).alias("beta"))
-        for _ in range(iterations):
-            j = grid.crossJoin(F.broadcast(beta_df))
-            s1c = F.col("n1") * F.exp(F.col("beta"))
-            s0c = (F.col("n") - F.col("n1")) + s1c
-            fracc = s1c / s0c
-            u_t = F.col("d1") - F.col("d") * fracc
-            i_t = F.col("d") * fracc * (1 - fracc)
-            # agg (not groupBy) so an event-free cohort still yields
-            # the 1-row NULL result instead of vanishing
-            stp = j.agg(
-                F.max("beta").alias("beta"),
-                F.sum(u_t).alias("__u"), F.sum(i_t).alias("__i"))
-            beta_df = stp.select(
-                F.when(
-                    F.col("__i") > 0,
-                    F.col("beta") + F.col("__u") / F.col("__i"),
-                ).alias("beta")
-            )
-        return beta_df
-    # NULL times sort first, as in the grid's ascending window order
-    rows = sorted((tuple(r) for r in rows),
-                  key=lambda r: (r[0] is not None,) + r)
-    beta: float | None = 0.0
+        grid = grid.select(*cols).localCheckpoint(eager=False)
+
+        def moments(beta):
+            s1 = F.col("n1") * F.lit(_exp(beta))
+            s0 = (F.col("n") - F.col("n1")) + s1
+            frac = s1 / s0
+            u, i, n_ev = grid.agg(
+                F.sum(F.col("d1") - F.col("d") * s1 / s0),
+                F.sum(F.col("d") * frac * (1 - frac)),
+                F.sum("d")).collect()[0]
+            return u, i, n_ev or 0
+    else:
+        rows = sorted((tuple(r) for r in rows),
+                      key=lambda r: (r[0] is not None,) + r)
+        total_d = sum(r[3] for r in rows)
+
+        def moments(beta):
+            eb = _exp(beta)
+            u = 0.0
+            i = 0.0
+            for _t, n, n1, d, d1 in rows:
+                s1 = n1 * eb
+                s0 = (n - n1) + s1
+                frac = s1 / s0
+                u += d1 - d * s1 / s0
+                i += d * frac * (1 - frac)
+            return u, i, total_d
+
+    beta = 0.0
     for _ in range(iterations):
-        if beta is None:
-            break
-        u = 0.0
-        i = 0.0
-        try:
-            eb = math.exp(beta)
-        except OverflowError:
-            # mirror the distributed plan's F.exp: inf -> nan moments
-            # -> NULL beta, never a driver crash (divergent step on a
-            # separated / rare-exposure cohort)
-            eb = math.inf
-        for _t, n, n1, d, d1 in rows:
-            s1 = n1 * eb
-            frac = s1 / ((n - n1) + s1)
-            u += d1 - d * frac
-            i += d * frac * (1 - frac)
-        # empty grid: the old agg yielded NULL sums -> NULL beta
-        beta = beta + u / i if (rows and i > 0) else None
-    return _literal_row(spark, [("beta", beta)])
+        u, i, n_events = moments(beta)
+        # NULL (empty grid), NaN or zero information: no estimate
+        if i is None or not i > 0:
+            return None, None, n_events
+        beta = beta + u / i
+    _, info, n_events = moments(beta)
+    return beta, info, n_events
+
+
+def _binary_cox_cols(beta, info, n_events, digits: int | None = 6):
+    """Emitted (beta, hr, se, wald_chi2, n_events) of a
+    :func:`_fit_binary_cox` fit: se = 1/sqrt(I), wald_chi2 = b^2 I at
+    the final beta, all NULL unless beta exists and I > 0."""
+    ok = beta is not None and info is not None and info > 0
+    return [
+        ("beta", _round(beta, digits) if ok else None),
+        ("hr", _round(_exp(beta), digits) if ok else None),
+        ("se", _round(1 / math.sqrt(info), digits) if ok else None),
+        ("wald_chi2", _round(beta * beta * info, digits) if ok else None),
+        ("n_events", n_events),
+    ]
+
+
+def _binary_cox_row(grid, iterations: int, counts: DataFrame,
+                    digits: int | None = 6) -> DataFrame:
+    """The 1-row result of the binary-covariate Cox family: the fit
+    over ``grid`` emitted as literals, cross-joined with the caller's
+    1-row ``counts`` frame (n_subjects, n_strata, n_episodes, ...)."""
+    fit = _binary_cox_cols(*_fit_binary_cox(grid, iterations), digits)
+    return _literal_row(counts.sparkSession, fit).crossJoin(
+        F.broadcast(counts))
 
 
 def cox_newton(
@@ -1049,32 +1083,14 @@ def cox_newton(
 
     Scale shape: ONE groupBy to the per-event-time grid (carrying
     leavers' counts), risk sets as total-minus-prefix windows over the
-    bounded grid, then each Newton step is a grid-sized aggregate plus
-    a 1-row broadcast crossJoin carrying the scalar beta — the cohort
-    is scanned once, never self-joined, and the iteration loop moves
-    grid-sized data only.
+    bounded grid, then the Newton steps of :func:`_fit_binary_cox` —
+    on the driver over the collected grid, or one grid aggregate per
+    step past ``_GRID_DRIVER_MAX`` rows. The cohort is scanned once
+    for the grid and once for n_subjects, never self-joined.
     """
     grid = _binary_event_grid(df, time_col, event_col, x_col)
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     counts = df.groupBy().agg(F.count(F.lit(1)).alias("n_subjects"))
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(counts)).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        "n_subjects",
-    )
+    return _binary_cox_row(grid, iterations, counts)
 
 
 def cox_newton_multi(
@@ -1236,8 +1252,6 @@ def cox_newton_multi_from_leavers(
     as the KM twin. At-risk counts rebuild from the folded leavers
     (integer prefix sums per cell, :func:`_cox_grid_rows_driver`), never
     from subject history. The leaver table is keyed by (cell, time)."""
-    import math
-
     import numpy as np
 
     from clinpy_spark.functions.cramer import solve2, solve3, var3_diag
@@ -1268,14 +1282,6 @@ def cox_newton_multi_from_leavers(
         grid = _cox_grid_distributed(leav, xs)
         n_subjects = int(
             leav.agg(F.sum("__r").alias("n")).collect()[0].n or 0)
-
-    def _exp(v: float) -> float:
-        # mirror the distributed plan's F.exp: overflow propagates as
-        # inf -> nan moments -> NULL emission, never a driver crash
-        try:
-            return math.exp(v)
-        except OverflowError:
-            return math.inf
 
     def moments_driver(beta):
         if not g_rows:
@@ -1449,24 +1455,20 @@ def cox_newton_multi_from_leavers(
     # digit with probability ~1e-8 instead of round-6's ~1e-7 per
     # statistic per run — and the Cramer solve above already removed
     # the LAPACK-vs-oracle term entirely.
-    def r5(x):
-        if digits is None:  # unrounded, for boundary-margin audits
-            return float(x)
-        return round(float(x), digits) + 0.0
-
     score_norm = 0.0
     for v in u:
         score_norm = score_norm + v * v
     score_norm = math.sqrt(score_norm)
 
     ids = range(1, d + 1)
-    cols = [(f"beta{i}", r5(beta[i - 1])) for i in ids]
-    cols += [(f"hr{i}", r5(math.exp(beta[i - 1]))) for i in ids]
-    cols += [(f"se{i}", r5(math.sqrt(var[i - 1]))) for i in ids]
-    cols += [(f"wald_chi2_{i}", r5(beta[i - 1] * beta[i - 1] / var[i - 1]))
+    cols = [(f"beta{i}", _round(beta[i - 1], digits)) for i in ids]
+    cols += [(f"hr{i}", _round(math.exp(beta[i - 1]), digits)) for i in ids]
+    cols += [(f"se{i}", _round(math.sqrt(var[i - 1]), digits)) for i in ids]
+    cols += [(f"wald_chi2_{i}",
+              _round(beta[i - 1] * beta[i - 1] / var[i - 1], digits))
              for i in ids]
     cols += [("n_events", n_events), ("n_subjects", n_subjects),
-             ("score_norm", r5(score_norm))]
+             ("score_norm", _round(score_norm, digits))]
     return _literal_row(spark, cols)
 
 
@@ -1490,20 +1492,21 @@ def cox_ph_check(
     variance vanishes (constant residuals or < 2 event times).
 
     Scale shape: everything after the one cohort groupBy runs on the
-    bounded grid — the Newton loop moves grid-sized data, the residual
-    correlation is one aggregate of exact sums.
+    bounded grid — :func:`_fit_binary_cox` fits beta, which enters the
+    residuals as a literal; the grid is checkpointed once because the
+    residual correlation (one aggregate of exact sums) reads it again.
     """
-    grid = _binary_event_grid(df, time_col, event_col, x_col)
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    j = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
+    grid = _binary_event_grid(
+        df, time_col, event_col, x_col).localCheckpoint(eager=False)
+    beta, _, _ = _fit_binary_cox(grid, iterations)
+    b = F.lit(beta).cast("double")
+    s1 = F.col("n1") * F.exp(b)
     s0 = (F.col("n") - F.col("n1")) + s1
     r = F.col("d1") - F.col("d") * s1 / s0
     w_idx = Window.orderBy("__t")
-    rr = j.withColumn("__r", r).withColumn(
+    rr = grid.withColumn("__r", r).withColumn(
         "__k", F.row_number().over(w_idx).cast("double"))
     agg = rr.agg(
-        F.max("beta").alias("beta"),
         F.count(F.lit(1)).alias("n_times"),
         F.sum("d").alias("n_events"),
         F.sum("__k").alias("sk"),
@@ -1517,9 +1520,9 @@ def cox_ph_check(
     vk = nn * F.col("skk") - F.col("sk") * F.col("sk")
     vr = nn * F.col("srr") - F.col("sr") * F.col("sr")
     return agg.select(
-        F.when(F.col("beta").isNotNull(), F.round("beta", 6)).alias("beta"),
+        F.round(b, 6).alias("beta"),
         F.when(
-            F.col("beta").isNotNull() & (vk > 0) & (vr > 0),
+            b.isNotNull() & (vk > 0) & (vr > 0),
             F.round(cov / F.sqrt(vk * vr), 6),
         ).alias("rho_ph"),
         "n_times",
@@ -1680,7 +1683,7 @@ def cox_newton_stratified(
 
     The partial likelihood factorizes over strata, so the score and
     information are SUMS over the per-(stratum, event-time) grid of
-    the same hypergeometric-exponential terms — ``_newton_beta``
+    the same hypergeometric-exponential terms — :func:`_fit_binary_cox`
     iterates unchanged over the union grid; only the grid construction
     partitions its risk-set windows by stratum. Same oracle story as
     ``cox_newton``: chained CTEs with PARTITION BY stratum windows.
@@ -1714,31 +1717,11 @@ def cox_newton_stratified(
             - F.coalesce(F.sum("r1").over(w_prev), F.lit(0)))
         .filter(F.col("d") > 0)
         .select("__st", "__t", "d", "d1", "n", "n1")
-        .localCheckpoint(eager=False)
     )
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     counts = df.groupBy().agg(
         F.count(F.lit(1)).alias("n_subjects"),
         F.countDistinct(stratum_col).alias("n_strata"))
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(counts)).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        "n_subjects",
-        "n_strata",
-    )
+    return _binary_cox_row(grid, iterations, counts)
 
 
 def finegray_leavers(
@@ -1773,9 +1756,10 @@ def _finegray_weighted_grid(leav: DataFrame) -> DataFrame:
     """The bounded per-event-time WEIGHTED risk-set grid from the
     leaver table: (__t, d, d1, n, n1) with n / n1 the IPCW-weighted
     risk-set sums (total / arm-1) — deliberately the same column names
-    as ``_binary_event_grid`` so ``_newton_beta`` and ``cox_newton``'s
-    finishing expressions apply verbatim (weights do not depend on
-    beta, so the grid is fit-invariant and built ONCE).
+    as ``_binary_event_grid`` so :func:`_fit_binary_cox` fits it
+    verbatim (weights do not depend on beta, so the grid is
+    fit-invariant and built ONCE). ``leav`` is read several times, so
+    callers pass it checkpointed.
 
     w_i(t) = 1 while T_i >= t; a competing-event subject keeps
     w_i(t) = G(t-)/G(T_i) afterwards (G = censoring KM over ALL
@@ -1785,7 +1769,6 @@ def _finegray_weighted_grid(leav: DataFrame) -> DataFrame:
     and one prefix window per arm — the cohort is scanned once
     (building ``leav``), never self-joined against risk sets.
     """
-    leav = leav.localCheckpoint(eager=False)
     # overall per-time table: at-risk, censoring-KM G(t) and G(t-)
     tt = leav.groupBy("__t").agg(
         F.sum("__r").alias("r"), F.sum("__c").alias("c"),
@@ -1896,8 +1879,6 @@ def _finegray_grid_rows_driver(leav: DataFrame):
     ordered aggregates (sum(... ORDER BY x) per time, ORDER BY t
     across times). Expression shapes replicate the distributed
     column arithmetic operand-for-operand."""
-    import math
-
     raw = collect_bounded(
         leav.select("__x", "__t", "__r", "__d1", "__d2", "__c"),
         _GRID_DRIVER_MAX)
@@ -1981,20 +1962,13 @@ def _finegray_grid_rows_driver(leav: DataFrame):
     return grid, total_r, n_competing
 
 
-def _round_col(c, digits: int | None):
-    """Column twin of the driver paths' emission rounding:
-    ``round(x, digits) + 0.0``, or ``x`` unrounded when ``digits`` is
-    None (the boundary-margin audits)."""
-    return c if digits is None else F.round(c, digits) + 0.0
-
-
 def _finegray_counts(leav: DataFrame) -> DataFrame:
-    """1-row (n_subjects, n_competing) from the leaver table — every
+    """1-row (n_competing, n_subjects) from the leaver table — every
     subject leaves exactly once, so the leaver totals ARE the cohort."""
     return leav.groupBy().agg(
-        F.sum("__r").cast("long").alias("n_subjects"),
         F.coalesce(F.sum("__d2"), F.lit(0)).cast("long")
         .alias("n_competing"),
+        F.sum("__r").cast("long").alias("n_subjects"),
     )
 
 
@@ -2009,8 +1983,7 @@ def finegray_score_from_leavers(
     driver-side in the pinned deterministic order
     (:func:`_finegray_grid_rows_driver`) and the row emits as literals;
     past the cap the distributed window pipeline below runs unchanged."""
-    spark = leav.sparkSession
-    data = None if leav.isStreaming else _finegray_grid_rows_driver(leav)
+    data = _finegray_grid_rows_driver(leav)
     if data is not None:
         grid, n_subjects, n_competing = data
         u = 0.0
@@ -2022,21 +1995,14 @@ def finegray_score_from_leavers(
             v += (d * (n - d) / (n - 1) * (xbar - xbar * xbar)
                   if n > 1 else 0.0)
             n_events += d
-
-        def r6(x):
-            if digits is None:
-                return float(x)
-            return round(float(x), digits) + 0.0
-
-        return _literal_row(spark, [
-            ("chi2", r6(u * u / v) if v > 0 else None),
-            ("u", r6(u)),
+        return _literal_row(leav.sparkSession, [
+            ("chi2", _round(u * u / v, digits) if v > 0 else None),
+            ("u", _round(u, digits)),
             ("n_events", n_events),
             ("n_competing", n_competing),
             ("n_subjects", n_subjects),
         ])
-    if not leav.isStreaming:
-        leav = leav.localCheckpoint(eager=False)
+    leav = leav.localCheckpoint(eager=False)
     per_t = _finegray_weighted_grid(leav)
     xbar = F.col("n1") / F.col("n")
     u_t = F.col("d1") - F.col("d") * xbar
@@ -2102,90 +2068,22 @@ def finegray_newton_from_leavers(
     """:func:`finegray_newton` from the folded leaver table — the
     streaming read path.
 
-    When the leaver table is bounded the weighted grid, the Newton
-    steps, AND the finishing information sum all run driver-side in
-    the pinned deterministic order (:func:`_finegray_grid_rows_driver`;
-    the step arithmetic replicates :func:`_newton_beta`'s per-row
-    shapes operand-for-operand) and the row emits as literals; past
-    the cap the distributed pipeline below runs unchanged."""
-    import math
-
-    spark = leav.sparkSession
-    data = None if leav.isStreaming else _finegray_grid_rows_driver(leav)
+    When the leaver table is bounded the weighted grid is built
+    driver-side in the pinned deterministic order
+    (:func:`_finegray_grid_rows_driver`), :func:`_fit_binary_cox` fits
+    those rows on the driver, and the row emits as literals; past the
+    cap the grid is built by the distributed window pipeline and
+    handed to the same fitter."""
+    data = _finegray_grid_rows_driver(leav)
     if data is not None:
         g_rows, n_subjects, n_competing = data
-        beta: float | None = 0.0
-        for _ in range(iterations):
-            if beta is None:
-                break
-            u = 0.0
-            i = 0.0
-            try:
-                eb = math.exp(beta)
-            except OverflowError:
-                eb = math.inf
-            for _t, n, n1, d, _d1x in g_rows:
-                s1v = n1 * eb
-                s0v = (n - n1) + s1v
-                frac = s1v / s0v
-                # operand association matches the oracle CTE text:
-                # u term is (d * s1e) / s0e, i term is (d*frac)*(1-frac)
-                u += _d1x - d * s1v / s0v
-                i += d * frac * (1 - frac)
-            beta = beta + u / i if (g_rows and i > 0) else None
-        # final information at beta-hat (the emitted se/wald inputs)
-        i_fin = 0.0
-        n_events = 0
-        if beta is not None:
-            try:
-                eb = math.exp(beta)
-            except OverflowError:
-                eb = math.inf
-            for _t, n, n1, d, _d1x in g_rows:
-                s1v = n1 * eb
-                frac = s1v / ((n - n1) + s1v)
-                i_fin += d * frac * (1 - frac)
-        for row in g_rows:
-            n_events += row[3]
-        ok = beta is not None and i_fin > 0
-
-        def r6(x):
-            if digits is None:
-                return float(x)
-            return round(float(x), digits) + 0.0
-
-        return _literal_row(spark, [
-            ("beta", r6(beta) if ok else None),
-            ("hr", r6(math.exp(beta)) if ok else None),
-            ("se", r6(1 / math.sqrt(i_fin)) if ok else None),
-            ("wald_chi2", r6(beta * beta * i_fin) if ok else None),
-            ("n_events", n_events),
-            ("n_competing", n_competing),
-            ("n_subjects", n_subjects),
-        ])
-    if not leav.isStreaming:
-        leav = leav.localCheckpoint(eager=False)
-    grid = _finegray_weighted_grid(leav).localCheckpoint(eager=False)
-    beta = _newton_beta(spark, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(_finegray_counts(leav))).select(
-        F.when(ok, _round_col(F.col("beta"), digits)).alias("beta"),
-        F.when(ok, _round_col(F.exp("beta"), digits)).alias("hr"),
-        F.when(ok, _round_col(1 / F.sqrt("__i"), digits)).alias("se"),
-        F.when(ok, _round_col(F.col("beta") * F.col("beta") * F.col("__i"),
-                              digits))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
-        "n_competing", "n_subjects",
-    )
+        fit = _fit_binary_cox(g_rows, iterations)
+        return _literal_row(leav.sparkSession, _binary_cox_cols(
+            *fit, digits) + [("n_competing", n_competing),
+                             ("n_subjects", n_subjects)])
+    leav = leav.localCheckpoint(eager=False)
+    return _binary_cox_row(_finegray_weighted_grid(leav), iterations,
+                           _finegray_counts(leav), digits)
 
 
 def finegray_newton(
@@ -2204,8 +2102,8 @@ def finegray_newton(
     The IPCW weights do not depend on beta, so the weighted risk-set
     grid (``_finegray_weighted_grid``) is built ONCE and every Newton
     step is the SAME bounded-grid recurrence ``cox_newton`` unrolls —
-    s1 = n1 e^b, s0 = (n - n1) + n1 e^b over the weighted sums —
-    reusing ``_newton_beta`` verbatim. With no competing events the
+    s1 = n1 e^b, s0 = (n - n1) + n1 e^b over the weighted sums — by
+    the shared :func:`_fit_binary_cox`. With no competing events the
     weighted sums ARE the integer risk sets and the fit equals
     ``cox_newton`` bit-exactly (property test). The recurrence is a
     closed deterministic function of the grid; the
@@ -2528,7 +2426,8 @@ def _binary_event_grid_tv(
     flow rows, and the at-risk counts are one exclusive running sum —
     an arrival AT t is not yet at risk (start < t strict) and a
     departure AT t still is (stop >= t), exactly the probe ordering.
-    Lineage cut once (the grid feeds every Newton step)."""
+    Not checkpointed: :func:`_fit_binary_cox` and :func:`mcf_curve`
+    each read it once."""
     ep = (
         df.select(
             F.col(start_col).cast("double").alias("__a"),
@@ -2564,7 +2463,6 @@ def _binary_event_grid_tv(
         .withColumn("n1", F.coalesce(F.sum("dn1").over(w_prev), F.lit(0)))
         .filter(F.col("is_real") == 0)
         .select("__t", "d", "d1", "n", "n1")
-        .localCheckpoint(eager=False)
     )
 
 
@@ -2595,35 +2493,16 @@ def cox_newton_tv(
     Scale shape: two groupBys to grid-sized flow/event tables, one
     exclusive running window over the bounded pooled time grid
     (:func:`_binary_event_grid_tv`), then the shared
-    :func:`_newton_beta` loop — per step a grid-sized aggregate plus a
-    1-row broadcast beta. The episode table is scanned a bounded
-    number of times and never self-joined.
+    :func:`_fit_binary_cox` steps. The episode table is scanned a
+    bounded number of times and never self-joined.
     """
     grid = _binary_event_grid_tv(df, start_col, stop_col, event_col, x_col)
-    beta = _newton_beta(df.sparkSession, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     counts = (
         df.filter(F.col(stop_col).cast("double")
                   > F.col(start_col).cast("double"))
         .groupBy().agg(F.count(F.lit(1)).alias("n_episodes"))
     )
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(counts)).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        "n_episodes",
-    )
+    return _binary_cox_row(grid, iterations, counts)
 
 
 def km_weighted(

@@ -11904,7 +11904,7 @@ def surv_cox_strat_q(spark, sf):
     # the URGENT-vs-LOW hazard ratio with each customer band keeping
     # its own baseline hazard — the Cox twin of surv_logrank_strat.
     # The partial likelihood factorizes over strata, so the SAME
-    # _newton_beta iterates over the per-(stratum, time) grid; the
+    # _fit_binary_cox iterates over the per-(stratum, time) grid; the
     # oracle replays 3 chained Newton CTEs with stratum-partitioned
     # risk-set windows.
     from clinpy_spark.operators.survival import cox_newton_stratified

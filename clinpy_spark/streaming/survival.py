@@ -304,10 +304,11 @@ def finalize_cox_tv(partials: DataFrame, iterations: int = 3) -> DataFrame:
     """Time-varying Cox MLE over the maintained per-time partial table
     — identical to the batch ``cox_newton_tv`` over the same episodes
     (twin test): risk sets are the strict prefix sums of the folded
-    net flows, then the shared Newton loop and emission."""
+    net flows, then the shared binary-covariate fit and emission
+    (:func:`clinpy_spark.operators.survival._binary_cox_row`)."""
     from pyspark.sql.window import Window
 
-    from clinpy_spark.operators.survival import _newton_beta
+    from clinpy_spark.operators.survival import _binary_cox_row
 
     w_prev = Window.orderBy("__t").rowsBetween(
         Window.unboundedPreceding, -1)
@@ -318,29 +319,10 @@ def finalize_cox_tv(partials: DataFrame, iterations: int = 3) -> DataFrame:
             "n1", F.coalesce(F.sum("fn1").over(w_prev), F.lit(0)))
         .filter(F.col("d") > 0)
         .select("__t", "d", "d1", "n", "n1")
-        .localCheckpoint(eager=False)
     )
-    beta = _newton_beta(partials.sparkSession, grid, iterations)
-    fin = grid.crossJoin(F.broadcast(beta))
-    s1 = F.col("n1") * F.exp(F.col("beta"))
-    s0 = (F.col("n") - F.col("n1")) + s1
-    frac = s1 / s0
-    i_t = F.col("d") * frac * (1 - frac)
-    stats = fin.agg(
-        F.max("beta").alias("beta"),
-        F.sum(i_t).alias("__i"), F.sum("d").alias("n_events"))
     counts = partials.groupBy().agg(
         F.coalesce(F.sum("eps"), F.lit(0)).alias("n_episodes"))
-    ok = F.col("beta").isNotNull() & (F.col("__i") > 0)
-    return stats.crossJoin(F.broadcast(counts)).select(
-        F.when(ok, F.round("beta", 6)).alias("beta"),
-        F.when(ok, F.round(F.exp("beta"), 6)).alias("hr"),
-        F.when(ok, F.round(1 / F.sqrt("__i"), 6)).alias("se"),
-        F.when(ok, F.round(F.col("beta") * F.col("beta") * F.col("__i"), 6))
-        .alias("wald_chi2"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        "n_episodes",
-    )
+    return _binary_cox_row(grid, iterations, counts)
 
 
 def finalize_mcf(partials: DataFrame) -> DataFrame:

@@ -16,7 +16,10 @@
   is exactly what flipped surv_cox_multi's driver record).
 - Divergent Newton steps (huge beta) emit NULL like the old
   inf -> NaN distributed plan instead of raising OverflowError
-  (ADVICE r13).
+  (ADVICE r13), on both moments backends of the binary-covariate
+  fitter.
+- The binary-covariate Cox family (cox_newton, stratified, time-
+  varying, Fine-Gray) pins no RDD on its driver path.
 - The Cox-multi (cell x event-time) grid built on the driver from one
   bounded leaver collect equals the Spark-built grid row for row, and a
   leaver table under the cap whose grid is over it takes the
@@ -90,14 +93,42 @@ def _cohort(spark, n=40):
     return spark.createDataFrame(rows)
 
 
-def test_newton_beta_fallback_matches_driver(spark, monkeypatch):
-    from clinpy_spark.operators.survival import cox_newton
+def _binary_family(df):
+    # the four binary-covariate fits over one cohort: (t, e, x) plus a
+    # 3-level stratum, one (0, t] episode per subject, and a status with
+    # the x3 == 2 events competing
+    ep = df.withColumn("a", F.lit(0.0))
+    fg = df.withColumn(
+        "st", F.when(F.col("e") == 0, 0)
+        .when(F.col("x3") == 2.0, 2).otherwise(1))
+    return {
+        "cox_newton": lambda: surv.cox_newton(df, "t", "e", "x"),
+        "cox_newton_stratified": lambda: surv.cox_newton_stratified(
+            df, "t", "e", "x", "x3"),
+        "cox_newton_tv": lambda: surv.cox_newton_tv(ep, "a", "t", "e", "x"),
+        "finegray_newton": lambda: surv.finegray_newton(fg, "t", "st", "x"),
+    }
 
-    df = _cohort(spark)
-    fast = cox_newton(df, "t", "e", "x", iterations=3).collect()
+
+def test_newton_beta_fallback_matches_driver(spark, monkeypatch):
+    # every binary-covariate fit, with the grid on the driver and with
+    # every grid over the cap (distributed moments)
+    family = _binary_family(_cohort(spark))
+    fast = {name: build().collect() for name, build in family.items()}
     monkeypatch.setattr(surv, "_GRID_DRIVER_MAX", 0)
-    slow = cox_newton(df, "t", "e", "x", iterations=3).collect()
-    assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
+    for name, build in family.items():
+        slow = build().collect()
+        assert fast[name][0]["beta"] is not None, name
+        assert [tuple(r) for r in fast[name]] == [tuple(r) for r in slow], name
+
+
+def test_binary_family_driver_path_pins_no_rdd(spark):
+    jsc = spark.sparkContext._jsc
+    for name, build in _binary_family(_cohort(spark)).items():
+        pinned = jsc.getPersistentRDDs().size()
+        out = build().collect()
+        assert out[0]["beta"] is not None, name
+        assert jsc.getPersistentRDDs().size() == pinned, name
 
 
 def test_cox_multi_fallback_matches_driver(spark, monkeypatch):
@@ -162,19 +193,25 @@ def test_py_shingle_set_matches_jvm_shingles(spark):
             assert py_shingle_set(t, n) == jvm[i], (n, i, t)
 
 
-def test_newton_divergence_emits_null_not_overflow(spark):
+def test_newton_divergence_emits_null_not_overflow(spark, monkeypatch):
     # a grid whose first Newton step is ~1e12 pushes exp(beta) past the
     # float range on step 2: the old distributed plan propagated
-    # inf -> NaN -> NULL; the driver loop must do the same, not raise
+    # inf -> NaN -> NULL; both moments backends (driver rows, then the
+    # grid aggregate past the cap) must do the same, not raise
     grid = spark.createDataFrame(
         [Row(__t=1.0, n=10**12, n1=1, d=1, d1=1)])
-    out = surv._newton_beta(spark, grid, 3).collect()
-    assert len(out) == 1 and out[0]["beta"] is None
+    for cap in (surv._GRID_DRIVER_MAX, 0):
+        monkeypatch.setattr(surv, "_GRID_DRIVER_MAX", cap)
+        beta, info, n_events = surv._fit_binary_cox(grid, 3)
+        assert beta is None and info is None and n_events == 1, cap
+        cols = dict(surv._binary_cox_cols(beta, info, n_events))
+        assert cols == {"beta": None, "hr": None, "se": None,
+                        "wald_chi2": None, "n_events": 1}, cap
 
 
 def test_newton_beta_reduction_order_partition_invariant(spark):
     # the binary-covariate driver loop sorts the grid by time before
-    # accumulating, so the unrounded beta does not depend on the grid's
+    # accumulating, so the unrounded fit does not depend on the grid's
     # partition layout or row order
     df = _cohort(spark, n=60)
     grid_rows = surv._binary_event_grid(df, "t", "e", "x").collect()
@@ -182,11 +219,12 @@ def test_newton_beta_reduction_order_partition_invariant(spark):
     for rows, parts in ((grid_rows, 1), (grid_rows[::-1], 3),
                         (grid_rows[1::2] + grid_rows[::2], 7)):
         grid = spark.createDataFrame(rows).repartition(parts)
-        beta = surv._newton_beta(spark, grid, 3).collect()[0]["beta"]
+        fit = surv._fit_binary_cox(grid, 3)
         if base is None:
-            base = beta
+            base = fit
+            assert fit[0] is not None
         else:
-            assert beta == base, parts
+            assert fit == base, parts
 
 
 def _leavers(df, x_cols):

@@ -7,7 +7,8 @@ OPTIMIZATION_r14.md), this compares the UNROUNDED Spark emissions
 every SF — the proof that the two engines' float streams agree far
 inside the rounding contract (cox multi: exactly; finegray: to the
 irreducible Spark-sequential vs DuckDB-segment-tree window-sum
-association, ~1e-13 relative).
+association, ~1e-13 relative; binary cox: to the oracle's unordered
+sums, same tolerance as finegray).
 
 Usage:
     python tools/audit_float_streams.py [sf ...]   # default: all three
@@ -16,6 +17,7 @@ Usage:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -64,8 +66,41 @@ def _obs_fg(spark, sf_dir):
         .alias("x"))
 
 
+_ROUND = re.compile(r"\bround\(")
+
+
+def _strip_round(sql: str, digits: int) -> str:
+    """``sql`` with every ``round(<expr>, digits)`` call replaced by
+    ``(<expr>)``, nested calls included. Each call's extent is found by
+    a paren-balanced scan and only its last top-level argument is
+    checked, so any other ``, digits)`` (``substr(x, 1, 6)``) is kept.
+    Parentheses inside string literals are not special-cased."""
+    out, i = [], 0
+    while m := _ROUND.search(sql, i):
+        j = m.end()  # just past "round("
+        depth, k, comma = 1, j, -1
+        while depth:
+            c = sql[k]
+            if c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+            elif c == "," and depth == 1:
+                comma = k
+            k += 1
+        # sql[k - 1] is the call's closing paren
+        if comma >= 0 and sql[comma + 1:k - 1].strip() == str(digits):
+            out.append(sql[i:m.start()] + "("
+                       + _strip_round(sql[j:comma], digits) + ")")
+        else:
+            out.append(sql[i:j] + _strip_round(sql[j:k - 1], digits) + ")")
+        i = k
+    out.append(sql[i:])
+    return "".join(out)
+
+
 def _duck(sf_dir, sql, digits):
-    sql = sql.replace("round(", "(").replace(f", {digits})", ")")
+    sql = _strip_round(sql, digits)
     con = duckdb.connect()
     for t in STAR_TABLES:
         con.execute(
@@ -76,6 +111,7 @@ def _duck(sf_dir, sql, digits):
 
 def main() -> int:
     from clinpy_spark.operators.survival import (
+        _binary_cox_cols, _binary_event_grid, _fit_binary_cox, _literal_row,
         cox_newton_multi, finegray_leavers, finegray_newton_from_leavers,
         finegray_score_from_leavers)
     from clinpy_spark.queries import (
@@ -88,7 +124,16 @@ def main() -> int:
     for sf in sfs:
         sf_dir = f"/root/testdata/{sf}"
         leav = finegray_leavers(_obs_fg(spark, sf_dir), "t", "st", "x")
+        # cox_newton's fit and emission with digits=None (n_subjects is
+        # the cohort count it cross-joins)
+        obs = _obs_cox(spark, sf_dir, False)
+        fit = _fit_binary_cox(
+            _binary_event_grid(obs, "duration", "evt", "x1"), 3)
+        cox_beta = _literal_row(spark, _binary_cox_cols(*fit, digits=None)
+                                + [("n_subjects", obs.count())])
         cases = [
+            ("surv_cox_beta", cox_beta, Q._ORACLE["surv_cox_beta"], 6,
+             1e-11),
             ("surv_cox_multi",
              cox_newton_multi(_obs_cox(spark, sf_dir, False), "duration",
                               "evt", ["x1", "x2"], 4, digits=None),

@@ -81,8 +81,8 @@ EXPECTED_UNBOUNDED = {
                             # bounded side is inlined literals, proven
                             # constant-row by the shape gate) plus the
                             # 1-row counts broadcast
-    "surv_finegray_beta",  # same literal cell spine + the 1-row Newton
-                           # beta broadcast cox_newton's loop carries
+    "surv_finegray_beta",  # same literal cell spine (distributed grid
+                           # only) + the 1-row literal fit x counts
     "dx_fleiss_kappa",  # crossJoin vs the ONE-ROW category-moment agg
                         # (p_e / p_j^3 sums) — linear in items
     "dx_kendall_tau",  # inequality join of the bounded joint grid vs
@@ -156,12 +156,10 @@ EXPECTED_UNBOUNDED = {
     "surv_logrank_gehan",  # same logrank_weighted shape under the
                            # n(t) Gehan weighting — same 1-row cohort
                            # totals crossJoin
-    "surv_cox_beta",  # each Newton step crossJoins the bounded grid vs
-                      # the 1-row scalar-beta aggregate, plus the 1-row
+    "surv_cox_beta",  # the 1-row literal fit crossJoins the 1-row
                       # n_subjects count (same shape as surv_cox_score)
-    "surv_cox_tv",  # same _newton_beta shape over the counting-process
-                    # flow grid: bounded-grid crossJoins vs the 1-row
-                    # beta and n_episodes aggregates
+    "surv_cox_tv",  # the 1-row literal fit crossJoins the 1-row
+                    # n_episodes count
     "gx_king_kinship",  # the CONSTANT 200-row broadcast variant-range
                         # grid expansion (same shape as gx_ld_r2); the
                         # kinship pair join itself is a variant equi-join
@@ -184,9 +182,6 @@ EXPECTED_UNBOUNDED = {
                          # set (same declared shape as sim_topk_ivf's
                          # constant-side cross join; corpus streams
                          # linearly, 24 bytes/vector)
-    "surv_ph_check",  # Newton steps crossJoin the bounded grid vs the
-                      # 1-row scalar-beta aggregate (same shape as
-                      # surv_cox_beta)
     "text_textrank",  # crossJoin vs the 1-row node-count broadcast in
                       # every unrolled power step (pagerank shape)
     "e_seasonal_decompose",  # crossJoin vs the 1-row phase-mean
@@ -221,9 +216,9 @@ EXPECTED_UNBOUNDED = {
                          # offset grid (dx_poisson shape)
     "curate_dsir_head",  # crossJoin vs the 1-row bucket-total aggregate
                          # (text_bm25 corpus-constants shape)
-    "surv_cox_strat",  # Newton steps crossJoin the bounded stratum-time
-                       # grid vs the 1-row scalar-beta aggregate
-                       # (surv_cox_beta shape)
+    "surv_cox_strat",  # the 1-row literal fit crossJoins the 1-row
+                       # (n_subjects, n_strata) count (surv_cox_beta
+                       # shape)
     "gx_sfs",  # the CONSTANT 200-row broadcast variant-range grid
                # expansion + 1-row histogram-total crossJoin
     "e_pacf",  # same constant-side crossJoins as e_acf (1-row series
