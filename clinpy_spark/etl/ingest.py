@@ -38,6 +38,42 @@ def _union_per_sample(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
+def _write_new(
+    catalog: ProjectCatalog,
+    df: DataFrame,
+    table: str,
+    key: list[str],
+    incremental: bool,
+    *,
+    sort_cols: list[str] | None = None,
+    partition_by: list[str] | None = None,
+    bucket_col: str | None = None,
+    buckets: int | None = None,
+) -> None:
+    """Write ``df`` as ``table``. An incremental run against an existing
+    table first drops the rows whose ``key`` is already loaded (the
+    reference's primary-key guards as anti-joins, J6) and appends the
+    rest; otherwise the table is overwritten. ``buckets`` hash-buckets
+    the table on ``bucket_col``, sorted by ``sort_cols`` or else by the
+    bucket column; unbucketed tables are sorted within partitions by
+    ``sort_cols`` when given."""
+    mode = "overwrite"
+    if incremental and catalog.exists(table):
+        # Materialize before the append: the anti-join reads the same
+        # directory the write targets.
+        df = df.join(catalog.table(table).select(*key), key,
+                     "left_anti").localCheckpoint(eager=True)
+        mode = "append"
+    if buckets:
+        catalog.write_bucketed(df, table, [bucket_col], buckets,
+                               sort_cols=sort_cols or [bucket_col],
+                               mode=mode, partition_by=partition_by)
+    else:
+        if sort_cols:
+            df = df.sortWithinPartitions(*sort_cols)
+        catalog.write(df, table, mode=mode, partition_by=partition_by)
+
+
 def load_samples(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
     """Sample-metadata TSV -> samples table (create_project.py:50-66:
     lowercase headers, mandatory sample_id/cohort, projection)."""
@@ -102,40 +138,22 @@ def ingest_junctions(
         .withColumn("id", junction_id())                      # A12: no resolution join
         .select("id", *natural)
     )
-    if incremental and catalog.exists(junc_t):
-        existing = catalog.table(junc_t)
-        # Materialize before the append: the anti-join reads the same
-        # directory the write targets.
-        master_new = master_new.join(existing, natural, "left_anti").localCheckpoint(eager=True)  # J6
-        mode = "append"
-    else:
-        mode = "overwrite"
     # Physical layout (SURVEY §1.5: partitioning replaces the reference's
     # secondary indexes, rna_tables.py:28-29): directory-partition by chrom
     # so chrom-filtered queries prune whole directories, and sort each
     # partition by start so parquet row-group min/max stats prune within.
-    if bucket_by_fk:
-        catalog.write_bucketed(master_new, junc_t, ["id"], bucket_by_fk,
-                               sort_cols=["start"], mode=mode, partition_by=["chrom"])
-    else:
-        catalog.write(master_new.sortWithinPartitions("start"), junc_t, mode=mode,
-                      partition_by=["chrom"])
+    _write_new(catalog, master_new, junc_t, natural, incremental,
+               sort_cols=["start"], partition_by=["chrom"],
+               bucket_col="id", buckets=bucket_by_fk)
 
     bridge = per_sample.select(
         "samplename", junction_id().alias("junction"), "uniq_map", "multi_map"
     )
-    if incremental and catalog.exists(bridge_t):
-        # Composite-PK guard (rna_tables.py:26-31): already-loaded
-        # (samplename, junction) pairs are skipped, not doubled — a
-        # re-ingested sample contributes only its genuinely new rows.
-        loaded = catalog.table(bridge_t).select("samplename", "junction")
-        bridge = bridge.join(loaded, ["samplename", "junction"], "left_anti").localCheckpoint(eager=True)
-    bridge_mode = "append" if incremental else "overwrite"
-    if bucket_by_fk:
-        catalog.write_bucketed(bridge, bridge_t, ["junction"], bucket_by_fk,
-                               sort_cols=["junction"], mode=bridge_mode)
-    else:
-        catalog.write(bridge, bridge_t, mode=bridge_mode)
+    # Composite-PK guard (rna_tables.py:26-31): already-loaded
+    # (samplename, junction) pairs are skipped, not doubled — a
+    # re-ingested sample contributes only its genuinely new rows.
+    _write_new(catalog, bridge, bridge_t, ["samplename", "junction"],
+               incremental, bucket_col="junction", buckets=bucket_by_fk)
 
 
 def reconcile_fields(per_file: list[list[str]], not_same: str = "error") -> list[str]:
@@ -243,39 +261,22 @@ def ingest_variants(
         .withColumn("variant_id", variant_id())
         .select("variant_id", "chrom", "pos", "id", "ref", "alt")
     )
-    if incremental and catalog.exists(var_t):
-        master_new = master_new.join(
-            catalog.table(var_t), natural, "left_anti"
-        ).localCheckpoint(eager=True)
-        mode = "append"
-    else:
-        mode = "overwrite"
     # Same layout story as junctions: chrom directory partitions (replaces
     # the chrom/pos indexes of snp_tables.py:8-9,17-18) + pos-sorted row
     # groups for min/max pruning on region queries (P6).
-    if bucket_by_fk:
-        catalog.write_bucketed(master_new, var_t, ["variant_id"], bucket_by_fk,
-                               sort_cols=["pos"], mode=mode, partition_by=["chrom"])
-    else:
-        catalog.write(master_new.sortWithinPartitions("pos"), var_t, mode=mode,
-                      partition_by=["chrom"])
+    _write_new(catalog, master_new, var_t, natural, incremental,
+               sort_cols=["pos"], partition_by=["chrom"],
+               bucket_col="variant_id", buckets=bucket_by_fk)
 
     with_id = parsed.withColumn("variant_id", variant_id())
     gt_cols = ["gt_alleles", "gt_phased"] if "gt" in format_keys else []
     mapping = with_id.select(
         "variant_id", "samplename", "qual", "filter", *format_keys, *gt_cols
     ).dropDuplicates(["variant_id", "samplename"])
-    if incremental and catalog.exists(map_t):
-        # Composite-PK guard (snp_functions.py:171-186): already-loaded
-        # (variant_id, samplename) pairs are skipped.
-        loaded = catalog.table(map_t).select("variant_id", "samplename")
-        mapping = mapping.join(loaded, ["variant_id", "samplename"], "left_anti").localCheckpoint(eager=True)
-    map_mode = "append" if incremental else "overwrite"
-    if bucket_by_fk:
-        catalog.write_bucketed(mapping, map_t, ["variant_id"], bucket_by_fk,
-                               sort_cols=["variant_id"], mode=map_mode)
-    else:
-        catalog.write(mapping, map_t, mode=map_mode)
+    # Composite-PK guard (snp_functions.py:171-186): already-loaded
+    # (variant_id, samplename) pairs are skipped.
+    _write_new(catalog, mapping, map_t, ["variant_id", "samplename"],
+               incremental, bucket_col="variant_id", buckets=bucket_by_fk)
 
     if out_csq:
         # Impacts carry chrom as a LAYOUT column (functionally dependent
@@ -295,23 +296,13 @@ def ingest_variants(
                 "rename the field in the config"
             )
         impacts = with_id.select("variant_id", "chrom", *out_csq).dropDuplicates()
-        if incremental and catalog.exists(imp_t):
-            # Anti-join guard mirroring the mapping table's: impacts of
-            # already-loaded variants are skipped, not doubled — without
-            # this every incremental run re-appends impact rows for every
-            # parsed variant and select(impacts=True) joins fan out.
-            loaded = catalog.table(imp_t).select("variant_id").distinct()
-            impacts = impacts.join(loaded, "variant_id", "left_anti").localCheckpoint(eager=True)
-        imp_mode = "append" if incremental else "overwrite"
-        if bucket_by_fk:
-            catalog.write_bucketed(impacts, imp_t, ["variant_id"], bucket_by_fk,
-                                   sort_cols=sort_cols or ["variant_id"],
-                                   mode=imp_mode, partition_by=["chrom"])
-        elif sort_cols:
-            catalog.write(impacts.sortWithinPartitions(*sort_cols), imp_t,
-                          mode=imp_mode, partition_by=["chrom"])
-        else:
-            catalog.write(impacts, imp_t, mode=imp_mode, partition_by=["chrom"])
+        # Anti-join guard mirroring the mapping table's: impacts of
+        # already-loaded variants are skipped, not doubled — without
+        # this every incremental run re-appends impact rows for every
+        # parsed variant and select(impacts=True) joins fan out.
+        _write_new(catalog, impacts, imp_t, ["variant_id"], incremental,
+                   sort_cols=sort_cols, partition_by=["chrom"],
+                   bucket_col="variant_id", buckets=bucket_by_fk)
 
 
 def create_project(spark: SparkSession, project_dir: str, config: dict | str) -> ProjectCatalog:
@@ -347,32 +338,18 @@ def create_project(spark: SparkSession, project_dir: str, config: dict | str) ->
     bucket_by_fk = int(bucket_by_fk) if bucket_by_fk else None
 
     samples = load_samples(spark, config["samples"], config.get("sample_columns"))
-    if incremental and catalog.exists("samples"):
-        samples = samples.join(
-            catalog.table("samples").select("sample_id"), "sample_id", "left_anti"
-        ).localCheckpoint(eager=True)
-    catalog.write(samples, "samples", mode="append" if incremental else "overwrite")
-
-    def _new_expression(df: DataFrame, table: str) -> DataFrame:
-        if incremental and catalog.exists(table):
-            key = ["samplename", "gene" if table == "gene_expression" else "transcript"]
-            loaded = catalog.table(table).select(*key)
-            return df.join(loaded, key, "left_anti").localCheckpoint(eager=True)
-        return df
+    _write_new(catalog, samples, "samples", ["sample_id"], incremental)
 
     rna = config.get("rna") or {}
     if rna.get("expression"):
         genes = [(s, g) for s, g, _ in rna["expression"]]
         isos = [(s, i) for s, _, i in rna["expression"] if i]
-        catalog.write(_new_expression(ingest_expression(spark, genes, "gene"), "gene_expression"),
-                      "gene_expression",
-                      mode="append" if incremental else "overwrite")
+        _write_new(catalog, ingest_expression(spark, genes, "gene"),
+                   "gene_expression", ["samplename", "gene"], incremental)
         if isos:
-            catalog.write(
-                _new_expression(ingest_expression(spark, isos, "transcript"),
-                                "transcript_expression"),
-                "transcript_expression",
-                mode="append" if incremental else "overwrite")
+            _write_new(catalog, ingest_expression(spark, isos, "transcript"),
+                       "transcript_expression", ["samplename", "transcript"],
+                       incremental)
     if rna.get("junctions"):
         # unfiltered pass + QC-filtered pass (create_project.py:119-155)
         ingest_junctions(spark, catalog, rna["junctions"], incremental=incremental,

@@ -2,7 +2,7 @@
 
 All pure built-in compositions (regexp/length/md5) so they stay inside
 whole-stage codegen — no Python UDFs. These back the training-data
-pipeline operators (SURVEY.md §2.8): token counting, quality scoring,
+pipeline operators (SURVEY.md §2.8): token counting, quality ratios,
 language-ID heuristic, document fingerprinting.
 """
 
@@ -20,10 +20,6 @@ def token_count(text: Column | str) -> Column:
     """Whitespace token count (empty string -> 0)."""
     t = F.trim(_c(text))
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-
-
-def char_count(text: Column | str) -> Column:
-    return F.length(_c(text))
 
 
 def punct_ratio(text: Column | str) -> Column:
@@ -65,19 +61,6 @@ def stopword_count(text: Column | str, stopwords: list[str]) -> Column:
     return stopword_count_from_tokens(tokens(text), stopwords)
 
 
-def quality_score(text: Column | str, stopwords: list[str]) -> Column:
-    """Heuristic quality in [0,1]: long enough, low punctuation noise,
-    reasonable stopword density (the classic Gopher-style cheap filters).
-    """
-    ntok = token_count(text)
-    sw_frac = stopword_count(text, stopwords) / F.greatest(ntok, F.lit(1))
-    return (
-        F.when(ntok < 5, 0.0).otherwise(1.0) * 0.4
-        + F.when(punct_ratio(text) < 0.2, 1.0).otherwise(0.0) * 0.3
-        + F.least(sw_frac * 5, F.lit(1.0)) * 0.3
-    )
-
-
 #: Tiny per-language stopword lists for the n-gram/stopword language-ID
 #: heuristic. Deliberately small and deterministic.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -91,15 +74,6 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 def lang_scores(text: Column | str, langs: dict[str, list[str]] | None = None) -> dict[str, Column]:
     langs = langs or LANG_STOPWORDS
     return {lang: stopword_count(text, words) for lang, words in langs.items()}
-
-
-def lang_id_from_tokens(toks: Column | str, langs: dict[str, list[str]] | None = None,
-                        default: str = "und") -> Column:
-    """Argmax over a MATERIALIZED token-array column — use this form in
-    hot paths so the tokenizer runs once, not once per language."""
-    langs = langs or LANG_STOPWORDS
-    scores = {lang: stopword_count_from_tokens(toks, words) for lang, words in langs.items()}
-    return _argmax_lang(scores, default)
 
 
 def lang_id(text: Column | str, langs: dict[str, list[str]] | None = None,

@@ -84,61 +84,17 @@ def refresh_stats(catalog, name: str, batch: DataFrame, keys: list[str],
     from itself — same crash-safety contract as point updates). Cost is
     O(|batch| + |keys|) per refresh, independent of corpus size.
 
-    When called from a streaming foreachBatch (at-least-once), pass
-    ``batch_id`` and the checkpoint's ``run_id``
-    (:func:`clinpy_spark.streaming.fold.lineage_token`): replays
-    within the same lineage are skipped and a fresh-checkpoint restart
-    folds from its batch 0 — the same (run_id, batch_id) stamp
-    contract as ``fold_partials``."""
-    import json
+    The fold is :func:`clinpy_spark.streaming.fold.stamped_merge` with
+    :func:`merge_partials`. When called from a streaming foreachBatch
+    (at-least-once), pass ``batch_id`` and the checkpoint's ``run_id``
+    (:func:`clinpy_spark.streaming.fold.lineage_token`; ``None`` is the
+    lineage ``""``): replays within the same lineage are skipped and a
+    fresh-checkpoint restart folds from its batch 0. Without a
+    ``batch_id`` (a plain batch refresh) nothing is skipped and a
+    stream-maintained table keeps its stamps."""
+    from clinpy_spark.streaming.fold import stamped_merge
 
-    from pyspark.sql import functions as F
-
-    from clinpy_spark.streaming.fold import (
-        BATCH_ID_COL, RUN_ID_COL, decode_ledger, ledger_advance,
-        ledger_covers,
-    )
-
-    parts = partial_aggregate(batch, keys, value_cols)
-    rid = "" if run_id is None else run_id
-    if catalog.exists(name):
-        state = catalog.table(name)
-        stamped = BATCH_ID_COL in state.columns
-        ledger: list[list] = []
-        prev_bid = None
-        if stamped:
-            row = state.agg(
-                F.max(BATCH_ID_COL).alias("b"),
-                F.max(RUN_ID_COL).alias("r")
-                if RUN_ID_COL in state.columns else F.lit(None).alias("r"),
-            ).collect()[0]
-            ledger = decode_ledger(row.r, row.b)
-            prev_bid = row.b
-            if batch_id is not None and ledger_covers(ledger, rid, batch_id):
-                return  # replayed batch within ITS OWN lineage
-        state = state.drop(BATCH_ID_COL, RUN_ID_COL)
-        merged = merge_partials(state, parts, keys, value_cols)
-        if batch_id is not None:
-            merged = (
-                merged.withColumn(BATCH_ID_COL, F.lit(batch_id))
-                .withColumn(
-                    RUN_ID_COL,
-                    F.lit(json.dumps(ledger_advance(ledger, rid, batch_id)))))
-        elif stamped:
-            # r13 (ADVICE): a plain batch refresh against a stream-
-            # maintained table must CARRY the lineage stamps through —
-            # writing the merge unstamped would make the still-running
-            # stream's next replayed batch look like a first fold and
-            # double-count it.
-            merged = (
-                merged.withColumn(BATCH_ID_COL, F.lit(prev_bid))
-                .withColumn(RUN_ID_COL, F.lit(json.dumps(ledger))))
-        catalog.overwrite_staged(merged, name)
-    else:
-        if batch_id is not None:
-            parts = (
-                parts.withColumn(BATCH_ID_COL, F.lit(batch_id))
-                .withColumn(
-                    RUN_ID_COL,
-                    F.lit(json.dumps(ledger_advance([], rid, batch_id)))))
-        catalog.write(parts, name)
+    stamped_merge(
+        catalog, name, partial_aggregate(batch, keys, value_cols),
+        lambda state, part: merge_partials(state, part, keys, value_cols),
+        batch_id, run_id)

@@ -572,8 +572,3 @@ def session_catalog(spark: SparkSession, project_dir: str) -> ProjectCatalog:
     if key not in catalogs:
         catalogs[key] = ProjectCatalog(spark, project_dir)
     return catalogs[key]
-
-
-def load_star(spark: SparkSession, sf_dir: str) -> ProjectCatalog:
-    """Catalog over one of the driver's testdata scale-factor dirs."""
-    return session_catalog(spark, sf_dir)

@@ -167,25 +167,13 @@ def stream_period_counts(
     ``name`` table (addition-merge keyed by __p) — the maintained
     series :func:`finalize_cusum` reads. Table size = |days observed|,
     regardless of stream volume."""
-    import os
+    from clinpy_spark.streaming.fold import stream_fold, summed
 
-    from clinpy_spark.streaming.fold import fold_partials, lineage_token
-
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__cusum_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = period_counts_partial(batch, ts_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__p"], counters=["n"],
-                      run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: period_counts_partial(batch, ts_col),
+        summed(["__p"], ["n"]), "cusum",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def finalize_cusum(counts: DataFrame) -> DataFrame:

@@ -13,14 +13,12 @@ batch psi_table bit-for-bit (twin test)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from clinpy_spark.streaming.fold import fold_partials, lineage_token
+from clinpy_spark.streaming.fold import stream_fold, summed
 
 
 def bin_counts_partial(df: DataFrame, col: str, edges: list[float]) -> DataFrame:
@@ -49,20 +47,11 @@ def stream_psi_counts(
     """Fold each micro-batch's per-bin counts into the persisted
     ``name`` table (addition-merge keyed by bin). The maintained table
     is at most ``len(edges)+1`` rows regardless of stream volume."""
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__psi_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = bin_counts_partial(batch, col, edges)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["bin"], counters=["n"],
-                      run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: bin_counts_partial(batch, col, edges),
+        summed(["bin"], ["n"]), "psi",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def finalize_psi(
@@ -119,21 +108,11 @@ def stream_ks_counts(
     """Fold each micro-batch's per-value counts into the persisted
     ``name`` table (addition-merge keyed by __v). Read the live KS vs a
     reference snapshot with :func:`finalize_ks`."""
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__ks_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = value_counts_partial(batch, col, quantize)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__v"], counters=["n"],
-                      run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: value_counts_partial(batch, col, quantize),
+        summed(["__v"], ["n"]), "ks",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def finalize_trimmed_means(

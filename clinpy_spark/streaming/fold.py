@@ -1,4 +1,14 @@
-"""Idempotent addition-merge for foreachBatch counter folds.
+"""The streaming fold: one foreachBatch entry point and one replay-stamped
+merge for every streaming twin.
+
+A twin keeps a small state table current by folding each micro-batch's
+partial aggregate into it (:func:`stream_fold`, which owns the default
+checkpoint path, the empty-batch skip, the lineage token and the
+trigger); a ``finalize_*`` reader refits on read. The fold itself is
+:func:`stamped_merge`: union the state with the batch's partial,
+re-aggregate with the caller's merge, stamp, and swap —
+:func:`fold_partials` sums counters, ``operators.incremental
+.refresh_stats`` merges (count, sum, min, max) partials.
 
 foreachBatch is AT-LEAST-ONCE: a batch replayed after a failure (before
 its checkpoint offset commits) would double-add its counts into a
@@ -38,7 +48,9 @@ batch id (and legacy single-string ``__rid`` stamps are read as a
 one-entry ledger), so state tables written by earlier rounds keep
 working. A lineage evicted from the ledger (more than MAX_LINEAGES
 concurrent writers) degrades to the documented single-writer contract
-— one logical stream owner per state table.
+— one logical stream owner per state table. A caller that names no
+lineage (``run_id=None``) folds as the lineage ``""``, so its replays
+are judged by the same ledger rule.
 """
 
 from __future__ import annotations
@@ -46,9 +58,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 #: state-table column carrying the last-folded foreachBatch id.
 BATCH_ID_COL = "__bid"
@@ -118,6 +132,67 @@ def lineage_token(checkpoint: str) -> str:
         os.path.abspath(checkpoint).encode("utf-8")).hexdigest()[:16]
 
 
+def _stamp(df: DataFrame, batch_id, ledger: list[list]) -> DataFrame:
+    return (df.withColumn(BATCH_ID_COL, F.lit(batch_id))
+            .withColumn(RUN_ID_COL, F.lit(json.dumps(ledger))))
+
+
+def stamped_merge(
+    catalog,
+    name: str,
+    part: DataFrame,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    batch_id: int | None,
+    run_id: str | None,
+) -> None:
+    """Fold ``part`` into the persisted ``name`` table:
+    ``merge(state, part)`` re-aggregates the unstamped state with the
+    batch's partial, and the result replaces the table via the staged
+    atomic swap (the first fold simply writes ``part``).
+
+    With a ``batch_id``, the fold is skipped when the ledger's entry
+    for ``run_id`` (``None`` is the lineage ``""``) already covers it,
+    and the merged table is stamped with the advanced ledger. Without
+    one (a plain batch refresh), nothing is skipped and a stamped
+    table keeps its stamps: writing the merge unstamped would make a
+    still-running stream's next replayed batch look like a first fold
+    and double-count it."""
+    rid = "" if run_id is None else run_id
+    if not catalog.exists(name):
+        if batch_id is not None:
+            part = _stamp(part, batch_id, ledger_advance([], rid, batch_id))
+        catalog.write(part, name)
+        return
+    state = catalog.table(name)
+    stamped = BATCH_ID_COL in state.columns
+    ledger, prev_bid = [], None
+    if stamped:
+        row = state.agg(
+            F.max(BATCH_ID_COL).alias("b"),
+            F.max(RUN_ID_COL).alias("r")
+            if RUN_ID_COL in state.columns else F.lit(None).alias("r"),
+        ).collect()[0]
+        ledger, prev_bid = decode_ledger(row.r, row.b), row.b
+        if batch_id is not None and ledger_covers(ledger, rid, batch_id):
+            return  # replayed batch within ITS OWN lineage: folded
+    merged = merge(state.drop(BATCH_ID_COL, RUN_ID_COL), part)
+    if batch_id is not None:
+        merged = _stamp(
+            merged, batch_id, ledger_advance(ledger, rid, batch_id))
+    elif stamped:
+        merged = _stamp(merged, prev_bid, ledger)
+    catalog.overwrite_staged(merged, name)
+
+
+def summed(keys: list[str], counters: list[str]
+           ) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """The addition merge: per ``keys``, the sum of each counter."""
+    def merge(state: DataFrame, part: DataFrame) -> DataFrame:
+        return (state.unionByName(part).groupBy(*keys)
+                .agg(*[F.sum(c).alias(c) for c in counters]))
+    return merge
+
+
 def fold_partials(
     catalog,
     name: str,
@@ -133,44 +208,52 @@ def fold_partials(
 
     ``run_id`` names the checkpoint lineage (pass
     ``lineage_token(checkpoint)``). A batch is skipped as a replay only
-    when ``batch_id <= stamped`` AND the stamped lineage matches; a new
+    when its own lineage's ledger entry covers ``batch_id``; a new
     lineage (fresh checkpoint dir) folds from its batch 0 instead of
-    being dropped. With ``run_id=None`` (legacy callers) the batch-id
-    rule alone applies — correct within one lineage, WRONG across a
-    checkpoint reset; all production stream wrappers pass the token.
-    """
-    rid = "" if run_id is None else run_id
-    if not catalog.exists(name):
-        catalog.write(
-            part.withColumn(BATCH_ID_COL, F.lit(batch_id))
-                .withColumn(
-                    RUN_ID_COL,
-                    F.lit(json.dumps(ledger_advance([], rid, batch_id)))),
-            name)
-        return
-    state = catalog.table(name)
-    ledger: list[list] = []
-    if BATCH_ID_COL in state.columns:
-        row = state.agg(
-            F.max(BATCH_ID_COL).alias("b"),
-            F.max(RUN_ID_COL).alias("r")
-            if RUN_ID_COL in state.columns else F.lit(None).alias("r"),
-        ).collect()[0]
-        ledger = decode_ledger(row.r, row.b)
-        if run_id is None:
-            # legacy caller: batch-id rule alone, latest lineage only
-            if row.b is not None and batch_id <= row.b:
-                return
-        elif ledger_covers(ledger, rid, batch_id):
-            return  # replayed batch within ITS OWN lineage: folded
-        state = state.drop(BATCH_ID_COL, RUN_ID_COL)
-    merged = (
-        state.unionByName(part)
-        .groupBy(*keys)
-        .agg(*[F.sum(c).alias(c) for c in counters])
-        .withColumn(BATCH_ID_COL, F.lit(batch_id))
-        .withColumn(
-            RUN_ID_COL,
-            F.lit(json.dumps(ledger_advance(ledger, rid, batch_id))))
-    )
-    catalog.overwrite_staged(merged, name)
+    being dropped. ``run_id=None`` is the lineage ``""``: every such
+    caller shares that one ledger entry, which is right within one
+    lineage but cannot tell a checkpoint reset from a replay; the
+    stream wrappers all pass the token."""
+    stamped_merge(catalog, name, part, summed(keys, counters),
+                  batch_id, run_id)
+
+
+def stream_fold(
+    stream: DataFrame,
+    catalog,
+    name: str,
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    tag: str,
+    *,
+    checkpoint: str | None = None,
+    available_now: bool = True,
+    trigger_interval: str | None = None,
+) -> StreamingQuery:
+    """Start a foreachBatch stream that folds ``partial(batch)`` of
+    every non-empty micro-batch into the ``name`` table through
+    :func:`stamped_merge` with ``merge``, stamped with the batch id and
+    the checkpoint's :func:`lineage_token`.
+
+    The checkpoint defaults to ``<project>/<name>.__<tag>_checkpoint__``;
+    each twin keeps its own ``tag``, because a changed default starts a
+    new lineage and a resumed file stream would fold its history twice.
+    ``available_now=True`` drains the current source content and stops;
+    otherwise ``trigger_interval`` (e.g. "30 seconds") runs continuous
+    micro-batches."""
+    checkpoint = checkpoint or os.path.join(
+        catalog.project_dir, name).rstrip("/") + f".__{tag}_checkpoint__"
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        stamped_merge(catalog, name, partial(batch), merge, batch_id,
+                      lineage_token(checkpoint))
+
+    w = stream.writeStream.foreachBatch(fold).option(
+        "checkpointLocation", checkpoint)
+    if available_now:
+        w = w.trigger(availableNow=True)
+    elif trigger_interval:
+        w = w.trigger(processingTime=trigger_interval)
+    return w.start()

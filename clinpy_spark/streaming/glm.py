@@ -11,16 +11,19 @@ twins.
 Exactness contract (twin tests): the folded grid equals the batch
 grid bit-for-bit (integer counters), so finalize == the batch
 operator over the same data.
+
+Only the NB2 grid has its own stream wrapper; fold the other partials
+with :func:`clinpy_spark.streaming.fold.stream_fold`, e.g.
+``stream_fold(stream, catalog, name, lambda b: glm_grid_partial(b, x,
+y), summed(["__x"], ["n", "sy"]), "glm")``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clinpy_spark.streaming.fold import fold_partials, lineage_token
+from clinpy_spark.streaming.fold import stream_fold, summed
 
 
 def glm_grid_partial(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
@@ -40,37 +43,6 @@ def glm_grid_partial(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
             F.sum("__y").alias("sy"),
         )
     )
-
-
-def stream_glm_grid(
-    stream: DataFrame,
-    catalog,
-    name: str,
-    x_col: str,
-    y_col: str,
-    *,
-    checkpoint: str | None = None,
-    available_now: bool = True,
-):
-    """Fold each micro-batch's per-x (n, sum_y) partials into the
-    persisted ``name`` table (addition-merge keyed by __x, idempotent
-    via the batch-id stamp). Read the live fit with
-    :func:`finalize_logistic` / :func:`finalize_poisson`."""
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__glm_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = glm_grid_partial(batch, x_col, y_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__x"], counters=["n", "sy"],
-                      run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def finalize_logistic(grid: DataFrame, iterations: int = 8) -> DataFrame:
@@ -105,39 +77,6 @@ def glm_grid_partial_multi(
         .groupBy(*xs)
         .agg(F.count(F.lit(1)).alias("n"), F.sum("__y").alias("sy"))
     )
-
-
-def stream_glm_grid_multi(
-    stream: DataFrame,
-    catalog,
-    name: str,
-    x_cols: list[str],
-    y_col: str,
-    *,
-    checkpoint: str | None = None,
-    available_now: bool = True,
-):
-    """Fold each micro-batch's joint-grid (n, sum_y) partials into the
-    persisted ``name`` table (addition-merge keyed by the covariate
-    cell, idempotent lineage-scoped stamp). Read the live d-covariate
-    fit with :func:`finalize_logistic_multi`."""
-    xs = [f"__x{i}" for i in range(1, len(x_cols) + 1)]
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__glmm_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = glm_grid_partial_multi(batch, x_cols, y_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=xs, counters=["n", "sy"],
-                      run_id=lineage_token(checkpoint))
-
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def finalize_logistic_multi(
@@ -190,22 +129,11 @@ def stream_negbin_grid(
     and a replay within a lineage never double-counts (r12 verdict #8).
     Read the live fit — Poisson start, moment dispersion, NB2 Fisher
     refit — with :func:`finalize_negbin`."""
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__nb2_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = negbin_grid_partial(batch, x_col, y_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__x"], counters=["n", "sy", "syy"],
-                      run_id=lineage_token(checkpoint))
-
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: negbin_grid_partial(batch, x_col, y_col),
+        summed(["__x"], ["n", "sy", "syy"]), "nb2",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def finalize_negbin(grid: DataFrame, iterations: int = 4) -> DataFrame:
@@ -245,38 +173,6 @@ def multinomial_count_partial(
         .groupBy("__x", "__y")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def stream_multinomial_counts(
-    stream: DataFrame,
-    catalog,
-    name: str,
-    x_col: str,
-    label_col: str,
-    *,
-    checkpoint: str | None = None,
-    available_now: bool = True,
-):
-    """Fold each micro-batch's per-(covariate, class) counts into the
-    persisted ``name`` table (addition-merge, idempotent lineage-ledger
-    stamp). Read the live k-class softmax fit with
-    :func:`finalize_multinomial`."""
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__mn_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = multinomial_count_partial(batch, x_col, label_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__x", "__y"], counters=["n"],
-                      run_id=lineage_token(checkpoint))
-
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def finalize_multinomial(counts: DataFrame, iterations: int = 4) -> DataFrame:

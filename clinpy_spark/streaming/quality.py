@@ -14,11 +14,11 @@ those in batch over the sink table, or via the KMV sketch
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from clinpy_spark.streaming.fold import stream_fold, summed
 
 _STREAMABLE = {"completeness", "range", "pattern"}
 
@@ -94,22 +94,11 @@ def stream_check_suite(
     ``name`` table (addition-merge keyed by check_name, effectively-
     once via the (run_id, batch_id) stamp). Read the current verdicts
     with ``finalize_checks(catalog.table(name), checks)``."""
-    from clinpy_spark.streaming.fold import fold_partials, lineage_token
-
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__checks_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = check_partials(batch, checks)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["check_name"], counters=["num", "den"],
-                      run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: check_partials(batch, checks),
+        summed(["check_name"], ["num", "den"]), "checks",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def score_label_counts_partial(
@@ -118,7 +107,10 @@ def score_label_counts_partial(
     """(__s, np, nn) additive partials for one micro-batch — the AUC
     sufficient statistic (per-distinct-score positive/negative
     counts). Quantize/bucket continuous scores upstream when the score
-    domain is unbounded (the ks-fold compromise)."""
+    domain is unbounded (the ks-fold compromise). Stream it with
+    ``stream_fold(stream, catalog, name, lambda b:
+    score_label_counts_partial(b, s, y), summed(["__s"], ["np", "nn"]),
+    "auc")``."""
     lab = F.col(label_col).cast("int")
     return (
         df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
@@ -129,41 +121,6 @@ def score_label_counts_partial(
             F.sum(1 - F.col("__y")).alias("nn"),
         )
     )
-
-
-def stream_score_counts(
-    stream: DataFrame,
-    catalog,
-    name: str,
-    score_col: str,
-    label_col: str,
-    *,
-    checkpoint: str | None = None,
-    available_now: bool = True,
-):
-    """Fold per-score labeled counts into the persisted ``name`` table
-    (addition-merge keyed by __s, idempotent batch-id stamp); read the
-    live model AUC with :func:`finalize_auc` — continuous scorer
-    monitoring without rescanning scored history."""
-    import os
-
-    from clinpy_spark.streaming.fold import fold_partials, lineage_token
-
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__auc_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = score_label_counts_partial(batch, score_col, label_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__s"], counters=["np", "nn"],
-                      run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def finalize_calibration(counts: DataFrame, n_bins: int = 10) -> DataFrame:

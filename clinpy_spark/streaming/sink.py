@@ -65,33 +65,27 @@ def stream_stats_to_catalog(
     trigger_interval: str | None = None,
 ) -> StreamingQuery:
     """Continuously-maintained per-key statistics: each micro-batch folds
-    into the persisted mergeable partials via
-    ``operators.incremental.refresh_stats`` inside ``foreachBatch`` —
-    the streaming face of incremental aggregate maintenance. Cost per
+    into the persisted mergeable partials with the fold
+    ``operators.incremental.refresh_stats`` runs, driven by
+    ``streaming.fold.stream_fold`` — the streaming face of incremental aggregate maintenance. Cost per
     batch is O(batch + keys) regardless of how much history the stream
     has accumulated; read the result through
     ``operators.incremental.finalize(catalog.table(name), value_cols)``.
 
     foreachBatch is at-least-once on retry; the fold is made
-    effectively-once by the (run_id, batch_id) stamp ``refresh_stats``
-    keeps on the state table — replays within one checkpoint lineage
+    effectively-once by the (run_id, batch_id) stamp the fold keeps on
+    the state table — replays within one checkpoint lineage
     are skipped, and a restart under a FRESH checkpoint dir folds from
     its batch 0 instead of being misclassified as a replay (r11
     verdict #1)."""
-    from clinpy_spark.operators.incremental import refresh_stats
-    from clinpy_spark.streaming.fold import lineage_token
+    from clinpy_spark.operators.incremental import (
+        merge_partials, partial_aggregate,
+    )
+    from clinpy_spark.streaming.fold import stream_fold
 
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__stats_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        refresh_stats(catalog, name, batch, keys, value_cols,
-                      batch_id=batch_id, run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_interval:
-        w = w.trigger(processingTime=trigger_interval)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: partial_aggregate(batch, keys, value_cols),
+        lambda state, part: merge_partials(state, part, keys, value_cols),
+        "stats", checkpoint=checkpoint, available_now=available_now,
+        trigger_interval=trigger_interval)

@@ -11,22 +11,20 @@ monitor). The curve itself is recomputed from the folded grid on read
 via :func:`clinpy_spark.operators.survival.km_from_per_time` — windows
 over the bounded time grid, never over history.
 
-Replay safety: foreachBatch is at-least-once, so the merge goes
-through :func:`clinpy_spark.streaming.fold.fold_partials`, which
-stamps the state table with the last folded batch id and skips
-replayed batches — the fold is effectively-once.
+Replay safety: foreachBatch is at-least-once, so each wrapper runs
+through :func:`clinpy_spark.streaming.fold.stream_fold`, whose merge
+stamps the state table with its checkpoint lineage's last folded batch
+id and skips replayed batches — the fold is effectively-once.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from clinpy_spark.operators.survival import _per_time, km_from_per_time
-from clinpy_spark.streaming.fold import fold_partials, lineage_token
+from clinpy_spark.streaming.fold import stream_fold, summed
 
 
 def km_partials(
@@ -54,21 +52,11 @@ def stream_km_partials(
     """Fold each micro-batch's KM partials into the persisted ``name``
     table (addition-merge keyed by (__g, __t)). Read the live curve
     with ``km_read(catalog.table(name), time_col, group_col)``."""
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__km_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = km_partials(batch, time_col, event_col, group_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__g", "__t"], counters=["d", "c"],
-                      run_id=lineage_token(checkpoint))
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: km_partials(batch, time_col, event_col, group_col),
+        summed(["__g", "__t"], ["d", "c"]), "km",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def cox_leaver_partials(
@@ -115,25 +103,12 @@ def stream_cox_partials(
     lineage-scoped stamp). Read the live adjusted hazard ratios with
     :func:`finalize_cox_multi` — continuously-monitored multi-covariate
     Cox without rescanning subject history."""
-    from clinpy_spark.streaming.fold import fold_partials, lineage_token
-
     xs = [f"__x{i}" for i in range(1, len(x_cols) + 1)]
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__cox_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = cox_leaver_partials(batch, time_col, event_col, x_cols)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=[*xs, "__t"], counters=["__r", "__d"],
-                      run_id=lineage_token(checkpoint))
-
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: cox_leaver_partials(batch, time_col, event_col, x_cols),
+        summed([*xs, "__t"], ["__r", "__d"]), "cox",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def finalize_cox_multi(
@@ -181,25 +156,12 @@ def stream_finegray_partials(
     the censoring KM and IPCW weights rebuild from the folded counters
     on read, never from subject history."""
     from clinpy_spark.operators.survival import finegray_leavers
-    from clinpy_spark.streaming.fold import fold_partials, lineage_token
 
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__fg_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = finegray_leavers(batch, time_col, status_col, group_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__x", "__t"],
-                      counters=["__r", "__d1", "__d2", "__c"],
-                      run_id=lineage_token(checkpoint))
-
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: finegray_leavers(batch, time_col, status_col, group_col),
+        summed(["__x", "__t"], ["__r", "__d1", "__d2", "__c"]), "fg",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def finalize_finegray_score(partials: DataFrame) -> DataFrame:
@@ -280,24 +242,12 @@ def stream_cox_tv_partials(
     fit with :func:`finalize_cox_tv` — continuously-monitored
     treatment-switch hazard ratio without rescanning episode
     history."""
-    checkpoint = checkpoint or os.path.join(
-        catalog.project_dir, name).rstrip("/") + ".__coxtv_checkpoint__"
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        part = cox_tv_partials(batch, start_col, stop_col, event_col,
-                               x_col)
-        fold_partials(catalog, name, part, batch_id,
-                      keys=["__t"],
-                      counters=["d", "d1", "fn", "fn1", "eps"],
-                      run_id=lineage_token(checkpoint))
-
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return stream_fold(
+        stream, catalog, name,
+        lambda batch: cox_tv_partials(
+            batch, start_col, stop_col, event_col, x_col),
+        summed(["__t"], ["d", "d1", "fn", "fn1", "eps"]), "coxtv",
+        checkpoint=checkpoint, available_now=available_now)
 
 
 def finalize_cox_tv(partials: DataFrame, iterations: int = 3) -> DataFrame:
