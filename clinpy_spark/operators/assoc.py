@@ -26,9 +26,14 @@ strata report chi2 = 0 by definition rather than dividing by zero.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from clinpy_spark.functions.cramer import (
+    _exp, _literal_row, _round, fit_newton, glm_moments, score_norm)
 
 
 def hwe_chi2(df: DataFrame, variant_col: str, gt_col: str) -> DataFrame:
@@ -1378,17 +1383,18 @@ def logistic_newton(
     iterations: int = 8,
 ) -> DataFrame:
     """Logistic regression MLE for ONE bounded-cardinality covariate
-    plus intercept, by ``iterations`` unrolled Newton-Raphson (IRLS)
-    steps: 1 row (beta0, beta1, se1, wald_chi2, n, n_pos, score_norm)
+    plus intercept, by ``iterations`` Newton-Raphson (IRLS) steps:
+    1 row (beta0, beta1, se1, wald_chi2, n, n_pos, score_norm)
     — the binary-outcome effect-size ladder next to ``cox_newton``
     (hazard) and ``odds_ratio`` (unadjusted 2x2): log-odds per unit of
     x with Wald inference.
 
     The covariate must have BOUNDED distinct cardinality (an integer
     grade, a dosage in {0,1,2}, a bucketed score): the data collapses
-    to a per-x grid (x, n_x, pos_x) in ONE groupBy, and every Newton
-    step is then a grid-sized aggregate — the cohort is scanned once,
-    never per-iteration. Each step solves the 2x2 normal equations
+    to a per-x grid (x, n_x, pos_x) in ONE groupBy, collected once;
+    every Newton step then runs over the grid on the driver — the
+    cohort is scanned once, never per-iteration. Each step solves the
+    2x2 normal equations
 
         U0 = sum(pos_x - n_x p_x),   U1 = sum(x (pos_x - n_x p_x))
         Iab = sum(x^a+b n_x p_x (1 - p_x)),  p_x = sigmoid(b0 + b1 x)
@@ -1398,12 +1404,12 @@ def logistic_newton(
     strong effects or extreme class imbalance can need more (r11
     advice): the emitted ``score_norm`` column is the final Newton
     score norm ||U|| — ~0 when converged; raise ``iterations`` when it
-    is not. Each extra step costs one grid-sized aggregate, noise at
+    is not. Each extra step costs one pass over the grid, noise at
     any scale. The recurrence is a closed deterministic function of
     the integer grid, so a SQL oracle replays the same steps as
     chained CTEs (round-6 on the exp-touched outputs). NULL
     coefficients on a singular information matrix (constant x, empty
-    input, or separation driving weights to 0).
+    input, separation driving weights to 0, or a divergent step).
     """
     grid = (
         df.select(
@@ -1420,6 +1426,79 @@ def logistic_newton(
     return logistic_newton_from_grid(grid, iterations=iterations)
 
 
+def _glm_rows(grid: DataFrame, cols: list[str]) -> list:
+    """ONE collect of a bounded GLM grid: float tuples in ``cols``
+    order (covariates, then counts), sorted, so the driver-side sums
+    accumulate in an order that does not depend on the partition
+    layout."""
+    return sorted(tuple(float(r[c]) for c in cols) for r in grid.collect())
+
+
+def _logistic_w(eta, counts):
+    """Logistic IRLS weight and residual of a cell (n, positives)."""
+    n, pos = counts[0], counts[1]
+    p = 1 / (1 + _exp(-eta))
+    return n * p * (1 - p), pos - n * p
+
+
+def _poisson_w(eta, counts):
+    """Poisson weight and residual of a cell (exposure, sum y): the
+    exposure is the cell count, or its person-time for a rate model."""
+    w = counts[0] * _exp(eta)
+    return w, counts[1] - w
+
+
+def _nb2_w(alpha: float):
+    """NB2 Fisher-scoring weight and residual of a cell (n, sum y) at
+    dispersion ``alpha``."""
+    def weights(eta, counts):
+        n, sy = counts[0], counts[1]
+        mu = _exp(eta)
+        return n * mu / (1 + alpha * mu), (sy - n * mu) / (1 + alpha * mu)
+    return weights
+
+
+def _slope_stats(fit) -> list:
+    """(beta0, beta1, se1, wald_chi2) of a one-covariate
+    :func:`fit_newton` fit, all None when it failed."""
+    if fit is None:
+        return [None] * 4
+    beta, _, var = fit
+    return [beta[0], beta[1], math.sqrt(var[1]), beta[1] * beta[1] / var[1]]
+
+
+def _row6(spark, cols: list) -> DataFrame:
+    """The 1-row result of a single-covariate GLM: a (name, value) pair
+    is emitted ``F.round(value, 6)`` (Spark's half-up; NULL when the
+    value is None), a Column as it is."""
+    return spark.range(1).select(*[
+        c if isinstance(c, Column)
+        else (F.lit(None).cast("double") if c[1] is None
+              else F.round(F.lit(c[1]), 6)).alias(c[0])
+        for c in cols])
+
+
+def _glm_multi_row(spark, d: int, fit, tail: list,
+                   digits: int | None) -> DataFrame:
+    """The 1-row result of a multi-covariate GLM: (beta0, beta1..d,
+    se1..d, wald_chi2_1..d, *tail, score_norm) of a :func:`fit_newton`
+    fit through :func:`_round`, all NULL when the fit failed. The
+    round-5 default is the family's hash-determinism contract (r12
+    verdict #1): moment drift of ~1e-13 against a 1e-5 rounding grid
+    flips a digit with probability ~1e-8 per statistic."""
+    ids = range(1, d + 1)
+    names = ["beta0", *[f"beta{i}" for i in ids], *[f"se{i}" for i in ids],
+             *[f"wald_chi2_{i}" for i in ids], "score_norm"]
+    vals = [None] * len(names)
+    if fit is not None:
+        beta, u, var = fit
+        vals = [_round(v, digits) for v in (
+            *beta, *[math.sqrt(var[i]) for i in ids],
+            *[beta[i] * beta[i] / var[i] for i in ids], score_norm(u))]
+    cols = list(zip(names, vals))
+    return _literal_row(spark, cols[:-1] + tail + cols[-1:])
+
+
 def logistic_newton_from_grid(
     grid: DataFrame, iterations: int = 8
 ) -> DataFrame:
@@ -1427,79 +1506,22 @@ def logistic_newton_from_grid(
     (__x, __n, __p) — the entry point for incrementally-maintained
     cohorts: the grid IS the additive sufficient statistic, so a
     streaming fold keeps (n, positives) per covariate value and this
-    refits the MLE on read (streaming/glm.py finalize_logistic)."""
-    import math
+    refits the MLE on read (streaming/glm.py finalize_logistic).
 
-    # ONE collect of the bounded per-x grid; the 8 unrolled IRLS steps
-    # run driver-side over it in the same per-row operand order the
-    # chained crossJoin/agg plan evaluated (that plan paid ~10 chained
-    # stages plus the Catalyst cost of the unrolled expression tree
-    # per action, to iterate over a handful of rows). Driver float
-    # sums differ from Spark's partial-agg merge order by ~1e-16,
-    # invisible at the round-6 emission (which still runs through
-    # F.round so half-up semantics are unchanged; proven bit-identical
-    # on all three fixtures by order-insensitive output hashes).
-    spark = grid.sparkSession
-    g_rows = [
-        (float(r["__x"]), float(r["__n"]), float(r["__p"]),
-         int(r["__n"]), int(r["__p"]))
-        for r in grid.collect()
-    ]
-
-    def moments(b0, b1):
-        u0 = u1 = i00 = i01 = i11 = 0.0
-        for x, nc, pc, _, _ in g_rows:
-            p = 1 / (1 + math.exp(-(b0 + b1 * x)))
-            w = nc * p * (1 - p)
-            r = pc - nc * p
-            u0 += r
-            u1 += x * r
-            i00 += w
-            i01 += x * w
-            i11 += x * x * w
-        return u0, u1, i00, i01, i11
-
-    n_tot = sum(r[3] for r in g_rows)
-    pos_tot = sum(r[4] for r in g_rows)
-    bb = (0.0, 0.0) if g_rows else None
-    for _ in range(iterations):
-        if bb is None:
-            break
-        u0, u1, i00, i01, i11 = moments(*bb)
-        det = i00 * i11 - i01 * i01
-        if not det > 0:
-            bb = None
-            break
-        bb = (bb[0] + (i11 * u0 - i01 * u1) / det,
-              bb[1] + (i00 * u1 - i01 * u0) / det)
-    fin = None
-    if bb is not None:
-        u0, u1, i00, i01, i11 = moments(*bb)
-        det = i00 * i11 - i01 * i01
-        if det > 0:
-            var1 = i00 / det
-            fin = (bb[0], bb[1], math.sqrt(var1),
-                   bb[1] * bb[1] / var1,
-                   math.sqrt(u0 * u0 + u1 * u1))
-    if fin is None:
-        return spark.range(1).select(
-            F.lit(None).cast("double").alias("beta0"),
-            F.lit(None).cast("double").alias("beta1"),
-            F.lit(None).cast("double").alias("se1"),
-            F.lit(None).cast("double").alias("wald_chi2"),
-            F.lit(n_tot).cast("long").alias("n"),
-            F.lit(pos_tot).cast("long").alias("n_pos"),
-            F.lit(None).cast("double").alias("score_norm"),
-        )
-    return spark.range(1).select(
-        F.round(F.lit(fin[0]), 6).alias("beta0"),
-        F.round(F.lit(fin[1]), 6).alias("beta1"),
-        F.round(F.lit(fin[2]), 6).alias("se1"),
-        F.round(F.lit(fin[3]), 6).alias("wald_chi2"),
-        F.lit(n_tot).cast("long").alias("n"),
-        F.lit(pos_tot).cast("long").alias("n_pos"),
-        F.round(F.lit(fin[4]), 6).alias("score_norm"),
-    )
+    The grid is collected once and fitted on the driver as the d = 1
+    case of the shared GLM core (functions/cramer.py ``glm_moments`` +
+    ``fit_newton``); the emission still goes through ``F.round`` so
+    Spark's half-up rounding is unchanged."""
+    rows = _glm_rows(grid, ["__x", "__n", "__p"])
+    fit = fit_newton(glm_moments(rows, 1, _logistic_w), [0.0, 0.0],
+                     iterations)
+    b0, b1, se1, wald = _slope_stats(fit)
+    return _row6(grid.sparkSession, [
+        ("beta0", b0), ("beta1", b1), ("se1", se1), ("wald_chi2", wald),
+        F.lit(int(sum(r[1] for r in rows))).cast("long").alias("n"),
+        F.lit(int(sum(r[2] for r in rows))).cast("long").alias("n_pos"),
+        ("score_norm", None if fit is None else score_norm(fit[1])),
+    ])
 
 
 def logistic_newton_multi(
@@ -1520,25 +1542,22 @@ def logistic_newton_multi(
     grid (x1..xd, n, pos) — the joint cardinality must be bounded (an
     age band x sex x dosage cross, a few thousand cells at most; this
     is the d-dimensional generalization of the single-covariate grid
-    contract). Each Newton/IRLS step is then ONE grid-sized aggregate
-    producing the (d+1)-vector score U = X'(y - np) and the
-    (d+1)(d+2)/2 upper-triangle moments of the information
-    X'WX (W = diag(n p (1-p))) as a single 1-row collect, followed by
-    a driver-side (d+1)x(d+1) ``numpy.linalg.solve`` — the classic
-    distributed-IRLS factoring (moments distributed, tiny solve local;
-    the collect is bounded at d(d+3)/2+1 doubles per step, never
-    cohort-sized). The next step re-enters the plan as literal
-    coefficients, so the grid is scanned ``iterations``+1 times total,
-    never the cohort.
+    contract). The grid is collected once and every Newton/IRLS step
+    runs on the driver over it: the (d+1)-vector score U = X'(y - np),
+    the upper triangle of the information X'WX (W = diag(n p (1-p)))
+    and a (d+1)x(d+1) solve by functions/cramer.py's step rule
+    (explicit Cramer for d <= 3, numpy beyond). The cohort is scanned
+    once, never per-iteration.
 
     NULL coefficients on a singular information matrix (collinear or
     constant covariates, empty input, separation). ``score_norm`` is
     the final ||U|| (~0 at convergence — raise ``iterations`` if not;
     the default 4 suits the well-conditioned grids the oracle
-    exercises, matching the DuckDB replay's step count). For d <= 2
+    exercises, matching the DuckDB replay's step count). For d = 2
     the recurrence is SQL-expressible via Cramer's rule, which is how
-    the ``dx_logistic_multi`` oracle replays it; LAPACK-vs-Cramer
-    drift is ~1e-14 per step, invisible at the round-6 contract.
+    the ``dx_logistic_multi`` oracle replays it, in the same operand
+    order as the driver solve; ``digits=None`` emits unrounded values
+    (the float-stream audit).
     """
     d = len(x_cols)
     if not 1 <= d <= 8:
@@ -1571,156 +1590,13 @@ def logistic_newton_multi_from_grid(
     cell and this refits the d-covariate MLE on read
     (streaming/glm.py finalize_logistic_multi), exactly as the
     single-covariate ``logistic_newton_from_grid`` does."""
-    import math
-
-    import numpy as np
-
-    from clinpy_spark.functions.cramer import solve2, solve3, var3_diag
-
     xs = [f"__x{i}" for i in range(1, d + 1)]
-    spark = grid.sparkSession
-    m = d + 1  # intercept + d slopes
-
-    # ONE collect of the bounded joint-cell grid; every Fisher step
-    # runs driver-side over it in the same per-row operand order the
-    # distributed aggregate evaluated (each step previously paid a job
-    # + collect round-trip for a handful of rows — ~0.4s/step). Driver
-    # float sums differ from Spark's partial-agg merge order by
-    # ~1e-16; the family emits at round-5 with a tested >=1e-9
-    # boundary margin (tests/test_stats_r13.py).
-    g_rows = [
-        (float(r["__n"]), float(r["__p"]),
-         *[float(r[x]) for x in xs], int(r["__n"]), int(r["__p"]))
-        for r in grid.collect()
-    ]
-
-    def moments(beta):
-        """One driver pass over the collected grid -> (U, I, n, pos)."""
-        if not g_rows:
-            return None, None, 0, 0
-        u = [0.0] * (d + 1)
-        info = {(a, b): 0.0 for a in range(d + 1) for b in range(a, d + 1)}
-        n_tot = pos_tot = 0
-        for row in g_rows:
-            nc, pc = row[0], row[1]
-            eta = float(beta[0])
-            for i in range(d):
-                eta = eta + float(beta[i + 1]) * row[2 + i]
-            p = 1 / (1 + math.exp(-eta))
-            w = nc * p * (1 - p)
-            r = pc - nc * p
-            xall = [1.0] + [row[2 + i] for i in range(d)]
-            for a in range(d + 1):
-                u[a] += xall[a] * r
-            for a in range(d + 1):
-                for b in range(a, d + 1):
-                    info[(a, b)] += xall[a] * xall[b] * w
-            n_tot += row[2 + d]
-            pos_tot += row[3 + d]
-        return u, info, n_tot, pos_tot
-
-    def step(beta, u, info):
-        """Newton update — explicit Cramer in the oracle's operand
-        order for m <= 3 (functions/cramer.py, r12 verdict #1),
-        numpy solve for larger systems (no SQL oracle there)."""
-        if m == 2:
-            det, d0, d1 = solve2(u[0], u[1],
-                                 info[(0, 0)], info[(0, 1)], info[(1, 1)])
-            if d0 is None:
-                return None
-            return [beta[0] + d0, beta[1] + d1]
-        if m == 3:
-            det, d0, d1, d2 = solve3(
-                u[0], u[1], u[2],
-                info[(0, 0)], info[(0, 1)], info[(0, 2)],
-                info[(1, 1)], info[(1, 2)], info[(2, 2)])
-            if d0 is None:
-                return None
-            return [beta[0] + d0, beta[1] + d1, beta[2] + d2]
-        a = np.zeros((m, m))
-        for (i, j), v in info.items():
-            a[i, j] = a[j, i] = v
-        if np.linalg.det(a) <= 0:
-            return None
-        return list(np.asarray(beta) + np.linalg.solve(a, np.asarray(u)))
-
-    def var_diag(info):
-        """Diagonal of the inverse information, explicit cofactor/det
-        ratios for m <= 3 in the oracle's operand order."""
-        if m == 2:
-            det = info[(0, 0)] * info[(1, 1)] - info[(0, 1)] * info[(0, 1)]
-            if not det > 0:
-                return None
-            return [info[(1, 1)] / det, info[(0, 0)] / det]
-        if m == 3:
-            det = (info[(0, 0)] * (info[(1, 1)] * info[(2, 2)]
-                                   - info[(1, 2)] * info[(1, 2)])
-                   - info[(0, 1)] * (info[(0, 1)] * info[(2, 2)]
-                                     - info[(1, 2)] * info[(0, 2)])
-                   + info[(0, 2)] * (info[(0, 1)] * info[(1, 2)]
-                                     - info[(1, 1)] * info[(0, 2)]))
-            if not det > 0:
-                return None
-            return list(var3_diag(
-                info[(0, 0)], info[(0, 1)], info[(0, 2)],
-                info[(1, 1)], info[(1, 2)], info[(2, 2)], det))
-        a = np.zeros((m, m))
-        for (i, j), v in info.items():
-            a[i, j] = a[j, i] = v
-        if np.linalg.det(a) <= 0:
-            return None
-        return list(np.diag(np.linalg.inv(a)))
-
-    def null_result():
-        cols = [F.lit(None).cast("double").alias("beta0")]
-        cols += [F.lit(None).cast("double").alias(f"beta{i}")
-                 for i in range(1, d + 1)]
-        cols += [F.lit(None).cast("double").alias(f"se{i}")
-                 for i in range(1, d + 1)]
-        cols += [F.lit(None).cast("double").alias(f"wald_chi2_{i}")
-                 for i in range(1, d + 1)]
-        cols += [F.lit(n_obs).cast("long").alias("n"),
-                 F.lit(n_pos).cast("long").alias("n_pos"),
-                 F.lit(None).cast("double").alias("score_norm")]
-        return spark.range(1).select(*cols)
-
-    beta = [0.0] * m
-    n_obs = n_pos = 0
-    for _ in range(iterations):
-        u, info, n_obs, n_pos = moments(beta)
-        if u is None:
-            return null_result()
-        beta = step(beta, u, info)
-        if beta is None:
-            return null_result()
-    u, info, n_obs, n_pos = moments(beta)
-    var = var_diag(info) if u is not None else None
-    if u is None or var is None:
-        return null_result()
-    score_norm = 0.0
-    for v in u:
-        score_norm = score_norm + v * v
-    score_norm = math.sqrt(score_norm)
-
-    # round-5 emission contract for the multi-covariate family (r12
-    # verdict #1): the irreducible distributed-sum-order drift in the
-    # collected moments is ~1e-13, so against the 1e-5 rounding grid a
-    # digit flips with probability ~1e-8 per statistic per run.
-    def r5(x):
-        if digits is None:  # unrounded, for boundary-margin audits
-            return float(x)
-        return round(float(x), digits) + 0.0  # +0.0 folds -0.0 to 0.0
-
-    cols = [F.lit(r5(beta[0])).alias("beta0")]
-    cols += [F.lit(r5(beta[i])).alias(f"beta{i}") for i in range(1, d + 1)]
-    cols += [F.lit(r5(math.sqrt(var[i]))).alias(f"se{i}")
-             for i in range(1, d + 1)]
-    cols += [F.lit(r5(beta[i] * beta[i] / var[i])).alias(f"wald_chi2_{i}")
-             for i in range(1, d + 1)]
-    cols += [F.lit(n_obs).cast("long").alias("n"),
-             F.lit(n_pos).cast("long").alias("n_pos"),
-             F.lit(r5(score_norm)).alias("score_norm")]
-    return spark.range(1).select(*cols)
+    rows = _glm_rows(grid, [*xs, "__n", "__p"])
+    fit = fit_newton(glm_moments(rows, d, _logistic_w), [0.0] * (d + 1),
+                     iterations)
+    return _glm_multi_row(grid.sparkSession, d, fit, [
+        ("n", int(sum(r[d] for r in rows))),
+        ("n_pos", int(sum(r[d + 1] for r in rows)))], digits)
 
 
 def breslow_day(
@@ -1998,23 +1874,17 @@ def poisson_newton_multi(
     each covariate, jointly. 1 row (beta0, beta1..betad, se1..sed,
     wald_chi2_1..d, n, y_total, score_norm).
 
-    Same distributed-moments / driver-side-solve factoring as the
-    logistic twin: ONE pass to the joint grid (x1..xd, n, sum_y), then
-    per step one grid aggregate of U = X'(y - n mu) and the upper
-    triangle of X'WX (W = diag(n mu), mu = exp(x . b)) collected as a
-    single bounded row + a numpy (d+1)x(d+1) solve. Starts from
-    (ln(ybar), 0..0) — the saturated-intercept start that keeps exp()
-    in range at any data scale. NULL on singular information. For
-    d = 2 the recurrence is SQL-expressible via Cramer's rule (the
-    ``dx_poisson_multi`` oracle) — and for d <= 2 the driver solve IS
-    that Cramer arithmetic, with round-5 emission (r12 verdict #1).
+    Same driver-side factoring as the logistic twin: ONE pass to the
+    joint grid (x1..xd, n, sum_y), collected once; every step computes
+    U = X'(y - n mu) and the upper triangle of X'WX (W = diag(n mu),
+    mu = exp(x . b)) over the grid and solves by functions/cramer.py's
+    step rule. Starts from (ln(ybar), 0..0) — the saturated-intercept
+    start that keeps exp() in range at any data scale. NULL on
+    singular information or a divergent step. For d = 2 the
+    recurrence is SQL-expressible via Cramer's rule (the
+    ``dx_poisson_multi`` oracle), and the driver solve IS that Cramer
+    arithmetic, with round-5 emission (r12 verdict #1).
     """
-    import math
-
-    import numpy as np
-
-    from clinpy_spark.functions.cramer import solve2, solve3, var3_diag
-
     d = len(x_cols)
     if not 1 <= d <= 8:
         raise ValueError(f"poisson_newton_multi supports 1..8 covariates, got {d}")
@@ -2032,149 +1902,15 @@ def poisson_newton_multi(
         .groupBy(*xs)
         .agg(F.count(F.lit(1)).alias("__n"), F.sum("__y").alias("__sy"))
     )
-    spark = df.sparkSession
-
-    # ONE collect of the bounded joint-cell grid (per-cell __n/__sy
-    # still computed distributed); every Fisher step runs driver-side
-    # over it in the same per-row operand order the distributed
-    # aggregate evaluated — each step previously paid a job + collect
-    # round-trip for a handful of rows. Driver float sums differ from
-    # Spark's partial-agg merge order by ~1e-16; the family emits at
-    # round-5 with a tested >=1e-9 boundary margin (y_total is a sum
-    # of integer-valued doubles — exact in any order).
-    g_rows = [
-        (float(r["__n"]), float(r["__sy"]),
-         *[float(r[x]) for x in xs], int(r["__n"]))
-        for r in grid.collect()
-    ]
-
-    def moments(beta):
-        if not g_rows:
-            return None, None, 0, 0.0
-        u = [0.0] * (d + 1)
-        info = {(a, b): 0.0 for a in range(d + 1) for b in range(a, d + 1)}
-        n_tot, sy_tot = 0, 0.0
-        for row in g_rows:
-            nc, sy = row[0], row[1]
-            eta = float(beta[0])
-            for i in range(d):
-                eta = eta + float(beta[i + 1]) * row[2 + i]
-            mu = math.exp(eta)
-            w = nc * mu
-            r = sy - w
-            xall = [1.0] + [row[2 + i] for i in range(d)]
-            for a in range(d + 1):
-                u[a] += xall[a] * r
-            for a in range(d + 1):
-                for b in range(a, d + 1):
-                    info[(a, b)] += xall[a] * xall[b] * w
-            n_tot += row[2 + d]
-            sy_tot += sy
-        return u, info, n_tot, sy_tot
-
-    m = d + 1
-
-    def step(beta, u, info):
-        """Explicit Cramer for m <= 3 in the oracle's operand order
-        (functions/cramer.py, r12 verdict #1); numpy beyond."""
-        if m == 2:
-            det, d0, d1 = solve2(u[0], u[1],
-                                 info[(0, 0)], info[(0, 1)], info[(1, 1)])
-            if d0 is None:
-                return None
-            return [beta[0] + d0, beta[1] + d1]
-        if m == 3:
-            det, d0, d1, d2 = solve3(
-                u[0], u[1], u[2],
-                info[(0, 0)], info[(0, 1)], info[(0, 2)],
-                info[(1, 1)], info[(1, 2)], info[(2, 2)])
-            if d0 is None:
-                return None
-            return [beta[0] + d0, beta[1] + d1, beta[2] + d2]
-        a = np.zeros((m, m))
-        for (i, j), v in info.items():
-            a[i, j] = a[j, i] = v
-        if np.linalg.det(a) <= 0:
-            return None
-        return list(np.asarray(beta) + np.linalg.solve(a, np.asarray(u)))
-
-    def var_diag(info):
-        if m == 2:
-            det = info[(0, 0)] * info[(1, 1)] - info[(0, 1)] * info[(0, 1)]
-            if not det > 0:
-                return None
-            return [info[(1, 1)] / det, info[(0, 0)] / det]
-        if m == 3:
-            det = (info[(0, 0)] * (info[(1, 1)] * info[(2, 2)]
-                                   - info[(1, 2)] * info[(1, 2)])
-                   - info[(0, 1)] * (info[(0, 1)] * info[(2, 2)]
-                                     - info[(1, 2)] * info[(0, 2)])
-                   + info[(0, 2)] * (info[(0, 1)] * info[(1, 2)]
-                                     - info[(1, 1)] * info[(0, 2)]))
-            if not det > 0:
-                return None
-            return list(var3_diag(
-                info[(0, 0)], info[(0, 1)], info[(0, 2)],
-                info[(1, 1)], info[(1, 2)], info[(2, 2)], det))
-        a = np.zeros((m, m))
-        for (i, j), v in info.items():
-            a[i, j] = a[j, i] = v
-        if np.linalg.det(a) <= 0:
-            return None
-        return list(np.diag(np.linalg.inv(a)))
-
-    def null_result():
-        cols = [F.lit(None).cast("double").alias("beta0")]
-        for pref in ("beta", "se", "wald_chi2_"):
-            cols += [F.lit(None).cast("double").alias(f"{pref}{i}")
-                     for i in range(1, d + 1)]
-        cols += [F.lit(n_obs).cast("long").alias("n"),
-                 F.lit(y_tot).cast("double").alias("y_total"),
-                 F.lit(None).cast("double").alias("score_norm")]
-        return spark.range(1).select(*cols)
-
-    # saturated-intercept start: beta0 = ln(ybar) (0 for an all-zero y)
-    n_obs = sum(r[2 + d] for r in g_rows)
-    y_tot = sum(r[1] for r in g_rows) if g_rows else 0.0
-    beta = [0.0] * m
-    if n_obs == 0:
-        return null_result()
-    if y_tot > 0:
-        # match the oracle's start expression ln(sum(sy)/sum(n)) exactly
-        beta[0] = math.log(y_tot / n_obs)
-    for _ in range(iterations):
-        u, info, n_obs, y_tot = moments(beta)
-        if u is None:
-            return null_result()
-        beta = step(beta, u, info)
-        if beta is None:
-            return null_result()
-    u, info, n_obs, y_tot = moments(beta)
-    var = var_diag(info) if u is not None else None
-    if u is None or var is None:
-        return null_result()
-    score_norm = 0.0
-    for v in u:
-        score_norm = score_norm + v * v
-    score_norm = math.sqrt(score_norm)
-
-    # round-5 emission: the multi-covariate family's hash-determinism
-    # contract (r12 verdict #1, see logistic_newton_multi_from_grid)
-    def r5(x):
-        if digits is None:  # unrounded, for boundary-margin audits
-            return float(x)
-        return round(float(x), digits) + 0.0
-
-    cols = [F.lit(r5(beta[0])).alias("beta0")]
-    cols += [F.lit(r5(beta[i])).alias(f"beta{i}") for i in range(1, d + 1)]
-    cols += [F.lit(r5(math.sqrt(var[i]))).alias(f"se{i}")
-             for i in range(1, d + 1)]
-    cols += [F.lit(r5(beta[i] * beta[i] / var[i])).alias(f"wald_chi2_{i}")
-             for i in range(1, d + 1)]
-    cols += [F.lit(n_obs).cast("long").alias("n"),
-             F.lit(y_tot).cast("double").alias("y_total"),
-             F.lit(r5(score_norm)).alias("score_norm")]
-    return spark.range(1).select(*cols)
+    rows = _glm_rows(grid, [*xs, "__n", "__sy"])
+    n_obs = int(sum(r[d] for r in rows))
+    y_tot = sum((r[d + 1] for r in rows), 0.0)
+    # saturated-intercept start: the oracle's ln(sum(sy)/sum(n)), 0 for
+    # an all-zero y
+    start = [math.log(y_tot / n_obs) if y_tot > 0 else 0.0] + [0.0] * d
+    fit = fit_newton(glm_moments(rows, d, _poisson_w), start, iterations)
+    return _glm_multi_row(df.sparkSession, d, fit,
+                          [("n", n_obs), ("y_total", y_tot)], digits)
 
 
 def fisher_exact_2x2(
@@ -2448,81 +2184,20 @@ def poisson_newton_from_grid(
     """:func:`poisson_newton` from an already-aggregated per-x grid
     (__x, __n, __sy) — streaming-maintainable entry point (the grid
     counters are additive; streaming/glm.py finalize_poisson refits
-    on read)."""
-    import math
-
-    # ONE collect of the bounded per-x grid; the unrolled Newton steps
-    # run driver-side in the same per-row operand order the chained
-    # crossJoin/agg plan evaluated (see logistic_newton_from_grid —
-    # the chained plan spent ~10 tiny stages + unrolled-tree Catalyst
-    # per action on a handful of rows). Emission still goes through
-    # F.round (half-up unchanged); proven bit-identical on all three
-    # fixtures by order-insensitive output hashes.
-    spark = grid.sparkSession
-    g_rows = [
-        (float(r["__x"]), float(r["__n"]), float(r["__sy"]), int(r["__n"]))
-        for r in grid.collect()
-    ]
-    n_tot = sum(r[3] for r in g_rows)
-    sy_tot = sum(r[2] for r in g_rows) if g_rows else None
-
-    def moments(b0, b1):
-        u0 = u1 = i00 = i01 = i11 = 0.0
-        for x, nc, sy, _ in g_rows:
-            mu = math.exp(b0 + b1 * x)
-            w = nc * mu
-            r = sy - w
-            u0 += r
-            u1 += x * r
-            i00 += w
-            i01 += x * w
-            i11 += x * x * w
-        return u0, u1, i00, i01, i11
-
-    if not g_rows:
-        bb = None
-    else:
-        b0 = math.log(sy_tot / n_tot) if sy_tot > 0 else 0.0
-        bb = (b0, 0.0)
-    for _ in range(iterations):
-        if bb is None:
-            break
-        u0, u1, i00, i01, i11 = moments(*bb)
-        det = i00 * i11 - i01 * i01
-        if not det > 0:
-            bb = None
-            break
-        bb = (bb[0] + (i11 * u0 - i01 * u1) / det,
-              bb[1] + (i00 * u1 - i01 * u0) / det)
-    fin = None
-    if bb is not None:
-        _, _, i00, i01, i11 = moments(*bb)
-        det = i00 * i11 - i01 * i01
-        if det > 0:
-            var1 = i00 / det
-            fin = (bb[0], bb[1], math.exp(bb[1]), math.sqrt(var1),
-                   bb[1] * bb[1] / var1)
-    y_out = (F.round(F.lit(sy_tot if sy_tot is not None else 0.0), 6)
-             .alias("y_total"))
-    if fin is None:
-        return spark.range(1).select(
-            F.lit(None).cast("double").alias("beta0"),
-            F.lit(None).cast("double").alias("beta1"),
-            F.lit(None).cast("double").alias("rate_ratio"),
-            F.lit(None).cast("double").alias("se1"),
-            F.lit(None).cast("double").alias("wald_chi2"),
-            F.lit(n_tot).cast("long").alias("n"),
-            y_out,
-        )
-    return spark.range(1).select(
-        F.round(F.lit(fin[0]), 6).alias("beta0"),
-        F.round(F.lit(fin[1]), 6).alias("beta1"),
-        F.round(F.lit(fin[2]), 6).alias("rate_ratio"),
-        F.round(F.lit(fin[3]), 6).alias("se1"),
-        F.round(F.lit(fin[4]), 6).alias("wald_chi2"),
-        F.lit(n_tot).cast("long").alias("n"),
-        y_out,
-    )
+    on read). The d = 1 case of the shared GLM core, emitted through
+    ``F.round`` (see :func:`logistic_newton_from_grid`)."""
+    rows = _glm_rows(grid, ["__x", "__n", "__sy"])
+    n_tot = int(sum(r[1] for r in rows))
+    sy_tot = sum((r[2] for r in rows), 0.0)
+    start = [math.log(sy_tot / n_tot) if sy_tot > 0 else 0.0, 0.0]
+    fit = fit_newton(glm_moments(rows, 1, _poisson_w), start, iterations)
+    b0, b1, se1, wald = _slope_stats(fit)
+    return _row6(grid.sparkSession, [
+        ("beta0", b0), ("beta1", b1),
+        ("rate_ratio", None if fit is None else _exp(b1)),
+        ("se1", se1), ("wald_chi2", wald),
+        F.lit(n_tot).cast("long").alias("n"), ("y_total", sy_tot),
+    ])
 
 
 def negbin_newton(
@@ -2539,9 +2214,10 @@ def negbin_newton(
     significance. 1 row (beta0, beta1, rate_ratio, se1, wald_chi2,
     alpha, n, y_total, score_norm).
 
-    Two-stage moment/Fisher chain, every step a grid-sized aggregate:
-    (1) fit Poisson by ``iterations`` Newton steps (mu0); (2) estimate
-    the dispersion by the Cameron-Trivedi moment equation
+    Two-stage moment/Fisher chain over the per-x grid, collected once
+    and fitted on the driver: (1) fit Poisson by ``iterations`` Newton
+    steps (mu0); (2) estimate the dispersion by the Cameron-Trivedi
+    moment equation
         alpha = sum[(y - mu0)^2 - mu0] / sum(mu0^2)
     (clamped at 0 — per-cell sums need the y^2 counter, so the grid is
     (x, n, sy, syy)); (3) refit by ``iterations`` Fisher-scoring steps
@@ -2553,7 +2229,7 @@ def negbin_newton(
     collapses the whole chain to Poisson (property-tested). The
     recurrence is a closed deterministic function of the grid, so the
     ``dx_negbin`` oracle replays the identical chain; NULL
-    coefficients on singular information.
+    coefficients on singular information or a divergent step.
     """
     grid = (
         df.select(
@@ -2578,113 +2254,37 @@ def negbin_newton_from_grid(
     (__x, __n, __sy, __syy) — all three counters are additive (the y^2
     sum is what the moment dispersion needs), so a streaming fold
     maintains them and this refits the NB2 chain on read
-    (streaming/glm.py finalize_negbin)."""
-    import math
-
-    # ONE collect of the bounded per-x grid; the Poisson stage, the
-    # moment-dispersion stage and the NB2 Fisher stage all iterate
-    # driver-side in the chained plan's per-row operand order (the
-    # previous form chained ~10 crossJoin/agg stages into one plan —
-    # see logistic_newton_from_grid). Emission still goes through
-    # F.round; proven bit-identical on all three fixtures.
-    spark = grid.sparkSession
-    g_rows = [
-        (float(r["__x"]), float(r["__n"]), float(r["__sy"]),
-         float(r["__syy"]), int(r["__n"]))
-        for r in grid.collect()
-    ]
-    n_tot = sum(r[4] for r in g_rows)
-    sy_tot = sum(r[2] for r in g_rows) if g_rows else None
-
-    def newton(bb, alpha, steps):
-        """alpha=None -> Poisson weights; else NB2 weights."""
-        for _ in range(steps):
-            if bb is None:
-                return None
-            u0 = u1 = i00 = i01 = i11 = 0.0
-            for x, nc, sy, _, _ in g_rows:
-                mu = math.exp(bb[0] + bb[1] * x)
-                if alpha is None:
-                    w = nc * mu
-                    r = sy - nc * mu
-                else:
-                    w = nc * mu / (1 + alpha * mu)
-                    r = (sy - nc * mu) / (1 + alpha * mu)
-                u0 += r
-                u1 += x * r
-                i00 += w
-                i01 += x * w
-                i11 += x * x * w
-            det = i00 * i11 - i01 * i01
-            if not det > 0:
-                return None
-            bb = (bb[0] + (i11 * u0 - i01 * u1) / det,
-                  bb[1] + (i00 * u1 - i01 * u0) / det)
-        return bb
-
+    (streaming/glm.py finalize_negbin). Two ``fit_newton`` calls over
+    the collected grid (Poisson weights, then NB2 weights) around the
+    moment-dispersion pass, emitted through ``F.round``."""
+    rows = _glm_rows(grid, ["__x", "__n", "__sy", "__syy"])
+    n_tot = int(sum(r[1] for r in rows))
+    sy_tot = sum((r[2] for r in rows), 0.0)
     # stage 1: Poisson from the saturated-intercept start
-    if not g_rows:
-        bb = None
-    else:
-        bb = (math.log(sy_tot / n_tot) if sy_tot > 0 else 0.0, 0.0)
-    bb = newton(bb, None, iterations)
-    # stage 2: moment dispersion at the Poisson fit — per cell,
-    # sum((y - mu)^2) = syy - 2 mu sy + n mu^2 (mu constant within x)
-    alpha = 0.0
-    if bb is not None:
-        num = den = 0.0
-        for x, nc, sy, syy, _ in g_rows:
-            mu = math.exp(bb[0] + bb[1] * x)
+    start = [math.log(sy_tot / n_tot) if sy_tot > 0 else 0.0, 0.0]
+    fit = fit_newton(glm_moments(rows, 1, _poisson_w), start, iterations)
+    if fit is not None:
+        # stage 2: moment dispersion at the Poisson fit — per cell,
+        # sum((y - mu)^2) = syy - 2 mu sy + n mu^2 (mu constant within x)
+        (b0, b1), num, den = fit[0], 0.0, 0.0
+        for x, nc, sy, syy in rows:
+            mu = _exp(b0 + b1 * x)
             pearson = syy - 2 * mu * sy + nc * mu * mu
             num += pearson - nc * mu
             den += nc * mu * mu
-        if den > 0 and num > 0:
-            alpha = num / den
-    # stage 3: NB2 Fisher scoring from the Poisson solution
-    bb = newton(bb, alpha, iterations)
-    fin = None
-    if bb is not None:
-        u0 = u1 = i00 = i01 = i11 = 0.0
-        for x, nc, sy, _, _ in g_rows:
-            mu = math.exp(bb[0] + bb[1] * x)
-            w = nc * mu / (1 + alpha * mu)
-            r = (sy - nc * mu) / (1 + alpha * mu)
-            u0 += r
-            u1 += x * r
-            i00 += w
-            i01 += x * w
-            i11 += x * x * w
-        det = i00 * i11 - i01 * i01
-        if det > 0:
-            var1 = i00 / det
-            fin = (bb[0], bb[1], math.exp(bb[1]), math.sqrt(var1),
-                   bb[1] * bb[1] / var1, alpha,
-                   math.sqrt(u0 * u0 + u1 * u1))
-    y_out = (F.round(F.lit(sy_tot if sy_tot is not None else 0.0), 6)
-             .alias("y_total"))
-    if fin is None:
-        return spark.range(1).select(
-            F.lit(None).cast("double").alias("beta0"),
-            F.lit(None).cast("double").alias("beta1"),
-            F.lit(None).cast("double").alias("rate_ratio"),
-            F.lit(None).cast("double").alias("se1"),
-            F.lit(None).cast("double").alias("wald_chi2"),
-            F.lit(None).cast("double").alias("alpha"),
-            F.lit(n_tot).cast("long").alias("n"),
-            y_out,
-            F.lit(None).cast("double").alias("score_norm"),
-        )
-    return spark.range(1).select(
-        F.round(F.lit(fin[0]), 6).alias("beta0"),
-        F.round(F.lit(fin[1]), 6).alias("beta1"),
-        F.round(F.lit(fin[2]), 6).alias("rate_ratio"),
-        F.round(F.lit(fin[3]), 6).alias("se1"),
-        F.round(F.lit(fin[4]), 6).alias("wald_chi2"),
-        F.round(F.lit(fin[5]), 6).alias("alpha"),
-        F.lit(n_tot).cast("long").alias("n"),
-        y_out,
-        F.round(F.lit(fin[6]), 6).alias("score_norm"),
-    )
+        alpha = num / den if den > 0 and num > 0 else 0.0
+        # stage 3: NB2 Fisher scoring from the Poisson solution
+        fit = fit_newton(glm_moments(rows, 1, _nb2_w(alpha)), fit[0],
+                         iterations)
+    b0, b1, se1, wald = _slope_stats(fit)
+    ok = fit is not None
+    return _row6(grid.sparkSession, [
+        ("beta0", b0), ("beta1", b1),
+        ("rate_ratio", _exp(b1) if ok else None),
+        ("se1", se1), ("wald_chi2", wald), ("alpha", alpha if ok else None),
+        F.lit(n_tot).cast("long").alias("n"), ("y_total", sy_tot),
+        ("score_norm", score_norm(fit[1]) if ok else None),
+    ])
 
 
 def haplotype_em(
@@ -3119,24 +2719,19 @@ def multinomial_newton(
     beta0_c, beta1_c, se_c, wald_chi2_c per class, n, score_norm).
     The reference class is the FIRST label in ascending sort order.
 
-    Same distributed-moments / driver-solve factoring as
-    ``logistic_newton_multi``: ONE pass collapses the cohort to the
-    joint (x, per-class count) grid; each Newton step is one
-    grid-sized aggregate (per-class scores U_c and the 2(k-1) x 2(k-1)
-    block information with cross terms -n p_c p_d) collected as a
-    single bounded row plus a driver-side Cramer solve.  The solve and
-    the inverse diagonal are evaluated by functions/cramer.py's
-    GENERATED term enumeration — the exact sequence the
-    ``dx_multinomial`` oracle's Leibniz CTEs encode at k = 3 — and all
+    Same driver-side factoring as ``logistic_newton_multi``: ONE pass
+    collapses the cohort to the joint (x, per-class count) grid,
+    collected once; each Newton step computes the per-class scores U_c
+    and the 2(k-1) x 2(k-1) block information (cross terms
+    -n p_c p_d) over it and solves by functions/cramer.py's step rule.
+    At k = 3 (m = 4) that is the GENERATED Leibniz term enumeration
+    the ``dx_multinomial`` oracle's CTEs encode; from k = 4 (m >= 6)
+    it is numpy, so ``max_classes = 8`` (14 x 14) stays fast.  All
     statistics emit at round-5, the multi family's hash-determinism
     contract.  k = 2 recovers ``logistic_newton_multi`` with one
     covariate (property test; softmax vs sigmoid differ only in float
     path, ~1e-12).  NULL statistics on singular information.
     """
-    import math
-
-    from clinpy_spark.functions.cramer import inv_diag_py, solve_n_py
-
     xv = F.col(x_col).cast("double")
     lab = F.col(label_col).cast("string")
     counts = (
@@ -3161,18 +2756,10 @@ def multinomial_newton_from_counts(
     streaming fold maintains it per micro-batch and this refits the
     softmax MLE on read (streaming/glm.py finalize_multinomial), the
     same fold/recompute-on-read architecture as the other fitters."""
-    import math
-
-    from clinpy_spark.functions.cramer import inv_diag_py, solve_n_py
-
     # ONE collect of the bounded-by-contract (x, label, count) cell
-    # table; labels, the per-x grid (exact integer sums) and every
-    # Fisher step run driver-side over it, each row evaluated in the
-    # oracle CTE's operand order. Previously each of the 5 steps paid
-    # a full job + collect round-trip to aggregate a handful of grid
-    # rows (~0.4s/step measured). Driver float sums differ from
-    # Spark's partial-agg merge order by ~1e-16; the family emits at
-    # round-5 with a tested >=1e-9 boundary margin.
+    # table; labels, the per-x grid (exact integer sums, sorted by x)
+    # and every Fisher step run driver-side over it, each row
+    # evaluated in the oracle CTE's operand order.
     c_rows = counts.collect()
     labels = sorted({r["__y"] for r in c_rows})
     if len(labels) < 2:
@@ -3192,26 +2779,24 @@ def multinomial_newton_from_counts(
         j = alt_ix.get(r["__y"])
         if j is not None:
             cell[j] += int(r["__n"])
-    g_rows = [(float(x), *cnts) for x, cnts in by_x.items()]
-    spark = counts.sparkSession
+    g_rows = sorted((float(x), *cnts) for x, cnts in by_x.items())
+    n_obs = sum(row[1] for row in g_rows)
     m = 2 * (k - 1)
 
     def moments(beta):
-        """One driver pass over the collected grid -> (U, block info,
-        n) at beta, mirroring the oracle CTE text operand-for-operand."""
+        """One driver pass over the collected grid -> (U, block info)
+        at beta, mirroring the oracle CTE text operand-for-operand."""
         if not g_rows:
-            return None, None, 0
+            return None
         u = [0.0] * m
         hs = [[0.0] * 3 for _ in range(k - 1)]
         gs = {(j, lx): [0.0] * 3
               for j in range(k - 1) for lx in range(j + 1, k - 1)}
-        n_tot = 0
         for row in g_rows:
             x, nc = row[0], float(row[1])
             es, den = [], 1.0
             for j in range(k - 1):
-                e = math.exp(float(beta[2 * j])
-                             + float(beta[2 * j + 1]) * x)
+                e = _exp(float(beta[2 * j]) + float(beta[2 * j + 1]) * x)
                 es.append(e)
                 den = den + e
             ps = [e / den for e in es]
@@ -3230,7 +2815,6 @@ def multinomial_newton_from_counts(
                     gs[(j, lx)][0] += g
                     gs[(j, lx)][1] += x * g
                     gs[(j, lx)][2] += x * x * g
-            n_tot += row[1]
         info = {}
         for j in range(k - 1):
             info[(2 * j, 2 * j)] = hs[j][0]
@@ -3242,62 +2826,27 @@ def multinomial_newton_from_counts(
                 info[(2 * j, 2 * lx + 1)] = -gs[(j, lx)][1]
                 info[(2 * j + 1, 2 * lx)] = -gs[(j, lx)][1]
                 info[(2 * j + 1, 2 * lx + 1)] = -gs[(j, lx)][2]
-        return u, info, n_tot
+        return u, info
 
-    def r5(v):
-        if digits is None:
-            return float(v)
-        return round(float(v), digits) + 0.0
-
-    def null_result(n_obs):
-        cols = [F.lit(ref).alias("class_ref")]
-        for j, c in enumerate(alts, 1):
-            cols.append(F.lit(c).alias(f"class_{j}"))
+    fit = fit_newton(moments, [0.0] * m, iterations)
+    names = [f"beta{i}_{j}" for j in range(1, k) for i in (0, 1)]
+    names += [f"{s}_{j}" for j in range(1, k) for s in ("se", "wald_chi2")]
+    names.append("score_norm")
+    vals = [None] * len(names)
+    if fit is not None:
+        beta, u, var = fit
+        vals = list(beta)
         for j in range(1, k):
-            cols += [F.lit(None).cast("double").alias(f"beta0_{j}"),
-                     F.lit(None).cast("double").alias(f"beta1_{j}")]
-        for j in range(1, k):
-            cols += [F.lit(None).cast("double").alias(f"se_{j}"),
-                     F.lit(None).cast("double").alias(f"wald_chi2_{j}")]
-        cols += [F.lit(n_obs).cast("long").alias("n"),
-                 F.lit(None).cast("double").alias("score_norm")]
-        return spark.range(1).select(*cols)
-
-    beta = [0.0] * m
-    n_obs = 0
-    for _ in range(iterations):
-        u, info, n_obs = moments(beta)
-        if u is None:
-            return null_result(0)
-        det, deltas = solve_n_py(u, info, m)
-        if deltas is None:
-            return null_result(n_obs)
-        beta = [beta[i] + deltas[i] for i in range(m)]
-    u, info, n_obs = moments(beta)
-    if u is None:
-        return null_result(0)
-    det, var = inv_diag_py(info, m)
-    if var is None:
-        return null_result(n_obs)
-    score_norm = 0.0
-    for v in u:
-        score_norm = score_norm + v * v
-    score_norm = math.sqrt(score_norm)
-
+            vj, bj = var[2 * j - 1], beta[2 * j - 1]
+            vals += [math.sqrt(vj), bj * bj / vj]
+        vals = [_round(v, digits) for v in vals + [score_norm(u)]]
     cols = [F.lit(ref).alias("class_ref")]
-    for j, c in enumerate(alts, 1):
-        cols.append(F.lit(c).alias(f"class_{j}"))
-    for j in range(1, k):
-        cols += [F.lit(r5(beta[2 * (j - 1)])).alias(f"beta0_{j}"),
-                 F.lit(r5(beta[2 * (j - 1) + 1])).alias(f"beta1_{j}")]
-    for j in range(1, k):
-        vj = var[2 * (j - 1) + 1]
-        bj = beta[2 * (j - 1) + 1]
-        cols += [F.lit(r5(math.sqrt(vj))).alias(f"se_{j}"),
-                 F.lit(r5(bj * bj / vj)).alias(f"wald_chi2_{j}")]
+    cols += [F.lit(c).alias(f"class_{j}") for j, c in enumerate(alts, 1)]
+    cols += [F.lit(v).cast("double").alias(nm)
+             for nm, v in zip(names[:-1], vals[:-1])]
     cols += [F.lit(n_obs).cast("long").alias("n"),
-             F.lit(r5(score_norm)).alias("score_norm")]
-    return spark.range(1).select(*cols)
+             F.lit(vals[-1]).cast("double").alias("score_norm")]
+    return counts.sparkSession.range(1).select(*cols)
 
 
 def ordinal_newton(
@@ -3320,18 +2869,18 @@ def ordinal_newton(
 
     Fisher-scoring steps from the marginal-cumulative-logit start
     (theta_j0 = logit of the empirical P(Y <= j), beta0 = 0): per step
-    ONE grid-sized aggregate of the score and expected information —
-    cell probabilities p_j = gamma_j - gamma_{j-1}, derivative weights
-    g_j = gamma_j (1 - gamma_j) — collected as a single bounded row,
-    then a driver-side Cramer solve in the oracle's exact operand
-    order (functions/cramer.py; round-5 emission — the multi family's
+    one driver pass over the collected grid for the score and expected
+    information — cell probabilities p_j = gamma_j - gamma_{j-1},
+    derivative weights g_j = gamma_j (1 - gamma_j) — then a solve by
+    functions/cramer.py's step rule (Cramer in the oracle's exact
+    operand order up to k = 4; round-5 emission — the multi family's
     hash-determinism contract). A step that drives any cell
     probability to <= 0 (theta crossing) or a non-PD information emits
     NULL statistics, same as a singular grid.
 
     Scale shape: ONE pass collapses the cohort to the (x, per-level
-    count) grid; every Fisher step is grid-sized; the cohort is never
-    rescanned. The ``dx_ordinal`` oracle replays the identical
+    count) grid, collected once; every Fisher step is grid-sized; the
+    cohort is never rescanned. The ``dx_ordinal`` oracle replays the identical
     recurrence at k = 3 as chained 3x3 cofactor-Cramer CTEs.
     """
     xv = F.col(x_col).cast("double")
@@ -3358,10 +2907,6 @@ def ordinal_newton_from_counts(
     with ``multinomial_newton_from_counts``, so ONE streaming count
     fold serves both the nominal and the ordinal reader
     (streaming/glm.py finalize_ordinal)."""
-    import math
-
-    from clinpy_spark.functions.cramer import solve3, solve_n_py, var3_diag
-
     k = len(levels)
     if k < 2:
         raise ValueError("ordinal_newton needs >= 2 ordered levels")
@@ -3370,69 +2915,64 @@ def ordinal_newton_from_counts(
     m = k  # k-1 thresholds + 1 slope
     lvl = [str(v) for v in levels]
     counts = counts.filter(F.col("__y").isin(lvl))
+    n_cols = [f"__n{j}" for j in range(1, k)]
     grid = counts.groupBy("__x").agg(
         F.sum("__n").alias("__n"),
         *[F.sum(F.when(F.col("__y") == F.lit(v), F.col("__n"))
-                .otherwise(0)).alias(f"__n{j}")
-          for j, v in enumerate(lvl[:-1], 1)],
+                .otherwise(0)).alias(c)
+          for c, v in zip(n_cols, lvl[:-1])],
     )
-    spark = counts.sparkSession
-
     # ONE distributed pass collapses the cohort to the bounded-by-
-    # contract (x, per-level count) grid; the grid is collected ONCE
-    # and every Fisher step runs driver-side over it in the same
-    # per-row operand order the distributed aggregate evaluated.
-    # Rationale (same as fit_centroids): each step previously paid a
-    # full job + collect round-trip to aggregate a handful of rows —
-    # measured ~0.4s/step, 2.4s of the 3.1s query at 6 steps. Driver
-    # float sums differ from Spark's partial-agg merge order by
-    # ~1e-16; the family emits at round-5 with a tested >=1e-9
-    # boundary margin, so no emitted digit can move.
-    g_rows = [r.asDict() for r in grid.collect()]
-    n_obs = sum(int(r["__n"] or 0) for r in g_rows)
+    # contract (x, per-level count) grid; the grid is collected ONCE,
+    # sorted by (x, counts), and every Fisher step runs driver-side
+    # over it in the oracle CTE's per-row operand order.
+    g_rows = sorted((float(r["__x"]), int(r["__n"] or 0),
+                     *[int(r[c] or 0) for c in n_cols])
+                    for r in grid.collect())
+    n_obs = sum(r[1] for r in g_rows)
 
-    def null_result():
-        cols = [F.lit(None).cast("double").alias(f"theta_{j}")
-                for j in range(1, k)]
-        cols += [F.lit(None).cast("double").alias("beta"),
-                 F.lit(None).cast("double").alias("or_beta"),
-                 F.lit(None).cast("double").alias("se_beta"),
-                 F.lit(None).cast("double").alias("wald_chi2_beta"),
-                 F.lit(n_obs).cast("long").alias("n"),
-                 F.lit(None).cast("double").alias("score_norm")]
-        return spark.range(1).select(*cols)
+    def emit(fit):
+        names = [f"theta_{j}" for j in range(1, k)]
+        names += ["beta", "or_beta", "se_beta", "wald_chi2_beta"]
+        vals = [None] * (k + 4)
+        if fit is not None:
+            par, u, var = fit
+            b, vb = par[-1], var[-1]
+            vals = [_round(v, digits) for v in (
+                *par, _exp(b), math.sqrt(vb), b * b / vb, score_norm(u))]
+        return _literal_row(counts.sparkSession, [
+            *zip(names, vals), ("n", n_obs), ("score_norm", vals[-1])])
 
     if n_obs == 0:
-        return null_result()
+        return emit(None)
     cum = 0
     theta = []
     for j in range(1, k):
-        cum += sum(int(r[f"__n{j}"] or 0) for r in g_rows)
+        cum += sum(r[1 + j] for r in g_rows)
         if not 0 < cum < n_obs:
-            return null_result()  # empty cumulative class: unidentifiable
+            return emit(None)  # empty cumulative class: unidentifiable
         theta.append(math.log(cum / (n_obs - cum)))
-    beta = theta + [0.0]  # params: theta_1..theta_{k-1}, slope last
 
     def moments(par):
-        """One driver pass over the collected grid -> (U, info dict,
-        pmin), each row evaluated in the oracle CTE's operand order
-        (k = 3 text; general k mirrors the same per-level terms)."""
+        """One driver pass over the collected grid -> (U, info dict),
+        each row evaluated in the oracle CTE's operand order (k = 3
+        text; general k mirrors the same per-level terms); None when a
+        step drove any cell probability to <= 0 (theta crossing)."""
         th, b = par[:-1], par[-1]
         u = [0.0] * m
         info = {(r, s): 0.0 for r in range(m) for s in range(r, m)}
         pmin = None
         for row in g_rows:
-            x = float(row["__x"])
-            nc = float(row["__n"])
+            x, nc = row[0], float(row[1])
             gam = [0.0] + [
-                1 / (1 + math.exp(-(float(th[j]) + float(b) * x)))
+                1 / (1 + _exp(-(float(th[j]) + float(b) * x)))
                 for j in range(k - 1)
             ] + [1.0]
             g = [0.0] + [gam[j] * (1 - gam[j]) for j in range(1, k)] \
                 + [0.0]
             p = [gam[j] - gam[j - 1] for j in range(1, k + 1)]  # p[0]=p_1
-            ns = [int(row[f"__n{j}"]) for j in range(1, k)]
-            ns.append(int(row["__n"]) - sum(ns))  # top level count
+            ns = list(row[2:])
+            ns.append(row[1] - sum(ns))  # top level count
             # score: thresholds then slope
             for r in range(1, k):
                 u[r - 1] += (ns[r - 1] * (g[r] / p[r - 1])
@@ -3459,64 +2999,10 @@ def ordinal_newton_from_counts(
                         info[(r, s)] += nc * term
             rp = min(p)
             pmin = rp if pmin is None else min(pmin, rp)
-        return u, info, (float(pmin) if pmin is not None else 0.0)
+        return (u, info) if pmin is not None and pmin > 0 else None
 
-    for _ in range(iterations):
-        u, info, pmin = moments(beta)
-        if not pmin > 0:
-            return null_result()
-        if m == 3:
-            det, d0, d1, d2 = solve3(
-                u[0], u[1], u[2],
-                info[(0, 0)], info[(0, 1)], info[(0, 2)],
-                info[(1, 1)], info[(1, 2)], info[(2, 2)])
-            deltas = None if d0 is None else [d0, d1, d2]
-        else:
-            det, deltas = solve_n_py(u, info, m)
-        if deltas is None:
-            return null_result()
-        beta = [beta[i] + deltas[i] for i in range(m)]
-    u, info, pmin = moments(beta)
-    if not pmin > 0:
-        return null_result()
-    if m == 3:
-        det = (info[(0, 0)] * (info[(1, 1)] * info[(2, 2)]
-                               - info[(1, 2)] * info[(1, 2)])
-               - info[(0, 1)] * (info[(0, 1)] * info[(2, 2)]
-                                 - info[(1, 2)] * info[(0, 2)])
-               + info[(0, 2)] * (info[(0, 1)] * info[(1, 2)]
-                                 - info[(1, 1)] * info[(0, 2)]))
-        if not det > 0:
-            return null_result()
-        var_b = var3_diag(
-            info[(0, 0)], info[(0, 1)], info[(0, 2)],
-            info[(1, 1)], info[(1, 2)], info[(2, 2)], det)[2]
-    else:
-        from clinpy_spark.functions.cramer import inv_diag_py
-
-        det, diag = inv_diag_py(info, m)
-        if diag is None:
-            return null_result()
-        var_b = diag[m - 1]
-    score_norm = 0.0
-    for v in u:
-        score_norm = score_norm + v * v
-    score_norm = math.sqrt(score_norm)
-
-    def r5(v):
-        if digits is None:
-            return float(v)
-        return round(float(v), digits) + 0.0
-
-    b_hat = beta[m - 1]
-    cols = [F.lit(r5(beta[j - 1])).alias(f"theta_{j}") for j in range(1, k)]
-    cols += [F.lit(r5(b_hat)).alias("beta"),
-             F.lit(r5(math.exp(b_hat))).alias("or_beta"),
-             F.lit(r5(math.sqrt(var_b))).alias("se_beta"),
-             F.lit(r5(b_hat * b_hat / var_b)).alias("wald_chi2_beta"),
-             F.lit(n_obs).cast("long").alias("n"),
-             F.lit(r5(score_norm)).alias("score_norm")]
-    return spark.range(1).select(*cols)
+    # params: theta_1..theta_{k-1}, slope last
+    return emit(fit_newton(moments, theta + [0.0], iterations))
 
 
 def _ord_deriv_py(r: int, j: int, g: list, x: float, k: int):
@@ -4076,13 +3562,14 @@ def poisson_rate_newton(
     epidemiology models events per unit FOLLOW-UP (mu_i = pt_i *
     exp(b0 + b1 x_i)), and with the offset the sufficient statistic
     per x-cell is just (sum y, sum pt) — the same bounded grid with
-    the cell count replaced by the cell's person-time, so every Newton
-    step is one grid-sized aggregate. For a binary x the MLE is
-    closed-form and ``rate_ratio`` equals
+    the cell count replaced by the cell's person-time as the Poisson
+    exposure, collected once and fitted on the driver by the shared
+    GLM core. For a binary x the MLE is closed-form and
+    ``rate_ratio`` equals
     :func:`clinpy_spark.operators.survival.incidence_rate`'s IRR
     exactly (property-tested). Start (ln(sum y / sum pt), 0); NULL on
-    singular information. Rows with missing or non-positive follow-up
-    are dropped.
+    singular information or a divergent step. Rows with missing or
+    non-positive follow-up are dropped.
     """
     grid = (
         df.select(
@@ -4098,64 +3585,17 @@ def poisson_rate_newton(
             F.sum("__y").alias("__sy"),
             F.sum("__pt").alias("__spt"),
         )
-        .localCheckpoint(eager=False)
     )
-    beta = grid.agg(
-        F.when(
-            F.sum("__sy") > 0,
-            F.log(F.sum("__sy") / F.sum("__spt")),
-        ).otherwise(F.lit(0.0)).alias("b0"),
-        F.lit(0.0).alias("b1"),
-    )
-    for _ in range(iterations):
-        j = grid.crossJoin(F.broadcast(beta))
-        w = F.col("__spt") * F.exp(F.col("b0") + F.col("b1") * F.col("__x"))
-        step = j.agg(
-            F.max("b0").alias("b0"), F.max("b1").alias("b1"),
-            F.sum(F.col("__sy") - w).alias("u0"),
-            F.sum(F.col("__x") * (F.col("__sy") - w)).alias("u1"),
-            F.sum(w).alias("i00"),
-            F.sum(F.col("__x") * w).alias("i01"),
-            F.sum(F.col("__x") * F.col("__x") * w).alias("i11"),
-        )
-        det = F.col("i00") * F.col("i11") - F.col("i01") * F.col("i01")
-        beta = step.select(
-            F.when(
-                det > 0,
-                F.col("b0")
-                + (F.col("i11") * F.col("u0") - F.col("i01") * F.col("u1"))
-                / det,
-            ).alias("b0"),
-            F.when(
-                det > 0,
-                F.col("b1")
-                + (F.col("i00") * F.col("u1") - F.col("i01") * F.col("u0"))
-                / det,
-            ).alias("b1"),
-        )
-    fin = grid.crossJoin(F.broadcast(beta))
-    w = F.col("__spt") * F.exp(F.col("b0") + F.col("b1") * F.col("__x"))
-    stats = fin.agg(
-        F.max("b0").alias("b0"), F.max("b1").alias("b1"),
-        F.sum(w).alias("i00"),
-        F.sum(F.col("__x") * w).alias("i01"),
-        F.sum(F.col("__x") * F.col("__x") * w).alias("i11"),
-        F.sum("__n").alias("n"),
-        F.sum("__sy").alias("y_total"),
-        F.sum("__spt").alias("ptime_total"),
-    )
-    det = F.col("i00") * F.col("i11") - F.col("i01") * F.col("i01")
-    ok = F.col("b0").isNotNull() & F.col("b1").isNotNull() & (det > 0)
-    var1 = F.col("i00") / det
-    return stats.select(
-        F.when(ok, F.round("b0", 6) + 0.0).alias("beta0"),
-        F.when(ok, F.round("b1", 6) + 0.0).alias("beta1"),
-        F.when(ok, F.round(F.exp("b1"), 6)).alias("rate_ratio"),
-        F.when(ok, F.round(F.sqrt(var1), 6)).alias("se1"),
-        F.when(ok, F.round(F.col("b1") * F.col("b1") / var1, 6))
-        .alias("wald_chi2"),
-        F.coalesce("n", F.lit(0)).cast("long").alias("n"),
-        F.round(F.coalesce("y_total", F.lit(0.0)), 6).alias("y_total"),
-        F.round(F.coalesce("ptime_total", F.lit(0.0)), 6)
-        .alias("ptime_total"),
-    )
+    rows = _glm_rows(grid, ["__x", "__spt", "__sy", "__n"])
+    pt_tot = sum((r[1] for r in rows), 0.0)
+    sy_tot = sum((r[2] for r in rows), 0.0)
+    start = [math.log(sy_tot / pt_tot) if sy_tot > 0 else 0.0, 0.0]
+    fit = fit_newton(glm_moments(rows, 1, _poisson_w), start, iterations)
+    b0, b1, se1, wald = _slope_stats(fit)
+    return _row6(df.sparkSession, [
+        ("beta0", b0), ("beta1", b1),
+        ("rate_ratio", None if fit is None else _exp(b1)),
+        ("se1", se1), ("wald_chi2", wald),
+        F.lit(int(sum(r[3] for r in rows))).cast("long").alias("n"),
+        ("y_total", sy_tot), ("ptime_total", pt_tot),
+    ])

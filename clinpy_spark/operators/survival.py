@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from clinpy_spark.functions.cramer import (
+    _exp, _literal_row, _round, fit_newton, score_norm)
 from clinpy_spark.session import collect_bounded
 
 # Cap on per-event-time grid rows the Newton fitters may pull to the
@@ -41,42 +43,6 @@ from clinpy_spark.session import collect_bounded
 # grid. 100k rows of 4-8 numerics is ~a few MB — far under any
 # maxResultSize — while every declared fixture's grid is ~1.5k rows.
 _GRID_DRIVER_MAX = 100_000
-
-
-def _literal_row(spark, cols: list[tuple[str, object]]) -> DataFrame:
-    """1-row DataFrame of driver-computed (name, value) columns: an int
-    is a BIGINT, a float or None a DOUBLE. One ``selectExpr`` parsed on
-    the JVM instead of a Py4J round trip per ``F.lit`` column; a double
-    travels as its shortest round-trip repr, so it parses back to the
-    same bits (nan and inf included)."""
-    from numbers import Integral
-
-    exprs = []
-    for name, v in cols:
-        if isinstance(v, Integral):
-            exprs.append(f"CAST({int(v)} AS BIGINT) AS `{name}`")
-        elif v is None:
-            exprs.append(f"CAST(NULL AS DOUBLE) AS `{name}`")
-        else:
-            exprs.append(f"CAST('{float(v)!r}' AS DOUBLE) AS `{name}`")
-    return spark.range(1).selectExpr(*exprs)
-
-
-def _exp(v: float) -> float:
-    """``math.exp`` that overflows to inf like Spark's ``F.exp``, so a
-    divergent fit propagates inf -> NaN moments -> NULL emission
-    instead of raising on the driver."""
-    try:
-        return math.exp(v)
-    except OverflowError:
-        return math.inf
-
-
-def _round(x, digits: int | None):
-    """Driver-side emission rounding: ``round(x, digits) + 0.0`` (the
-    ``+ 0.0`` folds -0.0), or ``x`` unrounded when ``digits`` is None
-    (the boundary-margin audits)."""
-    return float(x) if digits is None else round(float(x), digits) + 0.0
 
 
 def _round_col(c, digits: int | None):
@@ -1121,22 +1087,20 @@ def cox_newton_multi(
         S2_ab(t) = sum_c n_c(t) x_ca x_cb e^{x_c . b}
         U_a   = sum_t [da(t) - d(t) S1_a/S0]
         I_ab  = sum_t d(t) [S2_ab/S0 - (S1_a/S0)(S1_b/S0)]
-    so each Newton step is ONE grid-sized aggregate collected as a
-    single bounded row (d + d(d+1)/2 doubles) and a driver-side dxd
-    solve — the same distributed-moments/local-solve factoring as
-    ``logistic_newton_multi``; the cohort itself is scanned once,
-    never per-iteration. NULL on singular information (collinear/
-    constant covariates, no events). ``score_norm`` is the final ||U||.
-    For d <= 3 the driver solve is EXPLICIT Cramer arithmetic in the
-    oracle's own operand order (functions/cramer.py) and all statistics
-    emit at round-5 — the hash-determinism contract of the multi-
-    covariate family (r12 verdict #1: LAPACK-vs-Cramer drift plus
+    so each Newton step is one pass over the grid — on the driver when
+    the grid fits ``_GRID_DRIVER_MAX``, else ONE grid-sized aggregate
+    collected as a single bounded row (d + d(d+1)/2 doubles) — and a
+    dxd solve by functions/cramer.py's step rule; the cohort itself is
+    scanned once, never per-iteration. NULL on singular information
+    (collinear/constant covariates, no events, a divergent step).
+    ``score_norm`` is the final ||U||. For d <= 4 the solve is
+    EXPLICIT Cramer arithmetic (d <= 3 in the oracle's own operand
+    order) and all statistics emit at round-5 — the hash-determinism
+    contract of the multi-covariate family (r12 verdict #1: LAPACK-vs-Cramer drift plus
     partition-order double sums flipped a round-6 digit); the
     ``surv_cox_multi`` (d=2) and ``surv_cox_multi3`` (d=3) oracles
     replay the identical recurrence as chained Cramer CTEs.
     """
-    import numpy as np
-
     d = len(x_cols)
     if not 1 <= d <= 8:
         raise ValueError(f"cox_newton_multi supports 1..8 covariates, got {d}")
@@ -1251,11 +1215,9 @@ def cox_newton_multi_from_leavers(
     finalize_cox_multi), the same fold/recompute-on-read architecture
     as the KM twin. At-risk counts rebuild from the folded leavers
     (integer prefix sums per cell, :func:`_cox_grid_rows_driver`), never
-    from subject history. The leaver table is keyed by (cell, time)."""
-    import numpy as np
-
-    from clinpy_spark.functions.cramer import solve2, solve3, var3_diag
-
+    from subject history. The leaver table is keyed by (cell, time).
+    The Newton loop and the solve are functions/cramer.py's
+    ``fit_newton``; this fitter supplies the risk-set moments."""
     xs = [f"__x{i}" for i in range(1, d + 1)]
     spark = leav.sparkSession
 
@@ -1277,18 +1239,19 @@ def cox_newton_multi_from_leavers(
         # every subject leaves exactly once, so the leaver totals ARE
         # the cohort size (works from a folded stream state too)
         n_subjects = sum(int(r[d + 1]) for r in raw)
+        n_events = sum(row[2] for row in g_rows)
     else:
         leav = leav.localCheckpoint(eager=False)
         grid = _cox_grid_distributed(leav, xs)
         n_subjects = int(
             leav.agg(F.sum("__r").alias("n")).collect()[0].n or 0)
+        n_events = 0  # set by the first grid aggregate
 
     def moments_driver(beta):
         if not g_rows:
-            return None, None, 0
+            return None
         u = [0.0] * d
         info = {(a, b): 0.0 for a in range(d) for b in range(a, d)}
-        n_events = 0
         for rows_t in by_t.values():
             s0 = 0.0
             dd = 0
@@ -1316,12 +1279,12 @@ def cox_newton_multi_from_leavers(
                 for b in range(a, d):
                     info[(a, b)] += dd * (
                         s2[(a, b)] / s0 - (s1[a] / s0) * (s1[b] / s0))
-            n_events += dd
-        return u, info, n_events
+        return u, info
 
     def moments_distributed(beta):
         # the pre-r13 per-step grid aggregate: one Spark job per Newton
         # step, grid-sized shuffle only — the scale-safe branch
+        nonlocal n_events
         eta = F.lit(0.0)
         for i, x in enumerate(xs):
             eta = eta + F.lit(float(beta[i])) * F.col(x)
@@ -1354,122 +1317,35 @@ def cox_newton_multi_from_leavers(
         g_aggs += [F.sum("dd").alias("n_events")]
         row = pt.agg(*g_aggs).collect()[0]
         if row["n_events"] is None:
-            return None, None, 0
+            return None
+        n_events = int(row["n_events"])
         u = [float(row[f"u{a}"]) for a in range(d)]
         info = {(a, b): float(row[f"i{a}{b}"])
                 for a in range(d) for b in range(a, d)}
-        return u, info, int(row["n_events"])
+        return u, info
 
     moments = moments_driver if g_rows is not None else moments_distributed
-
-    def step(beta, u, info):
-        """One Newton update.  For d <= 3 the solve is EXPLICIT Cramer
-        arithmetic in the oracle's own operand order (functions/
-        cramer.py — r12 verdict #1: np.linalg.solve's LAPACK path
-        drifts ~1e-13 from the oracle's Cramer CTEs, enough to flip a
-        rounded digit at a boundary); larger d (no SQL oracle) keeps
-        the numpy solve."""
-        if d == 1:
-            det = info[(0, 0)]
-            if not det > 0:
-                return None
-            return [beta[0] + u[0] / det]
-        if d == 2:
-            det, d1, d2 = solve2(u[0], u[1],
-                                 info[(0, 0)], info[(0, 1)], info[(1, 1)])
-            if d1 is None:
-                return None
-            return [beta[0] + d1, beta[1] + d2]
-        if d == 3:
-            det, d1, d2, d3 = solve3(
-                u[0], u[1], u[2],
-                info[(0, 0)], info[(0, 1)], info[(0, 2)],
-                info[(1, 1)], info[(1, 2)], info[(2, 2)])
-            if d1 is None:
-                return None
-            return [beta[0] + d1, beta[1] + d2, beta[2] + d3]
-        a = np.zeros((d, d))
-        for (i, j), v in info.items():
-            a[i, j] = a[j, i] = v
-        if np.linalg.det(a) <= 0:
-            return None
-        return list(np.asarray(beta) + np.linalg.solve(a, np.asarray(u)))
-
-    def var_diag(info):
-        """Diagonal of the inverse information — explicit cofactor/det
-        ratios for d <= 3 (matching the oracle's se/wald expressions
-        exactly), numpy inverse otherwise.  None on non-PD."""
-        if d == 1:
-            det = info[(0, 0)]
-            return [1 / det] if det > 0 else None
-        if d == 2:
-            det = info[(0, 0)] * info[(1, 1)] - info[(0, 1)] * info[(0, 1)]
-            if not det > 0:
-                return None
-            # the oracle emits sqrt(i22/det) / sqrt(i11/det)
-            return [info[(1, 1)] / det, info[(0, 0)] / det]
-        if d == 3:
-            det = (info[(0, 0)] * (info[(1, 1)] * info[(2, 2)]
-                                   - info[(1, 2)] * info[(1, 2)])
-                   - info[(0, 1)] * (info[(0, 1)] * info[(2, 2)]
-                                     - info[(1, 2)] * info[(0, 2)])
-                   + info[(0, 2)] * (info[(0, 1)] * info[(1, 2)]
-                                     - info[(1, 1)] * info[(0, 2)]))
-            if not det > 0:
-                return None
-            return list(var3_diag(
-                info[(0, 0)], info[(0, 1)], info[(0, 2)],
-                info[(1, 1)], info[(1, 2)], info[(2, 2)], det))
-        a = np.zeros((d, d))
-        for (i, j), v in info.items():
-            a[i, j] = a[j, i] = v
-        if np.linalg.det(a) <= 0:
-            return None
-        return list(np.diag(np.linalg.inv(a)))
-
-    def null_result(n_events):
-        cols = [(f"{pref}{i}", None)
-                for pref in ("beta", "hr", "se", "wald_chi2_")
-                for i in range(1, d + 1)]
-        cols += [("n_events", n_events), ("n_subjects", n_subjects),
-                 ("score_norm", None)]
-        return _literal_row(spark, cols)
-
-    beta = [0.0] * d
-    n_events = 0
-    for _ in range(iterations):
-        u, info, n_events = moments(beta)
-        if u is None:
-            return null_result(0)
-        beta = step(beta, u, info)
-        if beta is None:
-            return null_result(n_events)
-    u, info, n_events = moments(beta)
-    var = var_diag(info) if u is not None else None
-    if u is None or var is None:
-        return null_result(n_events if u is not None else 0)
+    fit = fit_newton(moments, [0.0] * d, iterations)
 
     # round-5 emission contract for the multi-covariate family (r12
     # verdict #1): residual distributed-sum-order drift in the moment
     # doubles is ~1e-13; against a 1e-5 rounding grid that flips a
     # digit with probability ~1e-8 instead of round-6's ~1e-7 per
-    # statistic per run — and the Cramer solve above already removed
-    # the LAPACK-vs-oracle term entirely.
-    score_norm = 0.0
-    for v in u:
-        score_norm = score_norm + v * v
-    score_norm = math.sqrt(score_norm)
-
+    # statistic per run — and the Cramer solve already removed the
+    # LAPACK-vs-oracle term entirely.
     ids = range(1, d + 1)
-    cols = [(f"beta{i}", _round(beta[i - 1], digits)) for i in ids]
-    cols += [(f"hr{i}", _round(math.exp(beta[i - 1]), digits)) for i in ids]
-    cols += [(f"se{i}", _round(math.sqrt(var[i - 1]), digits)) for i in ids]
-    cols += [(f"wald_chi2_{i}",
-              _round(beta[i - 1] * beta[i - 1] / var[i - 1], digits))
+    names = [f"{pref}{i}" for pref in ("beta", "hr", "se", "wald_chi2_")
              for i in ids]
-    cols += [("n_events", n_events), ("n_subjects", n_subjects),
-             ("score_norm", _round(score_norm, digits))]
-    return _literal_row(spark, cols)
+    vals = [None] * (4 * d + 1)
+    if fit is not None:
+        beta, u, var = fit
+        vals = [_round(v, digits) for v in (
+            *beta, *[_exp(b) for b in beta],
+            *[math.sqrt(v) for v in var],
+            *[b * b / v for b, v in zip(beta, var)], score_norm(u))]
+    return _literal_row(spark, [
+        *zip(names, vals), ("n_events", n_events),
+        ("n_subjects", n_subjects), ("score_norm", vals[-1])])
 
 
 def cox_ph_check(

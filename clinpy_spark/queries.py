@@ -8677,9 +8677,9 @@ def dx_multinomial_q(spark, sf):
     # multinomial_newton, r12 verdict #7): 3-class return-flag outcome
     # (A/N/R, A = reference) vs quantity — per class the log odds vs
     # the reference, jointly. One pass to the ~50-cell (quantity x
-    # class-count) grid; each Newton step is one grid aggregate + a
-    # driver-side 4x4 Cramer solve generated from the SAME Leibniz
-    # term order as the oracle's CTE text.
+    # class-count) grid, collected once; each Newton step is a driver
+    # pass over it + a 4x4 Cramer solve generated from the SAME
+    # Leibniz term order as the oracle's CTE text.
     from clinpy_spark.operators.assoc import multinomial_newton
 
     li = _t(spark, sf, "lineitem").select(
@@ -9034,8 +9034,8 @@ def dx_ordinal_q(spark, sf):
     # ordinal_newton): order urgency grade (MEDIUM < HIGH < URGENT) vs
     # a customer band — ONE shared slope on the cumulative logits, the
     # severity/stage/dose-response model between binary logistic and
-    # nominal multinomial. One pass to the 5-cell grid; each Fisher
-    # step is one grid aggregate + a driver 3x3 Cramer solve; the
+    # nominal multinomial. One pass to the 5-cell grid, collected once;
+    # each Fisher step is a driver pass over it + a 3x3 Cramer solve; the
     # oracle's moment SQL is GENERATED by the same derivative-term
     # loop the fitter evaluates.
     from clinpy_spark.operators.assoc import ordinal_newton
@@ -10596,9 +10596,9 @@ def _logit_multi_irls_sql(iterations: int) -> str:
     """Chained-CTE replay of logistic_newton_multi's IRLS recurrence
     for d = 2 covariates: per step one moment aggregate over the joint
     grid and one Cramer's-rule 3x3 Newton update — the SQL-expressible
-    face of the distributed-moments / local-solve factoring (the Spark
-    side solves the same normal equations with numpy; LAPACK-vs-Cramer
-    drift is ~1e-14, invisible at round-6)."""
+    face of the moments / local-solve factoring (the Spark side solves
+    the same normal equations with functions/cramer.py solve3, in this
+    text's operand order)."""
     mom = """ (SELECT sum(r) AS u0, sum(x1 * r) AS u1, sum(x2 * r) AS u2,
               sum(w) AS i00, sum(x1 * w) AS i01, sum(x2 * w) AS i02,
               sum(x1 * x1 * w) AS i11, sum(x1 * x2 * w) AS i12,
@@ -10681,10 +10681,10 @@ def dx_logistic_multi_q(spark, sf):
     # logistic_newton_multi, r11 verdict #4): return probability vs
     # quantity ADJUSTED for line number — log-odds per unit of each,
     # jointly. The cohort collapses once to the ~350-cell
-    # (quantity x linenumber) grid; each of the 4 IRLS steps is one
-    # grid aggregate collected as a single bounded row and a
-    # driver-side 3x3 solve. The oracle replays the identical
-    # recurrence with Cramer's-rule CTE updates.
+    # (quantity x linenumber) grid, collected once; each of the 4 IRLS
+    # steps is a driver pass over it and a 3x3 Cramer solve. The
+    # oracle replays the identical recurrence with Cramer's-rule CTE
+    # updates.
     from clinpy_spark.operators.assoc import logistic_newton_multi
 
     li = _t(spark, sf, "lineitem").select(
@@ -11255,8 +11255,8 @@ def dx_poisson_multi_q(spark, sf):
     # ADJUSTED for a custkey-parity band — log rate per unit of each,
     # jointly, completing the multi-covariate GLM ladder
     # (dx_logistic_multi / surv_cox_multi). One pass to the 15-cell
-    # joint grid; each Newton step is one grid aggregate + a
-    # driver-side 3x3 solve; the oracle replays the identical
+    # joint grid, collected once; each Newton step is a driver pass
+    # over it + a 3x3 Cramer solve; the oracle replays the identical
     # recurrence from the same saturated-intercept start.
     from clinpy_spark.operators.assoc import poisson_newton_multi
 
@@ -13920,8 +13920,8 @@ def epi_poisson_rate_q(spark, sf):
     # Poisson rate regression with a person-time offset
     # (operators/assoc.py poisson_rate_newton): events per follow-up
     # day for the URGENT-vs-LOW contrast — the offset makes the
-    # per-cell sufficient statistic (sum y, sum pt), so every Newton
-    # step is one grid-sized aggregate; for this binary x the MLE is
+    # per-cell sufficient statistic (sum y, sum pt), collected once and
+    # fitted on the driver; for this binary x the MLE is
     # closed-form and rate_ratio equals surv_incidence_rate's IRR
     # exactly (property-tested).
     from clinpy_spark.operators.assoc import poisson_rate_newton

@@ -108,9 +108,6 @@ EXPECTED_UNBOUNDED = {
                      # 1-row bin-gap aggregate (reliability_table shape)
     "gx_breslow_day",  # crossJoin vs the 1-row MH-common-OR aggregate
                        # broadcast back over the bounded stratum grid
-    "dx_negbin",  # each Poisson/NB step crossJoins the bounded grid vs
-                  # the 1-row (b0, b1[, alpha]) aggregate (same shape
-                  # as dx_poisson/surv_cox_beta)
     "sim_cluster_quality",  # wss x bss x consts — three 1-row aggregates
     "a16_market_basket",  # crossJoin vs the 1-row basket-count constant
     "text_kmv_overlap",  # two k-length single-row sketches crossJoined —
@@ -198,8 +195,6 @@ EXPECTED_UNBOUNDED = {
     "dx_spearman",  # crossJoins vs the two 1-row tie-count aggregates
     "gx_tdt",  # the CONSTANT 200-row broadcast variant-range grid
                # expansion (same shape as gx_mendel)
-    "dx_logistic",  # IRLS steps crossJoin the bounded per-x grid vs the
-                    # 1-row scalar-beta aggregate (surv_cox_beta shape)
     "graph_assortativity",  # crossJoin vs the 1-row node-count aggregate
                             # (graph_triangle_stats scalar shape)
     "e_acf",  # crossJoins vs the 1-row series moments and the
@@ -210,10 +205,6 @@ EXPECTED_UNBOUNDED = {
                 # ever picks BNLJ for the bounded rate join
     "dx_friedman",  # crossJoin vs the 1-row max-treatment-count and
                     # rank-moment aggregates (kruskal tie shape)
-    "dx_poisson",  # IRLS steps crossJoin the bounded per-x grid vs the
-                   # 1-row scalar-beta aggregate (dx_logistic shape)
-    "epi_poisson_rate",  # same Newton shape with the person-time
-                         # offset grid (dx_poisson shape)
     "curate_dsir_head",  # crossJoin vs the 1-row bucket-total aggregate
                          # (text_bm25 corpus-constants shape)
     "surv_cox_strat",  # the 1-row literal fit crossJoins the 1-row
@@ -259,8 +250,8 @@ EXPECTED_UNBOUNDED = {
                                  # both legs Limit-proven constant-row
     "gx_haplotype_em",  # each EM step crossJoins the bounded haplotype
                         # grid vs the 1-row count/frequency aggregate
-                        # (dx_negbin's scalar-recurrence shape), under
-                        # the per-step checkpoint barrier
+                        # (a scalar recurrence), under the per-step
+                        # checkpoint barrier
 }
 
 
