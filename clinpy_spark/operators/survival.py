@@ -22,6 +22,18 @@ per-time aggregate (|distinct times| rows, not the cohort), partitioned
 by group — at 100 TB the shuffle is one groupBy on (group, time) and
 the window state is bounded by the time-grid size. No driver collect,
 no join wider than the per-time table.
+
+Every estimator builds on one small risk-set kernel over that grid:
+
+- :func:`_at_risk`: the risk-set size as the partition's total of a
+  leaver increment minus its strict prefix ordered by ``__t``;
+- :func:`_product_limit`: S(t), or the left limit S(t-), as the
+  exp-sum-ln prefix with the d >= n zero flag;
+- :func:`episode_flows` / :func:`_flow_grid`: the counting-process
+  net-flow table of (start, stop] episodes and its strict-prefix risk
+  sets, shared by the batch estimators and their streaming twins.
+
+Each estimator keeps only its own per-time counters and outputs.
 """
 
 from __future__ import annotations
@@ -50,6 +62,42 @@ def _round_col(c, digits: int | None):
     return c if digits is None else F.round(c, digits) + 0.0
 
 
+def _prefix(*partition, order=("__t",), end: int = 0):
+    """Running frame per ``partition`` ordered by ``order``: every row
+    up to the current one (``end=0``) or strictly before it
+    (``end=-1``)."""
+    return (Window.partitionBy(*partition).orderBy(*order)
+            .rowsBetween(Window.unboundedPreceding, end))
+
+
+def _at_risk(c, *partition, order=("__t",)):
+    """Risk-set size at each row: the partition's total of the leaver
+    increment ``c`` minus its prefix strictly before the row. The total
+    minus prefix association is kept on purpose (a suffix window sums
+    double increments in another order). The caller's increment
+    carries its NULL-event rule: ``d + c`` from :func:`_per_time`
+    leaves a NULL-event subject out, ``count(1)`` keeps it in."""
+    return (F.sum(c).over(Window.partitionBy(*partition))
+            - F.coalesce(F.sum(c).over(_prefix(*partition, order=order,
+                                               end=-1)), F.lit(0)))
+
+
+def _product_limit(d, n, *partition, strict: bool = False):
+    """Product-limit survival prod (1 - d/n) per ``partition`` over the
+    rows ordered by ``__t``: S(t) through each row, or with ``strict``
+    the left limit S(t-) over the rows strictly before it (1.0 at the
+    first). exp(sum(ln(1 - d/n))) with the d >= n zero flag — once a
+    factor is exactly 0, S reports 0.0 from there on and ln(0) is never
+    evaluated. Materialize it as a column before filtering the frame."""
+    w = _prefix(*partition, end=-1 if strict else 0)
+    lsum = F.sum(F.when(d < n, F.log(1 - d.cast("double") / n))
+                 .otherwise(F.lit(0.0))).over(w)
+    zero = F.max(F.when(d >= n, 1).otherwise(0)).over(w)
+    if strict:
+        lsum, zero = F.coalesce(lsum, F.lit(0.0)), F.coalesce(zero, F.lit(0))
+    return F.when(zero == 1, F.lit(0.0)).otherwise(F.exp(lsum))
+
+
 def _per_time(df: DataFrame, time_col: str, event_col: str,
               group_col: str) -> DataFrame:
     """(group, t, d, c): events and censorings per distinct time, the
@@ -66,6 +114,12 @@ def _per_time(df: DataFrame, time_col: str, event_col: str,
             F.sum(1 - F.col("__e")).alias("c"),
         )
     )
+
+
+def _with_n_risk(pt: DataFrame) -> DataFrame:
+    """A (__g, __t, d, c) per-time table with ``n_risk``, the at-risk
+    count of each (group, time) — the frame of the KM family."""
+    return pt.withColumn("n_risk", _at_risk(F.col("d") + F.col("c"), "__g"))
 
 
 def km_curve(
@@ -97,41 +151,79 @@ def km_from_per_time(
     c) — the entry point for incrementally-maintained cohorts: the
     streaming twin folds (d, c) partials per micro-batch and calls this
     on the folded table (streaming/survival.py)."""
-    w_ord = Window.partitionBy("__g").orderBy("__t")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy("__g")
-    pt = pt.withColumn(
-        "n_risk",
-        F.sum(F.col("d") + F.col("c")).over(tot)
-        - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0)),
-    )
-    frac = F.col("d").cast("double") / F.col("n_risk")
-    pt = (
-        pt.withColumn(
-            "__lsum",
-            F.sum(
-                F.when(F.col("d") < F.col("n_risk"), F.log(1 - frac))
-                .otherwise(F.lit(0.0))
-            ).over(w_cum),
-        )
-        .withColumn(
-            "__zero",
-            F.max(
-                F.when(F.col("d") >= F.col("n_risk"), 1).otherwise(0)
-            ).over(w_cum),
-        )
-    )
+    pt = _with_n_risk(pt)
     return pt.select(
         F.col("__g").alias(group_col),
         F.col("__t").alias(time_col),
         "n_risk",
         F.col("d").alias("n_events"),
         F.col("c").alias("n_censored"),
-        F.when(F.col("__zero") == 1, F.lit(0.0))
-        .otherwise(F.round(F.exp("__lsum"), 6))
+        F.round(_product_limit(F.col("d"), F.col("n_risk"), "__g"), 6)
         .alias("survival"),
     )
+
+
+def _two_arm_grid(df: DataFrame, time_col: str, event_col: str,
+                  group_col: str, group_a, group_b):
+    """(sub, per_t): the rows of arms a and b, and their pooled per-time
+    grid (__t, da, ra, d, r, na, n) — arm-a and total events and
+    leavers per distinct time, with the at-risk counts na and n. The
+    leavers are :func:`_per_time`'s d + c, so a NULL-event subject is
+    in no risk set; arm b is the total minus arm a."""
+    sub = df.filter(F.col(group_col).isin([group_a, group_b]))
+    is_a = F.col("__g") == F.lit(group_a)
+    left = F.col("d") + F.col("c")
+    per_t = _per_time(sub, time_col, event_col, group_col).groupBy(
+        "__t").agg(
+        F.sum(F.when(is_a, F.col("d")).otherwise(0)).alias("da"),
+        F.sum(F.when(is_a, left).otherwise(0)).alias("ra"),
+        F.sum("d").alias("d"),
+        F.sum(left).alias("r"),
+    )
+    return sub, (per_t.withColumn("na", _at_risk(F.col("ra")))
+                 .withColumn("n", _at_risk(F.col("r"))))
+
+
+def _hypergeom(d, n, na):
+    """(e, v) at one pooled event time: the arm's expected events
+    d * p and hypergeometric variance d p (1 - p) (n - d) / (n - 1),
+    p = na / n (v = 0 where n == 1)."""
+    p = na.cast("double") / n
+    return d * p, F.when(
+        n > 1, d * p * (1 - p) * (n - d) / (n - 1)).otherwise(F.lit(0.0))
+
+
+def _logrank_sums(w=None):
+    """observed_a, expected_a (round-6), the score ``__u`` and its
+    variance ``__v`` over the event-time rows (da, d, na, n) of a
+    two-arm grid: __u = sum(da) - sum(e) and __v = sum(v), or with a
+    per-time weight ``w`` sum(w (da - e)) and sum(w^2 v)."""
+    e, v = _hypergeom(F.col("d"), F.col("n"), F.col("na"))
+    if w is None:
+        u, var = F.sum("da") - F.sum(e), F.sum(v)
+    else:
+        u, var = F.sum(w * (F.col("da") - e)), F.sum(w * w * v)
+    return [F.sum("da").alias("observed_a"),
+            F.round(F.sum(e), 6).alias("expected_a"),
+            u.alias("__u"), var.alias("__v")]
+
+
+def _logrank_row(agg: DataFrame, sub: DataFrame, group_col: str,
+                 group_a, group_b, *cols) -> DataFrame:
+    """The 1-row two-arm log-rank result: chi2 = __u^2 / __v, then
+    ``cols`` of ``agg`` joined with the arm sizes (n_a, n_b) of
+    ``sub``. Zero total variance (one arm empty at every event time,
+    or no events with n > 1) leaves the statistic undefined -> NULL,
+    never a divide-by-zero (ANSI mode raises otherwise)."""
+    counts = sub.groupBy().agg(
+        F.sum(F.when(F.col(group_col) == F.lit(group_a), 1).otherwise(0))
+        .alias("n_a"),
+        F.sum(F.when(F.col(group_col) == F.lit(group_b), 1).otherwise(0))
+        .alias("n_b"),
+    )
+    u, v = F.col("__u"), F.col("__v")
+    return agg.crossJoin(F.broadcast(counts)).select(
+        F.when(v > 0, F.round(u * u / v, 6)).alias("chi2"), *cols)
 
 
 def logrank_test(
@@ -149,62 +241,11 @@ def logrank_test(
     (v = 0 where n == 1). Censoring-only times contribute nothing
     (d = 0) and drop out exactly.
     """
-    sub = df.filter(F.col(group_col).isin([group_a, group_b]))
-    pt = _per_time(sub, time_col, event_col, group_col)
-    is_a = F.col("__g") == F.lit(group_a)
-    per_t = pt.groupBy("__t").agg(
-        F.sum(F.when(is_a, F.col("d")).otherwise(0)).alias("da"),
-        F.sum(F.when(is_a, F.col("d") + F.col("c")).otherwise(0)).alias("ra"),
-        F.sum("d").alias("d"),
-        F.sum(F.col("d") + F.col("c")).alias("r"),
-    )
-    w_prev = Window.orderBy("__t").rowsBetween(Window.unboundedPreceding, -1)
-    tot_a = F.sum("ra").over(Window.partitionBy())
-    tot = F.sum("r").over(Window.partitionBy())
-    per_t = (
-        per_t.withColumn(
-            "na", tot_a - F.coalesce(F.sum("ra").over(w_prev), F.lit(0)))
-        .withColumn("n", tot - F.coalesce(F.sum("r").over(w_prev), F.lit(0)))
-        .filter(F.col("d") > 0)
-    )
-    pa = F.col("na").cast("double") / F.col("n")
-    v = F.when(
-        F.col("n") > 1,
-        F.col("d") * pa * (1 - pa) * (F.col("n") - F.col("d"))
-        / (F.col("n") - 1),
-    ).otherwise(F.lit(0.0))
-    agg = per_t.agg(
-        F.sum("da").alias("observed_a"),
-        F.round(F.sum(F.col("d") * pa), 6).alias("expected_a"),
-        F.sum(F.col("d") * pa).alias("__ea"),
-        F.sum(v).alias("__v"),
-    )
-    oma = F.col("observed_a") - F.col("__ea")
-    counts = (
-        sub.groupBy()
-        .agg(
-            F.sum(F.when(F.col(group_col) == F.lit(group_a), 1).otherwise(0))
-            .alias("n_a"),
-            F.sum(F.when(F.col(group_col) == F.lit(group_b), 1).otherwise(0))
-            .alias("n_b"),
-        )
-    )
-    return (
-        agg.crossJoin(F.broadcast(counts))
-        .select(
-            # Zero total variance (degenerate cohort: one arm empty at
-            # every event time, or no events with n > 1) leaves the
-            # statistic undefined -> NULL, never a divide-by-zero
-            # (hypothesis-found edge; ANSI mode raises otherwise).
-            F.when(
-                F.col("__v") > 0, F.round(oma * oma / F.col("__v"), 6)
-            ).alias("chi2"),
-            "observed_a",
-            "expected_a",
-            "n_a",
-            "n_b",
-        )
-    )
+    sub, per_t = _two_arm_grid(
+        df, time_col, event_col, group_col, group_a, group_b)
+    agg = per_t.filter(F.col("d") > 0).agg(*_logrank_sums())
+    return _logrank_row(agg, sub, group_col, group_a, group_b,
+                        "observed_a", "expected_a", "n_a", "n_b")
 
 
 def logrank_k(
@@ -242,16 +283,10 @@ def logrank_k(
         "r", F.col("d") + F.col("c"))
 
     # pooled at-risk / event totals per distinct time; keep event times
-    w_prev_all = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, -1)
     pooled = (
         pt.groupBy("__t")
         .agg(F.sum("d").alias("dt"), F.sum("r").alias("rt"))
-        .withColumn(
-            "nt",
-            F.sum("rt").over(Window.partitionBy())
-            - F.coalesce(F.sum("rt").over(w_prev_all), F.lit(0)),
-        )
+        .withColumn("nt", _at_risk(F.col("rt")))
         .filter(F.col("dt") > 0)
         .select("__t", "dt", "nt")
     )
@@ -265,9 +300,9 @@ def logrank_k(
     )
 
     # n_g at each pooled event time: union the group's own (time, r)
-    # increments with the grid probes and take the exclusive running
-    # sum — grid rows (is_real=0) sort BEFORE real rows at equal time,
-    # so subjects failing/censored AT t still count as at risk at t.
+    # increments with the grid probes and take the at-risk window —
+    # grid rows (is_real=0) sort BEFORE real rows at equal time, so
+    # subjects failing/censored AT t still count as at risk at t.
     null_l = F.lit(None).cast("long")
     u = (
         pt.select(
@@ -283,29 +318,15 @@ def logrank_k(
             )
         )
     )
-    w_g_prev = (
-        Window.partitionBy("__g")
-        .orderBy("__t", "is_real")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     probes = (
-        u.withColumn("ngt", F.sum("r").over(Window.partitionBy("__g")))
-        .withColumn(
-            "consumed",
-            F.coalesce(F.sum("r").over(w_g_prev), F.lit(0)),
-        )
+        u.withColumn(
+            "ng", _at_risk(F.col("r"), "__g", order=("__t", "is_real")))
         .filter(F.col("is_real") == 0)
-        .withColumn("ng", F.col("ngt") - F.col("consumed"))
     )
 
-    pg = F.col("ng").cast("double") / F.col("nt")
-    v_t = F.when(
-        F.col("nt") > 1,
-        F.col("dt") * pg * (1 - pg) * (F.col("nt") - F.col("dt"))
-        / (F.col("nt") - 1),
-    ).otherwise(F.lit(0.0))
+    e_t, v_t = _hypergeom(F.col("dt"), F.col("nt"), F.col("ng"))
     per_g = probes.groupBy("__g").agg(
-        F.sum(F.col("dt") * pg).alias("__e"),
+        F.sum(e_t).alias("__e"),
         F.sum(v_t).alias("__v"),
     )
     obs = pt.groupBy("__g").agg(
@@ -349,23 +370,15 @@ def nelson_aalen(
     order is fixed and the estimate is oracle-reproducible (rounded to
     6 by the repo convention).
     """
-    pt = _per_time(df, time_col, event_col, group_col)
-    w_ord = Window.partitionBy("__g").orderBy("__t")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy("__g")
-    pt = pt.withColumn(
-        "n_risk",
-        F.sum(F.col("d") + F.col("c")).over(tot)
-        - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0)),
-    )
+    pt = _with_n_risk(_per_time(df, time_col, event_col, group_col))
     return pt.select(
         F.col("__g").alias(group_col),
         F.col("__t").alias(time_col),
         "n_risk",
         F.col("d").alias("n_events"),
         F.round(
-            F.sum(F.col("d").cast("double") / F.col("n_risk")).over(w_cum), 6
+            F.sum(F.col("d").cast("double") / F.col("n_risk"))
+            .over(_prefix("__g")), 6
         ).alias("cumhaz"),
     )
 
@@ -387,55 +400,32 @@ def km_greenwood(
     Same bounded per-time-grid shape as :func:`km_curve`; se/ci are one
     extra cumulative window over the same grid.
     """
-    pt = _per_time(df, time_col, event_col, group_col)
-    w_ord = Window.partitionBy("__g").orderBy("__t")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy("__g")
-    pt = pt.withColumn(
-        "n_risk",
-        F.sum(F.col("d") + F.col("c")).over(tot)
-        - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0)),
-    )
-    frac = F.col("d").cast("double") / F.col("n_risk")
+    pt = _with_n_risk(_per_time(df, time_col, event_col, group_col))
     live = F.col("d") < F.col("n_risk")
-    pt = (
-        pt.withColumn(
-            "__lsum",
-            F.sum(F.when(live, F.log(1 - frac)).otherwise(F.lit(0.0)))
-            .over(w_cum),
-        )
-        .withColumn(
-            "__gsum",
-            F.sum(
-                F.when(
-                    live,
-                    F.col("d").cast("double")
-                    / (F.col("n_risk") * (F.col("n_risk") - F.col("d"))),
-                ).otherwise(F.lit(0.0))
-            ).over(w_cum),
-        )
-        .withColumn(
-            "__zero",
-            F.max(F.when(~live, 1).otherwise(0)).over(w_cum),
-        )
+    pt = pt.withColumn(
+        "__s", _product_limit(F.col("d"), F.col("n_risk"), "__g")
+    ).withColumn(
+        "__gsum",
+        F.sum(
+            F.when(
+                live,
+                F.col("d").cast("double")
+                / (F.col("n_risk") * (F.col("n_risk") - F.col("d"))),
+            ).otherwise(F.lit(0.0))
+        ).over(_prefix("__g")),
     )
-    s = F.exp("__lsum")
+    # past an all-events time S is 0.0, so se and both bands are 0.0
+    s = F.col("__s")
     se = F.sqrt(s * s * F.col("__gsum"))
-    zero = F.col("__zero") == 1
     return pt.select(
         F.col("__g").alias(group_col),
         F.col("__t").alias(time_col),
         "n_risk",
         F.col("d").alias("n_events"),
-        F.when(zero, F.lit(0.0)).otherwise(F.round(s, 6)).alias("survival"),
-        F.when(zero, F.lit(0.0)).otherwise(F.round(se, 6)).alias("se"),
-        F.when(zero, F.lit(0.0))
-        .otherwise(F.round(F.greatest(s - z * se, F.lit(0.0)), 6))
-        .alias("ci_lo"),
-        F.when(zero, F.lit(0.0))
-        .otherwise(F.round(F.least(s + z * se, F.lit(1.0)), 6))
-        .alias("ci_hi"),
+        F.round(s, 6).alias("survival"),
+        F.round(se, 6).alias("se"),
+        F.round(F.greatest(s - z * se, F.lit(0.0)), 6).alias("ci_lo"),
+        F.round(F.least(s + z * se, F.lit(1.0)), 6).alias("ci_hi"),
     )
 
 
@@ -514,45 +504,16 @@ def logrank_stratified(
         F.sum("__e").alias("d"),
         F.count(F.lit(1)).alias("r"),
     )
-    w_prev = (Window.partitionBy("__s").orderBy("__t")
-              .rowsBetween(Window.unboundedPreceding, -1))
-    tot = Window.partitionBy("__s")
     per_t = (
-        per_t.withColumn(
-            "na",
-            F.sum("ra").over(tot)
-            - F.coalesce(F.sum("ra").over(w_prev), F.lit(0)))
-        .withColumn(
-            "n",
-            F.sum("r").over(tot)
-            - F.coalesce(F.sum("r").over(w_prev), F.lit(0)))
+        per_t.withColumn("na", _at_risk(F.col("ra"), "__s"))
+        .withColumn("n", _at_risk(F.col("r"), "__s"))
         .filter(F.col("d") > 0)
     )
-    pa = F.col("na").cast("double") / F.col("n")
-    v = F.when(
-        F.col("n") > 1,
-        F.col("d") * pa * (1 - pa) * (F.col("n") - F.col("d"))
-        / (F.col("n") - 1),
-    ).otherwise(F.lit(0.0))
-    agg = per_t.agg(
-        F.sum("da").alias("observed_a"),
-        F.round(F.sum(F.col("d") * pa), 6).alias("expected_a"),
-        F.sum(F.col("d") * pa).alias("__ea"),
-        F.sum(v).alias("__v"),
-        F.countDistinct("__s").alias("n_strata"),
-    )
-    oma = F.col("observed_a") - F.col("__ea")
-    counts = sub.groupBy().agg(
-        F.sum(F.when(F.col(group_col) == F.lit(group_a), 1).otherwise(0))
-        .alias("n_a"),
-        F.sum(F.when(F.col(group_col) == F.lit(group_b), 1).otherwise(0))
-        .alias("n_b"),
-    )
-    return agg.crossJoin(F.broadcast(counts)).select(
-        F.when(F.col("__v") > 0, F.round(oma * oma / F.col("__v"), 6))
-        .alias("chi2"),
-        "observed_a", "expected_a", "n_a", "n_b", "n_strata",
-    )
+    agg = per_t.agg(*_logrank_sums(),
+                    F.countDistinct("__s").alias("n_strata"))
+    return _logrank_row(agg, sub, group_col, group_a, group_b,
+                        "observed_a", "expected_a", "n_a", "n_b",
+                        "n_strata")
 
 
 def cuminc(
@@ -595,46 +556,16 @@ def cuminc(
         F.sum(F.when(F.col("__st") != 0, 1).otherwise(0)).alias("__dall"),
         F.count(F.lit(1)).alias("__r"),
     )
-    w_ord = Window.partitionBy("__g").orderBy("__t")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy("__g")
-    pt = pt.withColumn(
-        "n_risk",
-        F.sum("__r").over(tot)
-        - F.coalesce(F.sum("__r").over(w_prev), F.lit(0)),
-    )
-    frac = F.col("__dall").cast("double") / F.col("n_risk")
-    pt = (
-        pt.withColumn(
-            "__lprev",
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("__dall") < F.col("n_risk"),
-                           F.log(1 - frac)).otherwise(F.lit(0.0))
-                ).over(w_prev),
-                F.lit(0.0),
-            ),
-        )
-        .withColumn(
-            "__zprev",
-            F.coalesce(
-                F.max(
-                    F.when(F.col("__dall") >= F.col("n_risk"), 1)
-                    .otherwise(0)
-                ).over(w_prev),
-                F.lit(0),
-            ),
-        )
-    )
-    s_prev = F.when(F.col("__zprev") == 1, F.lit(0.0)).otherwise(
-        F.exp("__lprev"))
+    pt = pt.withColumn("n_risk", _at_risk(F.col("__r"), "__g"))
+    pt = pt.withColumn("__sprev", _product_limit(
+        F.col("__dall"), F.col("n_risk"), "__g", strict=True))
     for i, _k in enumerate(causes):
         pt = pt.withColumn(
             f"__cif{i}",
             F.sum(
-                s_prev * F.col(f"__d{i}").cast("double") / F.col("n_risk")
-            ).over(w_cum),
+                F.col("__sprev") * F.col(f"__d{i}").cast("double")
+                / F.col("n_risk")
+            ).over(_prefix("__g")),
         )
     parts = []
     for i, k in enumerate(causes):
@@ -689,18 +620,10 @@ def cox_score(
         F.sum("__x").alias("rx"),
         F.sum(F.col("__x") * F.col("__x")).alias("rxx"),
     )
-    w_prev = Window.orderBy("__t").rowsBetween(Window.unboundedPreceding, -1)
-    tot = Window.partitionBy()
     pt = (
-        pt.withColumn(
-            "n", F.sum("r").over(tot)
-            - F.coalesce(F.sum("r").over(w_prev), F.lit(0)))
-        .withColumn(
-            "sx", F.sum("rx").over(tot)
-            - F.coalesce(F.sum("rx").over(w_prev), F.lit(0.0)))
-        .withColumn(
-            "sxx", F.sum("rxx").over(tot)
-            - F.coalesce(F.sum("rxx").over(w_prev), F.lit(0.0)))
+        pt.withColumn("n", _at_risk(F.col("r")))
+        .withColumn("sx", _at_risk(F.col("rx")))
+        .withColumn("sxx", _at_risk(F.col("rxx")))
         .filter(F.col("d") > 0)
     )
     xbar = F.col("sx") / F.col("n")
@@ -810,49 +733,12 @@ def logrank_weighted(
     Scale shape: identical to logrank_test plus two more ordered
     windows over the bounded per-time grid.
     """
-    sub = df.filter(F.col(group_col).isin([group_a, group_b]))
-    pt = _per_time(sub, time_col, event_col, group_col)
-    is_a = F.col("__g") == F.lit(group_a)
-    per_t = pt.groupBy("__t").agg(
-        F.sum(F.when(is_a, F.col("d")).otherwise(0)).alias("da"),
-        F.sum(F.when(is_a, F.col("d") + F.col("c")).otherwise(0)).alias("ra"),
-        F.sum("d").alias("d"),
-        F.sum(F.col("d") + F.col("c")).alias("r"),
-    )
-    w_prev = Window.orderBy("__t").rowsBetween(Window.unboundedPreceding, -1)
-    tot_a = F.sum("ra").over(Window.partitionBy())
-    tot = F.sum("r").over(Window.partitionBy())
-    per_t = (
-        per_t.withColumn(
-            "na", tot_a - F.coalesce(F.sum("ra").over(w_prev), F.lit(0)))
-        .withColumn("n", tot - F.coalesce(F.sum("r").over(w_prev), F.lit(0)))
-    )
+    sub, per_t = _two_arm_grid(
+        df, time_col, event_col, group_col, group_a, group_b)
     # pooled KM left limit S(t-): prefix over times STRICTLY before t
-    frac = F.col("d").cast("double") / F.col("n")
-    per_t = (
-        per_t.withColumn(
-            "__lprev",
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("d") < F.col("n"), F.log(1 - frac))
-                    .otherwise(F.lit(0.0))
-                ).over(w_prev),
-                F.lit(0.0),
-            ),
-        )
-        .withColumn(
-            "__zprev",
-            F.coalesce(
-                F.max(
-                    F.when(F.col("d") >= F.col("n"), 1).otherwise(0)
-                ).over(w_prev),
-                F.lit(0),
-            ),
-        )
-        .filter(F.col("d") > 0)
-    )
-    s_prev = F.when(F.col("__zprev") == 1, F.lit(0.0)).otherwise(
-        F.exp("__lprev"))
+    per_t = per_t.withColumn("__sprev", _product_limit(
+        F.col("d"), F.col("n"), strict=True)).filter(F.col("d") > 0)
+    s_prev = F.col("__sprev")
     if weight == "gehan":
         # Gehan-Breslow generalized Wilcoxon: w(t) = pooled at-risk
         # count n(t) — emphasizes early differences with an
@@ -863,29 +749,9 @@ def logrank_weighted(
     else:
         w = F.pow(s_prev, F.lit(float(rho))) * F.pow(1 - s_prev,
                                                      F.lit(float(gamma)))
-    pa = F.col("na").cast("double") / F.col("n")
-    v = F.when(
-        F.col("n") > 1,
-        F.col("d") * pa * (1 - pa) * (F.col("n") - F.col("d"))
-        / (F.col("n") - 1),
-    ).otherwise(F.lit(0.0))
-    agg = per_t.agg(
-        F.sum("da").alias("observed_a"),
-        F.round(F.sum(F.col("d") * pa), 6).alias("expected_a"),
-        F.sum(w * (F.col("da") - F.col("d") * pa)).alias("__u"),
-        F.sum(w * w * v).alias("__v"),
-    )
-    counts = sub.groupBy().agg(
-        F.sum(F.when(F.col(group_col) == F.lit(group_a), 1).otherwise(0))
-        .alias("n_a"),
-        F.sum(F.when(F.col(group_col) == F.lit(group_b), 1).otherwise(0))
-        .alias("n_b"),
-    )
-    return agg.crossJoin(F.broadcast(counts)).select(
-        F.when(
-            F.col("__v") > 0,
-            F.round(F.col("__u") * F.col("__u") / F.col("__v"), 6),
-        ).alias("chi2"),
+    agg = per_t.agg(*_logrank_sums(w))
+    return _logrank_row(
+        agg, sub, group_col, group_a, group_b,
         (F.lit(None).cast("double") if weight == "gehan"
          else F.lit(float(rho))).alias("rho"),
         (F.lit(None).cast("double") if weight == "gehan"
@@ -895,34 +761,32 @@ def logrank_weighted(
 
 
 def _binary_event_grid(
-    df: DataFrame, time_col: str, event_col: str, x_col: str
+    df: DataFrame, time_col: str, event_col: str, x_col: str,
+    stratum_col: str | None = None,
 ) -> DataFrame:
     """Per-event-time grid (__t, d, d1, n, n1) for a binary covariate:
-    total/arm-1 events and at-risk counts, risk sets as total-minus-
-    prefix windows. :func:`_fit_binary_cox` reads it once (one bounded
-    collect, or one checkpoint on its distributed fallback)."""
+    total/arm-1 events and at-risk counts (leavers count(1)). With
+    ``stratum_col`` the grid is per (__st, __t) and each stratum keeps
+    its own risk sets. :func:`_fit_binary_cox` reads it once (one
+    bounded collect, or one checkpoint on its distributed fallback)."""
+    keys = [] if stratum_col is None else ["__st"]
     base = df.select(
+        *[F.col(stratum_col).alias(k) for k in keys],
         F.col(time_col).alias("__t"),
         F.col(event_col).cast("int").alias("__e"),
         F.col(x_col).cast("int").alias("__x"),
     )
-    pt = base.groupBy("__t").agg(
+    pt = base.groupBy(*keys, "__t").agg(
         F.sum("__e").alias("d"),
         F.sum(F.col("__e") * F.col("__x")).alias("d1"),
         F.count(F.lit(1)).alias("r"),
         F.sum("__x").alias("r1"),
     )
-    w_prev = Window.orderBy("__t").rowsBetween(Window.unboundedPreceding, -1)
-    tot = Window.partitionBy()
     return (
-        pt.withColumn(
-            "n", F.sum("r").over(tot)
-            - F.coalesce(F.sum("r").over(w_prev), F.lit(0)))
-        .withColumn(
-            "n1", F.sum("r1").over(tot)
-            - F.coalesce(F.sum("r1").over(w_prev), F.lit(0)))
+        pt.withColumn("n", _at_risk(F.col("r"), *keys))
+        .withColumn("n1", _at_risk(F.col("r1"), *keys))
         .filter(F.col("d") > 0)
-        .select("__t", "d", "d1", "n", "n1")
+        .select(*keys, "__t", "d", "d1", "n", "n1")
     )
 
 
@@ -1171,27 +1035,18 @@ def _cox_grid_distributed(leav: DataFrame, xs: list[str]) -> DataFrame:
     count exists at every event time (a cell without a leaver at t has
     no natural row there), then one cumulative-leavers window per
     cell."""
-    cells = leav.groupBy(*xs).agg(F.sum("__r").alias("__tot"))
+    cells = leav.select(*xs).distinct()
     times = (leav.filter(F.col("__d") > 0)
              .select("__t").distinct())
     probe = times.crossJoin(F.broadcast(cells)).select(
-        *xs, "__t", "__tot",
-        F.lit(0).alias("__r"), F.lit(0).alias("__is_leav"))
-    lv = leav.join(F.broadcast(cells), xs).select(
-        *xs, "__t", "__tot", "__r", F.lit(1).alias("__is_leav"))
-    w_prev = (
-        Window.partitionBy(*xs)
-        .orderBy("__t", "__is_leav")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+        *xs, "__t", F.lit(0).alias("__r"), F.lit(0).alias("__is_leav"))
+    lv = leav.select(*xs, "__t", "__r", F.lit(1).alias("__is_leav"))
     # at-risk at t = total - leavers strictly before t (same-t leavers
     # sort AFTER the probe row, so the prefix excludes them)
     atrisk = (
         probe.unionByName(lv)
-        .withColumn(
-            "__n",
-            F.col("__tot")
-            - F.coalesce(F.sum("__r").over(w_prev), F.lit(0)))
+        .withColumn("__n", _at_risk(F.col("__r"), *xs,
+                                    order=("__t", "__is_leav")))
         .filter(F.col("__is_leav") == 0)
         .select(*xs, "__t", "__n")
     )
@@ -1369,11 +1224,10 @@ def cox_ph_check(
 
     Scale shape: everything after the one cohort groupBy runs on the
     bounded grid — :func:`_fit_binary_cox` fits beta, which enters the
-    residuals as a literal; the grid is checkpointed once because the
-    residual correlation (one aggregate of exact sums) reads it again.
+    residuals as a literal; the residual correlation (one aggregate of
+    exact sums) recomputes the integer-only grid instead of pinning it.
     """
-    grid = _binary_event_grid(
-        df, time_col, event_col, x_col).localCheckpoint(eager=False)
+    grid = _binary_event_grid(df, time_col, event_col, x_col)
     beta, _, _ = _fit_binary_cox(grid, iterations)
     b = F.lit(beta).cast("double")
     s1 = F.col("n1") * F.exp(b)
@@ -1432,23 +1286,17 @@ def life_table(
     per_i = (
         df.select(
             F.col(group_col).alias("__g"),
-            F.floor(F.col(time_col) / F.lit(width)).cast("long").alias("__i"),
+            F.floor(F.col(time_col) / F.lit(width)).cast("long").alias("__t"),
             F.col(event_col).cast("int").alias("__e"),
         )
-        .groupBy("__g", "__i")
+        .groupBy("__g", "__t")
         .agg(
             F.sum("__e").alias("d"),
             F.sum(1 - F.col("__e")).alias("c"),
         )
     )
-    w_ord = Window.partitionBy("__g").orderBy("__i")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy("__g")
     per_i = per_i.withColumn(
-        "n_enter",
-        F.sum(F.col("d") + F.col("c")).over(tot)
-        - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0)),
+        "n_enter", _at_risk(F.col("d") + F.col("c"), "__g")
     ).withColumn(
         "eff_n", F.col("n_enter") - F.col("c") / 2.0
     ).withColumn(
@@ -1456,29 +1304,16 @@ def life_table(
         F.when(F.col("eff_n") > 0, F.col("d") / F.col("eff_n"))
         .otherwise(F.lit(0.0)),
     )
-    per_i = (
-        per_i.withColumn(
-            "__lsum",
-            F.sum(
-                F.when(F.col("q") < 1, F.log(1 - F.col("q")))
-                .otherwise(F.lit(0.0))
-            ).over(w_cum),
-        )
-        .withColumn(
-            "__zero",
-            F.max(F.when(F.col("q") >= 1, 1).otherwise(0)).over(w_cum),
-        )
-    )
     return per_i.select(
         F.col("__g").alias(group_col),
-        (F.col("__i") * F.lit(width)).alias("interval_start"),
+        (F.col("__t") * F.lit(width)).alias("interval_start"),
         "n_enter",
         F.col("d").alias("n_events"),
         F.col("c").alias("n_censored"),
         F.round("eff_n", 6).alias("eff_n"),
         F.round("q", 6).alias("q"),
-        F.when(F.col("__zero") == 1, F.lit(0.0))
-        .otherwise(F.round(F.exp("__lsum"), 6))
+        # prod(1 - q): the product limit with n = 1
+        F.round(_product_limit(F.col("q"), F.lit(1.0), "__g"), 6)
         .alias("survival"),
     )
 
@@ -1569,31 +1404,7 @@ def cox_newton_stratified(
     10k strata the grid is still |strata| x |event times| rows,
     nothing quadratic, one shuffle keyed by stratum.
     """
-    base = df.select(
-        F.col(stratum_col).alias("__st"),
-        F.col(time_col).alias("__t"),
-        F.col(event_col).cast("int").alias("__e"),
-        F.col(x_col).cast("int").alias("__x"),
-    )
-    pt = base.groupBy("__st", "__t").agg(
-        F.sum("__e").alias("d"),
-        F.sum(F.col("__e") * F.col("__x")).alias("d1"),
-        F.count(F.lit(1)).alias("r"),
-        F.sum("__x").alias("r1"),
-    )
-    w_prev = Window.partitionBy("__st").orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, -1)
-    tot = Window.partitionBy("__st")
-    grid = (
-        pt.withColumn(
-            "n", F.sum("r").over(tot)
-            - F.coalesce(F.sum("r").over(w_prev), F.lit(0)))
-        .withColumn(
-            "n1", F.sum("r1").over(tot)
-            - F.coalesce(F.sum("r1").over(w_prev), F.lit(0)))
-        .filter(F.col("d") > 0)
-        .select("__st", "__t", "d", "d1", "n", "n1")
-    )
+    grid = _binary_event_grid(df, time_col, event_col, x_col, stratum_col)
     counts = df.groupBy().agg(
         F.count(F.lit(1)).alias("n_subjects"),
         F.countDistinct(stratum_col).alias("n_strata"))
@@ -1652,14 +1463,7 @@ def _finegray_weighted_grid(leav: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("__x") == 1, F.col("__d1")).otherwise(0))
         .alias("d1xt"),
     )
-    w_all_prev = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, -1)
-    w_all_incl = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, 0)
-    tot = Window.partitionBy()
-    tt = tt.withColumn(
-        "atr", F.sum("r").over(tot)
-        - F.coalesce(F.sum("r").over(w_all_prev), F.lit(0)))
+    tt = tt.withColumn("atr", _at_risk(F.col("r")))
     # ln(1 - c/atr); a time where censoring exhausts the risk set can
     # only be terminal — its NULL term is never inside a USED prefix
     lnterm = (
@@ -1670,41 +1474,37 @@ def _finegray_weighted_grid(leav: DataFrame) -> DataFrame:
     tg = (
         tt.withColumn("__lt", lnterm)
         .withColumn("g", F.exp(
-            F.coalesce(F.sum("__lt").over(w_all_incl), F.lit(0.0))))
+            F.coalesce(F.sum("__lt").over(_prefix()), F.lit(0.0))))
         .withColumn("g_prev", F.exp(
-            F.coalesce(F.sum("__lt").over(w_all_prev), F.lit(0.0))))
+            F.coalesce(F.sum("__lt").over(_prefix(end=-1)), F.lit(0.0))))
         .localCheckpoint(eager=False)
     )
 
     # per-cell spine: probe rows at every event-1 time (il = 0, sorted
     # BEFORE same-time leavers so at-risk includes same-time leavers
     # and the competing-weight prefix excludes them: T_i < t strictly).
-    # The per-arm totals are a <= 2-row bounded collect inlined as a
-    # LITERAL table so the cross-product side is PROVABLY constant-row
-    # (the plan audit's nested-loop gate does not trust checkpointed
+    # The arms are a <= 2-row bounded collect inlined as a LITERAL
+    # table so the cross-product side is PROVABLY constant-row (the
+    # plan audit's nested-loop gate does not trust checkpointed
     # lineage; same pattern as the other bounded probe spines).
-    cell_rows = (leav.groupBy("__x").agg(F.sum("__r").alias("__tot"))
-                 .collect())
-    if len(cell_rows) > 8:
+    arms = leav.select("__x").distinct().collect()
+    if len(arms) > 8:
         raise ValueError(
-            f"finegray: group column has {len(cell_rows)} levels; "
+            f"finegray: group column has {len(arms)} levels; "
             "expected a 0/1 indicator (bounded-cell contract)")
     cells = leav.sparkSession.range(1).select(F.inline(F.array(*[
-        F.struct(F.lit(int(r["__x"])).alias("__x"),
-                 F.lit(int(r["__tot"])).alias("__tot"))
-        for r in cell_rows])))
+        F.struct(F.lit(int(r["__x"])).alias("__x")) for r in arms])))
     probe = (
         tg.filter(F.col("d1t") > 0)
         .select("__t", "g_prev", "d1t", "d1xt")
         .crossJoin(F.broadcast(cells))
-        .select("__x", "__t", "__tot", "g_prev", "d1t", "d1xt",
+        .select("__x", "__t", "g_prev", "d1t", "d1xt",
                 F.lit(0).alias("__r"), F.lit(0.0).alias("__wc"),
                 F.lit(0).alias("__il"))
     )
     lv = (
-        leav.join(F.broadcast(cells), "__x")
-        .join(tg.select("__t", "g"), "__t")
-        .select("__x", "__t", "__tot",
+        leav.join(tg.select("__t", "g"), "__t")
+        .select("__x", "__t",
                 F.lit(None).cast("double").alias("g_prev"),
                 F.lit(None).cast("long").alias("d1t"),
                 F.lit(None).cast("long").alias("d1xt"),
@@ -1712,18 +1512,13 @@ def _finegray_weighted_grid(leav: DataFrame) -> DataFrame:
                 (F.col("__d2").cast("double") / F.col("g")).alias("__wc"),
                 F.lit(1).alias("__il"))
     )
-    w_prev = (
-        Window.partitionBy("__x")
-        .orderBy("__t", "__il")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    order = ("__t", "__il")
     atr2 = (
         probe.unionByName(lv)
-        .withColumn(
-            "nx", F.col("__tot")
-            - F.coalesce(F.sum("__r").over(w_prev), F.lit(0)))
-        .withColumn(
-            "cw", F.coalesce(F.sum("__wc").over(w_prev), F.lit(0.0)))
+        .withColumn("nx", _at_risk(F.col("__r"), "__x", order=order))
+        .withColumn("cw", F.coalesce(
+            F.sum("__wc").over(_prefix("__x", order=order, end=-1)),
+            F.lit(0.0)))
         .filter(F.col("__il") == 0)
     )
     s_val = F.col("nx") + F.col("g_prev") * F.col("cw")
@@ -2029,44 +1824,22 @@ def rmst_diff(
         F.col(time_col).alias(time_col),
         F.col(event_col).alias(event_col),
     )
-    pt = _per_time(sub, time_col, event_col, "__arm")
-    w_ord = Window.partitionBy("__g").orderBy("__t")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    tot = Window.partitionBy("__g")
-    pt = pt.withColumn(
-        "n",
-        F.sum(F.col("d") + F.col("c")).over(tot)
-        - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0)),
-    )
+    pt = _with_n_risk(_per_time(sub, time_col, event_col, "__arm"))
     ev = pt.filter((F.col("d") > 0) & (F.col("__t") <= F.lit(tau)))
     w_ev = Window.partitionBy("__g").orderBy("__t")
-    w_cum = w_ev.rowsBetween(Window.unboundedPreceding, 0)
-    w_fwd = w_ev.rowsBetween(0, Window.unboundedFollowing)
-    frac = F.col("d").cast("double") / F.col("n")
     ev = (
-        ev.withColumn(
-            "__lsum",
-            F.sum(F.when(F.col("d") < F.col("n"), F.log(1 - frac))
-                  .otherwise(F.lit(0.0))).over(w_cum))
-        .withColumn(
-            "__zero",
-            F.max(F.when(F.col("d") >= F.col("n"), 1).otherwise(0))
-            .over(w_cum))
-        .withColumn(
-            "s",
-            F.when(F.col("__zero") == 1, F.lit(0.0))
-            .otherwise(F.exp("__lsum")))
+        ev.withColumn("s", _product_limit(F.col("d"), F.col("n_risk"), "__g"))
         .withColumn(
             "seg",
             F.col("s") * (
                 F.coalesce(F.lead("__t").over(w_ev), F.lit(tau))
                 .cast("double") - F.col("__t").cast("double")))
-        .withColumn("a_i", F.sum("seg").over(w_fwd))
+        .withColumn("a_i", F.sum("seg").over(
+            w_ev.rowsBetween(0, Window.unboundedFollowing)))
     )
+    n, d = F.col("n_risk"), F.col("d")
     vterm = F.when(
-        F.col("n") > F.col("d"),
-        F.col("a_i") * F.col("a_i") * F.col("d")
-        / (F.col("n") * (F.col("n") - F.col("d"))),
+        n > d, F.col("a_i") * F.col("a_i") * d / (n * (n - d)),
     ).otherwise(F.lit(0.0))
     arm = ev.groupBy("__g").agg(
         (F.min("__t").cast("double") + F.sum("seg")).alias("__rmst"),
@@ -2157,40 +1930,27 @@ def cindex(
     # dense grid: every distinct time x every score band (band list is
     # a constant-row collect_set broadcast, exploded — no data-sized
     # cartesian), left-joined back onto the sparse cells.
-    bands = cells.groupBy("__s").agg(F.sum("n").alias("tot"))
-    blist = bands.groupBy().agg(
-        F.collect_list(F.struct("__s", "tot")).alias("bs"))
+    blist = cells.groupBy().agg(F.collect_set("__s").alias("bs"))
     dense = (
         cells.select("__t").distinct()
         .crossJoin(F.broadcast(blist))
-        .select("__t", F.explode("bs").alias("b"))
-        .select("__t", F.col("b.__s").alias("__s"), F.col("b.tot").alias("tot"))
+        .select("__t", F.explode("bs").alias("__s"))
         .join(cells, ["__t", "__s"], "left")
         .select(
-            "__t", "__s", "tot",
+            "__t", "__s",
             F.coalesce("n", F.lit(0)).alias("n"),
             F.coalesce("d", F.lit(0)).alias("d"),
         )
     )
     # eligible j's for an event anchored at time t, per band s:
     # everyone in s strictly later than t, plus s's censored AT t =
-    # tot - (strict time prefix of n) - (events at exactly t).
-    w_tpre = (
-        Window.partitionBy("__s").orderBy("__t")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_spre = (
-        Window.partitionBy("__t").orderBy("__s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tall = Window.partitionBy("__t")
+    # the band's risk set at t minus its events at exactly t.
     g = (
-        dense.withColumn(
-            "nb", F.coalesce(F.sum("n").over(w_tpre), F.lit(0)))
-        .withColumn("elig", F.col("tot") - F.col("nb") - F.col("d"))
-        .withColumn(
-            "ca", F.coalesce(F.sum("elig").over(w_spre), F.lit(0)))
-        .withColumn("ta", F.sum("elig").over(w_tall))
+        dense.withColumn("elig", _at_risk(F.col("n"), "__s") - F.col("d"))
+        .withColumn("ca", F.coalesce(
+            F.sum("elig").over(_prefix("__t", order=("__s",), end=-1)),
+            F.lit(0)))
+        .withColumn("ta", F.sum("elig").over(Window.partitionBy("__t")))
     )
     one = g.filter(F.col("d") > 0).groupBy().agg(
         F.sum(F.col("d") * F.col("ca")).alias("conc"),
@@ -2285,25 +2045,22 @@ def direct_standardization(
     )
 
 
-def _binary_event_grid_tv(
+def episode_flows(
     df: DataFrame,
     start_col: str,
     stop_col: str,
     event_col: str,
     x_col: str,
 ) -> DataFrame:
-    """Counting-process version of :func:`_binary_event_grid` for
-    EPISODE data (start, stop] with a binary covariate fixed within
-    each episode: per pooled event time (__t, d, d1, n, n1) where the
-    risk set is every episode with start < t <= stop. Built without a
-    data-sized interval join: arrivals (+1 at start) and departures
-    (-1 at stop) are pre-aggregated per distinct time (grid-sized
-    flows), unioned with event-time probes sorting BEFORE same-time
-    flow rows, and the at-risk counts are one exclusive running sum —
-    an arrival AT t is not yet at risk (start < t strict) and a
-    departure AT t still is (stop >= t), exactly the probe ordering.
-    Not checkpointed: :func:`_fit_binary_cox` and :func:`mcf_curve`
-    each read it once."""
+    """Counting-process EPISODES (start, stop] with a binary covariate
+    fixed within each episode -> the per-time flow table (__t, d, d1,
+    fn, fn1, eps): events (total / arm-1) of the episodes stopping at
+    t, the NET at-risk flow at t (arrivals at start minus departures
+    at stop, total / arm-1) and the episode count (arrivals). Every
+    counter is integer-ADDITIVE, so a streaming fold maintains this
+    table per micro-batch (streaming/survival.py
+    stream_cox_tv_partials) and :func:`_flow_grid` rebuilds the risk
+    sets on read. Zero-length episodes (stop <= start) are dropped."""
     ep = (
         df.select(
             F.col(start_col).cast("double").alias("__a"),
@@ -2313,33 +2070,58 @@ def _binary_event_grid_tv(
         )
         .filter(F.col("__b") > F.col("__a"))
     )
-    ev = (
-        ep.groupBy(F.col("__b").alias("__t"))
-        .agg(F.sum("__e").alias("d"),
-             F.sum(F.col("__e") * F.col("__x")).alias("d1"))
-        .filter(F.col("d") > 0)
-    )
-    arr = ep.groupBy(F.col("__a").alias("__t")).agg(
-        F.count(F.lit(1)).alias("dn"), F.sum("__x").alias("dn1"))
-    dep = ep.groupBy(F.col("__b").alias("__t")).agg(
-        (-F.count(F.lit(1))).alias("dn"), (-F.sum("__x")).alias("dn1"))
-    null_l = F.lit(None).cast("long")
-    flows = arr.unionByName(dep).select(
-        "__t", "dn", "dn1", F.lit(1).alias("is_real"),
-        null_l.alias("d"), null_l.alias("d1"))
-    probes = ev.select(
-        "__t", F.lit(0).cast("long").alias("dn"),
-        F.lit(0).cast("long").alias("dn1"),
-        F.lit(0).alias("is_real"), "d", "d1")
-    w_prev = Window.orderBy("__t", "is_real").rowsBetween(
-        Window.unboundedPreceding, -1)
+    zero = F.lit(0).cast("long")
+    at_start = ep.groupBy(F.col("__a").alias("__t")).agg(
+        F.sum(F.lit(0)).alias("d"), F.sum(F.lit(0)).alias("d1"),
+        F.count(F.lit(1)).alias("fn"), F.sum("__x").alias("fn1"),
+        F.count(F.lit(1)).alias("eps"))
+    at_stop = ep.groupBy(F.col("__b").alias("__t")).agg(
+        F.sum("__e").alias("d"),
+        F.sum(F.col("__e") * F.col("__x")).alias("d1"),
+        (-F.count(F.lit(1))).alias("fn"), (-F.sum("__x")).alias("fn1"),
+        zero.alias("eps"))
     return (
-        flows.unionByName(probes)
-        .withColumn("n", F.coalesce(F.sum("dn").over(w_prev), F.lit(0)))
-        .withColumn("n1", F.coalesce(F.sum("dn1").over(w_prev), F.lit(0)))
-        .filter(F.col("is_real") == 0)
+        at_start.unionByName(at_stop)
+        .groupBy("__t")
+        .agg(*[F.sum(c).alias(c) for c in ("d", "d1", "fn", "fn1", "eps")])
+    )
+
+
+def _flow_grid(flows: DataFrame) -> DataFrame:
+    """Per pooled event time (__t, d, d1, n, n1) from an
+    :func:`episode_flows` table: the risk set at t is every episode
+    with start < t <= stop, i.e. the strict prefix sum of the net flows
+    — an arrival AT t is not yet at risk, a departure AT t still is."""
+    w = _prefix(end=-1)
+    return (
+        flows.withColumn("n", F.coalesce(F.sum("fn").over(w), F.lit(0)))
+        .withColumn("n1", F.coalesce(F.sum("fn1").over(w), F.lit(0)))
+        .filter(F.col("d") > 0)
         .select("__t", "d", "d1", "n", "n1")
     )
+
+
+def _binary_event_grid_tv(
+    df: DataFrame,
+    start_col: str,
+    stop_col: str,
+    event_col: str,
+    x_col: str,
+) -> DataFrame:
+    """Counting-process version of :func:`_binary_event_grid` for
+    EPISODE data: the :func:`_flow_grid` over the episodes' flows."""
+    return _flow_grid(
+        episode_flows(df, start_col, stop_col, event_col, x_col))
+
+
+def cox_tv_from_flows(flows: DataFrame, iterations: int = 3) -> DataFrame:
+    """:func:`cox_newton_tv` from an :func:`episode_flows` table — the
+    streaming read path (streaming/survival.py finalize_cox_tv): risk
+    sets from :func:`_flow_grid`, n_episodes from the folded arrivals,
+    then the shared binary-covariate fit and emission."""
+    counts = flows.groupBy().agg(
+        F.coalesce(F.sum("eps"), F.lit(0)).alias("n_episodes"))
+    return _binary_cox_row(_flow_grid(flows), iterations, counts)
 
 
 def cox_newton_tv(
@@ -2366,19 +2148,15 @@ def cox_newton_tv(
     Zero-length episodes (stop <= start) are dropped. Ties follow
     Breslow, as everywhere in this family.
 
-    Scale shape: two groupBys to grid-sized flow/event tables, one
-    exclusive running window over the bounded pooled time grid
-    (:func:`_binary_event_grid_tv`), then the shared
+    Scale shape: grid-sized arrival/departure aggregates into the
+    per-time flow table (:func:`episode_flows`), one strict-prefix
+    window over it (:func:`_flow_grid`), then the shared
     :func:`_fit_binary_cox` steps. The episode table is scanned a
     bounded number of times and never self-joined.
     """
-    grid = _binary_event_grid_tv(df, start_col, stop_col, event_col, x_col)
-    counts = (
-        df.filter(F.col(stop_col).cast("double")
-                  > F.col(start_col).cast("double"))
-        .groupBy().agg(F.count(F.lit(1)).alias("n_episodes"))
-    )
-    return _binary_cox_row(grid, iterations, counts)
+    return cox_tv_from_flows(
+        episode_flows(df, start_col, stop_col, event_col, x_col),
+        iterations)
 
 
 def km_weighted(
@@ -2419,40 +2197,15 @@ def km_weighted(
         .agg(F.sum(wv * ev).alias("wd"),
              F.sum(wv * (1 - ev)).alias("wc"))
     )
-    w_ord = Window.partitionBy("__g").orderBy("__t")
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy("__g")
-    pt = pt.withColumn(
-        "nw",
-        F.sum(F.col("wd") + F.col("wc")).over(tot)
-        - F.coalesce(F.sum(F.col("wd") + F.col("wc")).over(w_prev),
-                     F.lit(0.0)),
-    )
-    frac = F.col("wd") / F.col("nw")
-    pt = (
-        pt.withColumn(
-            "__lsum",
-            F.sum(
-                F.when(F.col("wd") < F.col("nw"), F.log(1 - frac))
-                .otherwise(F.lit(0.0))
-            ).over(w_cum),
-        )
-        .withColumn(
-            "__zero",
-            F.max(
-                F.when(F.col("wd") >= F.col("nw"), 1).otherwise(0)
-            ).over(w_cum),
-        )
-    )
+    pt = pt.withColumn("nw", _at_risk(F.col("wd") + F.col("wc"), "__g"))
     return pt.select(
         F.col("__g").alias(group_col),
         F.col("__t").alias(time_col),
         F.round("nw", 6).alias("n_risk_w"),
         F.round("wd", 6).alias("events_w"),
         F.round("wc", 6).alias("censored_w"),
-        F.when(F.col("__zero") == 1, F.lit(0.0))
-        .otherwise(F.round(F.exp("__lsum"), 6)).alias("survival"),
+        F.round(_product_limit(F.col("wd"), F.col("nw"), "__g"), 6)
+        .alias("survival"),
     )
 
 
@@ -2475,7 +2228,7 @@ def mcf_curve(
     events closing one episode).
 
     Risk sets come from the same arrival/departure flow grid
-    (:func:`_binary_event_grid_tv` with a constant covariate): an
+    (:func:`_flow_grid` with a constant covariate): an
     episode is at risk on (start, stop], so a subject's own event
     episode keeps it at risk at the event time and n(t) >= d(t) > 0 at
     every emitted row. Zero-length episodes are dropped.
@@ -2484,23 +2237,24 @@ def mcf_curve(
     the bounded pooled time grid; the episode table is scanned a
     bounded number of times and never self-joined.
     """
-    grid = _binary_event_grid_tv(
+    return mcf_from_flows(episode_flows(
         df.withColumn("__one", F.lit(1)), start_col, stop_col,
-        event_col, "__one")
-    w_cum = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, 0)
+        event_col, "__one"))
+
+
+def mcf_from_flows(flows: DataFrame) -> DataFrame:
+    """:func:`mcf_curve` from an :func:`episode_flows` table — the
+    streaming read path (streaming/survival.py finalize_mcf): risk sets
+    from :func:`_flow_grid`, then the cumulative d/n and d/n^2
+    windows."""
     frac = F.col("d").cast("double") / F.col("n")
     var_t = F.col("d").cast("double") / (F.col("n") * F.col("n"))
-    out = (
-        grid.withColumn("__mcf", F.sum(frac).over(w_cum))
-        .withColumn("__var", F.sum(var_t).over(w_cum))
-    )
-    return out.select(
+    return _flow_grid(flows).select(
         F.col("__t").alias("t"),
         F.col("n").cast("long").alias("n_risk"),
         F.col("d").cast("long").alias("n_events"),
-        F.round("__mcf", 6).alias("mcf"),
-        F.round(F.sqrt("__var"), 6).alias("se"),
+        F.round(F.sum(frac).over(_prefix()), 6).alias("mcf"),
+        F.round(F.sqrt(F.sum(var_t).over(_prefix())), 6).alias("se"),
     )
 
 
@@ -2534,30 +2288,10 @@ def aalen_excess_hazard(
     ascending cumulative window. Fixed accumulation order, so the
     curve is oracle-reproducible (round-6).
     """
-    sub = df.filter(F.col(group_col).isin([group_a, group_b]))
-    pt = _per_time(sub, time_col, event_col, group_col)
-    is_a = F.col("__g") == F.lit(group_a)
-    per_t = pt.groupBy("__t").agg(
-        F.sum(F.when(is_a, F.col("d")).otherwise(0)).alias("da"),
-        F.sum(F.when(is_a, F.col("d") + F.col("c")).otherwise(0))
-        .alias("ra"),
-        F.sum(F.when(~is_a, F.col("d")).otherwise(0)).alias("db"),
-        F.sum(F.when(~is_a, F.col("d") + F.col("c")).otherwise(0))
-        .alias("rb"),
-    )
-    w_prev = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, -1)
-    w_cum = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, 0)
-    tot = Window.partitionBy()
-    per_t = (
-        per_t.withColumn(
-            "na", F.sum("ra").over(tot)
-            - F.coalesce(F.sum("ra").over(w_prev), F.lit(0)))
-        .withColumn(
-            "nb", F.sum("rb").over(tot)
-            - F.coalesce(F.sum("rb").over(w_prev), F.lit(0)))
-    )
+    _, per_t = _two_arm_grid(
+        df, time_col, event_col, group_col, group_a, group_b)
+    per_t = (per_t.withColumn("db", F.col("d") - F.col("da"))
+             .withColumn("nb", F.col("n") - F.col("na")))
     inc_a = F.when(F.col("da") > 0,
                    F.col("da").cast("double") / F.col("na")).otherwise(0.0)
     inc_b = F.when(F.col("db") > 0,
@@ -2571,9 +2305,9 @@ def aalen_excess_hazard(
         F.col("db").cast("double") / (F.col("nb") * F.col("nb"))
     ).otherwise(0.0)
     out = (
-        per_t.withColumn("__b", F.sum(inc_a - inc_b).over(w_cum))
-        .withColumn("__v", F.sum(var_a + var_b).over(w_cum))
-        .filter((F.col("da") + F.col("db")) > 0)
+        per_t.withColumn("__b", F.sum(inc_a - inc_b).over(_prefix()))
+        .withColumn("__v", F.sum(var_a + var_b).over(_prefix()))
+        .filter(F.col("d") > 0)
     )
     se = F.sqrt("__v")
     return out.select(

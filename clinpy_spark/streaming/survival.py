@@ -11,6 +11,13 @@ monitor). The curve itself is recomputed from the folded grid on read
 via :func:`clinpy_spark.operators.survival.km_from_per_time` — windows
 over the bounded time grid, never over history.
 
+The time-varying Cox and recurrent-event MCF twins share one fold
+state: the counting-process flow table of
+:func:`clinpy_spark.operators.survival.episode_flows`, whose risk sets
+the readers rebuild with the same strict-prefix flow grid the batch
+``cox_newton_tv`` / ``mcf_curve`` use
+(``operators/survival._flow_grid``).
+
 Replay safety: foreachBatch is at-least-once, so each wrapper runs
 through :func:`clinpy_spark.streaming.fold.stream_fold`, whose merge
 stamps the state table with its checkpoint lineage's last folded batch
@@ -23,7 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from clinpy_spark.operators.survival import _per_time, km_from_per_time
+from clinpy_spark.operators.survival import (
+    _per_time, cox_newton_multi_from_leavers, cox_tv_from_flows,
+    episode_flows, finegray_leavers, finegray_newton_from_leavers,
+    finegray_score_from_leavers, km_from_per_time, mcf_from_flows)
 from clinpy_spark.streaming.fold import stream_fold, summed
 
 
@@ -118,8 +128,6 @@ def finalize_cox_multi(
     identical to the batch ``cox_newton_multi`` over everything folded
     so far (twin test); at-risk counts rebuild from the leaver totals
     on read."""
-    from clinpy_spark.operators.survival import cox_newton_multi_from_leavers
-
     xs = [f"__x{i}" for i in range(1, d + 1)]
     return cox_newton_multi_from_leavers(
         partials.select(*xs, "__t", "__r", "__d"), d,
@@ -155,8 +163,6 @@ def stream_finegray_partials(
     :func:`finalize_finegray_score` / :func:`finalize_finegray_beta`:
     the censoring KM and IPCW weights rebuild from the folded counters
     on read, never from subject history."""
-    from clinpy_spark.operators.survival import finegray_leavers
-
     return stream_fold(
         stream, catalog, name,
         lambda batch: finegray_leavers(batch, time_col, status_col, group_col),
@@ -168,8 +174,6 @@ def finalize_finegray_score(partials: DataFrame) -> DataFrame:
     """Fine-Gray score test over the maintained leaver table —
     identical to the batch ``finegray_score`` over the same subjects
     (twin test)."""
-    from clinpy_spark.operators.survival import finegray_score_from_leavers
-
     return finegray_score_from_leavers(partials)
 
 
@@ -178,8 +182,6 @@ def finalize_finegray_beta(
 ) -> DataFrame:
     """Fine-Gray subdistribution-hazard MLE over the maintained leaver
     table — identical to the batch ``finegray_newton`` (twin test)."""
-    from clinpy_spark.operators.survival import finegray_newton_from_leavers
-
     return finegray_newton_from_leavers(partials, iterations=iterations)
 
 
@@ -191,37 +193,11 @@ def cox_tv_partials(
     x_col: str,
 ) -> DataFrame:
     """One micro-batch of counting-process EPISODES -> additive
-    per-time partials (__t, d, d1, fn, fn1, eps): events of the
-    episode stopping at t, the NET at-risk flow at t (arrivals at
-    start minus departures at stop — the sufficient statistic of
-    ``operators/survival._binary_event_grid_tv``'s risk sets, which
-    are its strict prefix sums), and the episode count (arrivals) for
-    n_episodes. All integer counters, so micro-batches fold by plain
-    addition."""
-    ep = (
-        batch.select(
-            F.col(start_col).cast("double").alias("__a"),
-            F.col(stop_col).cast("double").alias("__b"),
-            F.col(event_col).cast("int").alias("__e"),
-            F.col(x_col).cast("int").alias("__x"),
-        )
-        .filter(F.col("__b") > F.col("__a"))
-    )
-    zero = F.lit(0).cast("long")
-    at_start = ep.groupBy(F.col("__a").alias("__t")).agg(
-        F.sum(F.lit(0)).alias("d"), F.sum(F.lit(0)).alias("d1"),
-        F.count(F.lit(1)).alias("fn"), F.sum("__x").alias("fn1"),
-        F.count(F.lit(1)).alias("eps"))
-    at_stop = ep.groupBy(F.col("__b").alias("__t")).agg(
-        F.sum("__e").alias("d"),
-        F.sum(F.col("__e") * F.col("__x")).alias("d1"),
-        (-F.count(F.lit(1))).alias("fn"), (-F.sum("__x")).alias("fn1"),
-        zero.alias("eps"))
-    return (
-        at_start.unionByName(at_stop)
-        .groupBy("__t")
-        .agg(*[F.sum(c).alias(c) for c in ("d", "d1", "fn", "fn1", "eps")])
-    )
+    per-time partials (__t, d, d1, fn, fn1, eps): the shared flow
+    table of :func:`clinpy_spark.operators.survival.episode_flows`
+    (events at stop, the net at-risk flow, the episode count). All
+    integer counters, so micro-batches fold by plain addition."""
+    return episode_flows(batch, start_col, stop_col, event_col, x_col)
 
 
 def stream_cox_tv_partials(
@@ -253,57 +229,20 @@ def stream_cox_tv_partials(
 def finalize_cox_tv(partials: DataFrame, iterations: int = 3) -> DataFrame:
     """Time-varying Cox MLE over the maintained per-time partial table
     — identical to the batch ``cox_newton_tv`` over the same episodes
-    (twin test): risk sets are the strict prefix sums of the folded
-    net flows, then the shared binary-covariate fit and emission
-    (:func:`clinpy_spark.operators.survival._binary_cox_row`)."""
-    from pyspark.sql.window import Window
-
-    from clinpy_spark.operators.survival import _binary_cox_row
-
-    w_prev = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, -1)
-    grid = (
-        partials.withColumn(
-            "n", F.coalesce(F.sum("fn").over(w_prev), F.lit(0)))
-        .withColumn(
-            "n1", F.coalesce(F.sum("fn1").over(w_prev), F.lit(0)))
-        .filter(F.col("d") > 0)
-        .select("__t", "d", "d1", "n", "n1")
-    )
-    counts = partials.groupBy().agg(
-        F.coalesce(F.sum("eps"), F.lit(0)).alias("n_episodes"))
-    return _binary_cox_row(grid, iterations, counts)
+    (twin test): both read the shared flow grid (risk sets as strict
+    prefix sums of the net flows), then the shared binary-covariate
+    fit and emission
+    (:func:`clinpy_spark.operators.survival.cox_tv_from_flows`)."""
+    return cox_tv_from_flows(partials, iterations)
 
 
 def finalize_mcf(partials: DataFrame) -> DataFrame:
     """Recurrent-event mean cumulative function over the SAME
     maintained per-time partial table as :func:`finalize_cox_tv` (one
     fold state, two readers — the stream_cox_tv_partials fold already
-    carries everything the MCF needs): risk sets as strict prefix sums
-    of the folded net flows, then the cumulative d/n and d/n^2
-    windows. Identical to the batch ``mcf_curve`` over the same
-    episodes (twin test)."""
-    from pyspark.sql.window import Window
-
-    w_prev = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, -1)
-    w_cum = Window.orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, 0)
-    grid = (
-        partials.withColumn(
-            "n", F.coalesce(F.sum("fn").over(w_prev), F.lit(0)))
-        .filter(F.col("d") > 0)
-    )
-    frac = F.col("d").cast("double") / F.col("n")
-    var_t = F.col("d").cast("double") / (F.col("n") * F.col("n"))
-    out = (
-        grid.withColumn("__mcf", F.sum(frac).over(w_cum))
-        .withColumn("__var", F.sum(var_t).over(w_cum))
-    )
-    return out.select(
-        F.col("__t").alias("t"),
-        F.col("n").cast("long").alias("n_risk"),
-        F.col("d").cast("long").alias("n_events"),
-        F.round("__mcf", 6).alias("mcf"),
-        F.round(F.sqrt("__var"), 6).alias("se"),
-    )
+    carries everything the MCF needs): the shared flow grid, then the
+    shared MCF emission
+    (:func:`clinpy_spark.operators.survival.mcf_from_flows`).
+    Identical to the batch ``mcf_curve`` over the same episodes (twin
+    test)."""
+    return mcf_from_flows(partials)

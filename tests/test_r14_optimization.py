@@ -19,7 +19,8 @@
   (ADVICE r13), on both moments backends of the binary-covariate
   fitter.
 - The binary-covariate Cox family (cox_newton, stratified, time-
-  varying, Fine-Gray) pins no RDD on its driver path.
+  varying, Fine-Gray) and the proportional-hazards check pin no RDD on
+  their driver path.
 - The Cox-multi (cell x event-time) grid built on the driver from one
   bounded leaver collect equals the Spark-built grid row for row, and a
   leaver table under the cap whose grid is over it takes the
@@ -129,6 +130,17 @@ def test_binary_family_driver_path_pins_no_rdd(spark):
         out = build().collect()
         assert out[0]["beta"] is not None, name
         assert jsc.getPersistentRDDs().size() == pinned, name
+
+
+def test_ph_check_pins_no_rdd(spark):
+    # the residual trend reads the grid a second time and recomputes it
+    # instead of checkpointing it. At most unchanged: the context
+    # cleaner may release an earlier test's checkpoint meanwhile.
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs().size()
+    out = surv.cox_ph_check(_cohort(spark), "t", "e", "x").collect()
+    assert out[0]["beta"] is not None
+    assert jsc.getPersistentRDDs().size() <= pinned
 
 
 def test_cox_multi_fallback_matches_driver(spark, monkeypatch):

@@ -156,7 +156,7 @@ EXPECTED_UNBOUNDED = {
     "surv_cox_beta",  # the 1-row literal fit crossJoins the 1-row
                       # n_subjects count (same shape as surv_cox_score)
     "surv_cox_tv",  # the 1-row literal fit crossJoins the 1-row
-                    # n_episodes count
+                    # n_episodes sum over the episode-flow table
     "gx_king_kinship",  # the CONSTANT 200-row broadcast variant-range
                         # grid expansion (same shape as gx_ld_r2); the
                         # kinship pair join itself is a variant equi-join
