@@ -10,10 +10,29 @@ and ``left_anti`` against the master only for incremental appends (J6).
 
 Shuffle budget per modality: exactly one (the dedup); bridge writes are
 shuffle-free projections.
+
+Concurrency: the tables of a project share no state, so their writes
+run at once (:func:`_concurrently`). ``create_project`` runs each step
+(samples, gene and transcript expression, each junction pass, each
+variant family) on its own thread, plan construction included, and
+``ingest_junctions`` / ``ingest_variants`` run their own table writes
+the same way. Every thread inherits the caller's job group and local
+properties and labels its jobs ``create_project: <table>``; Spark's
+``local[N]`` slots still bound the running tasks. A call returns or
+raises only after every write it started has finished; a failure is
+re-raised once all of them are done (the first in step order when
+several fail), and the tables the other steps wrote stay written.
+Readers build no job of their own: TSV headers and VCF headers are read
+on the driver.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,6 +40,7 @@ from clinpy_spark.functions.ids import junction_id, variant_id
 from clinpy_spark.session import ProjectCatalog
 from clinpy_spark.sources.rsem import read_rsem_genes, read_rsem_isoforms
 from clinpy_spark.sources.star_sj import read_star_sj
+from clinpy_spark.sources.tsv import read_tsv
 from clinpy_spark.sources.vcf import (
     _SQL_TYPE,
     indexed_fields,
@@ -29,6 +49,27 @@ from clinpy_spark.sources.vcf import (
     vcf_csq_fields,
     vcf_format_keys,
 )
+
+
+def _concurrently(spark: SparkSession,
+                  steps: dict[str, Callable[[], object]]) -> None:
+    """Run every step on its own thread and wait for all of them, then
+    re-raise the first failure in ``steps`` order. Each thread inherits
+    the caller's job group and local properties and sets its own job
+    description ``create_project: <key>``, so the caller's are left
+    alone."""
+    def run(table: str, fn: Callable[[], object]) -> None:
+        spark.sparkContext.setJobDescription(f"create_project: {table}")
+        fn()
+
+    # One wrapper per step: each clones the caller's local properties,
+    # so one thread's job description never reaches another's.
+    with ThreadPoolExecutor(max_workers=len(steps),
+                            thread_name_prefix="create_project") as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(run), table, fn)
+                   for table, fn in steps.items()]
+    for f in futures:
+        f.result()
 
 
 def _union_per_sample(parts: list[DataFrame]) -> DataFrame:
@@ -77,7 +118,7 @@ def _write_new(
 def load_samples(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
     """Sample-metadata TSV -> samples table (create_project.py:50-66:
     lowercase headers, mandatory sample_id/cohort, projection)."""
-    df = spark.read.csv(path, sep="\t", header=True, inferSchema=False)
+    df = read_tsv(spark, path)
     df = df.toDF(*[c.lower() for c in df.columns])
     for required in ("sample_id", "cohort"):
         if required not in df.columns:
@@ -138,22 +179,26 @@ def ingest_junctions(
         .withColumn("id", junction_id())                      # A12: no resolution join
         .select("id", *natural)
     )
-    # Physical layout (SURVEY §1.5: partitioning replaces the reference's
-    # secondary indexes, rna_tables.py:28-29): directory-partition by chrom
-    # so chrom-filtered queries prune whole directories, and sort each
-    # partition by start so parquet row-group min/max stats prune within.
-    _write_new(catalog, master_new, junc_t, natural, incremental,
-               sort_cols=["start"], partition_by=["chrom"],
-               bucket_col="id", buckets=bucket_by_fk)
-
     bridge = per_sample.select(
         "samplename", junction_id().alias("junction"), "uniq_map", "multi_map"
     )
-    # Composite-PK guard (rna_tables.py:26-31): already-loaded
-    # (samplename, junction) pairs are skipped, not doubled — a
-    # re-ingested sample contributes only its genuinely new rows.
-    _write_new(catalog, bridge, bridge_t, ["samplename", "junction"],
-               incremental, bucket_col="junction", buckets=bucket_by_fk)
+    _concurrently(spark, {
+        # Physical layout (SURVEY §1.5: partitioning replaces the
+        # reference's secondary indexes, rna_tables.py:28-29):
+        # directory-partition by chrom so chrom-filtered queries prune
+        # whole directories, and sort each partition by start so parquet
+        # row-group min/max stats prune within.
+        junc_t: partial(_write_new, catalog, master_new, junc_t, natural,
+                        incremental, sort_cols=["start"],
+                        partition_by=["chrom"], bucket_col="id",
+                        buckets=bucket_by_fk),
+        # Composite-PK guard (rna_tables.py:26-31): already-loaded
+        # (samplename, junction) pairs are skipped, not doubled — a
+        # re-ingested sample contributes only its genuinely new rows.
+        bridge_t: partial(_write_new, catalog, bridge, bridge_t,
+                          ["samplename", "junction"], incremental,
+                          bucket_col="junction", buckets=bucket_by_fk),
+    })
 
 
 def reconcile_fields(per_file: list[list[str]], not_same: str = "error") -> list[str]:
@@ -261,22 +306,24 @@ def ingest_variants(
         .withColumn("variant_id", variant_id())
         .select("variant_id", "chrom", "pos", "id", "ref", "alt")
     )
-    # Same layout story as junctions: chrom directory partitions (replaces
-    # the chrom/pos indexes of snp_tables.py:8-9,17-18) + pos-sorted row
-    # groups for min/max pruning on region queries (P6).
-    _write_new(catalog, master_new, var_t, natural, incremental,
-               sort_cols=["pos"], partition_by=["chrom"],
-               bucket_col="variant_id", buckets=bucket_by_fk)
-
     with_id = parsed.withColumn("variant_id", variant_id())
     gt_cols = ["gt_alleles", "gt_phased"] if "gt" in format_keys else []
     mapping = with_id.select(
         "variant_id", "samplename", "qual", "filter", *format_keys, *gt_cols
     ).dropDuplicates(["variant_id", "samplename"])
-    # Composite-PK guard (snp_functions.py:171-186): already-loaded
-    # (variant_id, samplename) pairs are skipped.
-    _write_new(catalog, mapping, map_t, ["variant_id", "samplename"],
-               incremental, bucket_col="variant_id", buckets=bucket_by_fk)
+    writes = {
+        # Same layout story as junctions: chrom directory partitions
+        # (replaces the chrom/pos indexes of snp_tables.py:8-9,17-18) +
+        # pos-sorted row groups for min/max pruning on region queries (P6).
+        var_t: partial(_write_new, catalog, master_new, var_t, natural,
+                       incremental, sort_cols=["pos"], partition_by=["chrom"],
+                       bucket_col="variant_id", buckets=bucket_by_fk),
+        # Composite-PK guard (snp_functions.py:171-186): already-loaded
+        # (variant_id, samplename) pairs are skipped.
+        map_t: partial(_write_new, catalog, mapping, map_t,
+                       ["variant_id", "samplename"], incremental,
+                       bucket_col="variant_id", buckets=bucket_by_fk),
+    }
 
     if out_csq:
         # Impacts carry chrom as a LAYOUT column (functionally dependent
@@ -300,9 +347,11 @@ def ingest_variants(
         # already-loaded variants are skipped, not doubled — without
         # this every incremental run re-appends impact rows for every
         # parsed variant and select(impacts=True) joins fan out.
-        _write_new(catalog, impacts, imp_t, ["variant_id"], incremental,
-                   sort_cols=sort_cols, partition_by=["chrom"],
-                   bucket_col="variant_id", buckets=bucket_by_fk)
+        writes[imp_t] = partial(_write_new, catalog, impacts, imp_t,
+                                ["variant_id"], incremental,
+                                sort_cols=sort_cols, partition_by=["chrom"],
+                                bucket_col="variant_id", buckets=bucket_by_fk)
+    _concurrently(spark, writes)
 
 
 def create_project(spark: SparkSession, project_dir: str, config: dict | str) -> ProjectCatalog:
@@ -326,6 +375,9 @@ def create_project(spark: SparkSession, project_dir: str, config: dict | str) ->
     guards (samples PK readme.md:47-49; expression PK (samplename, gene)
     rna_tables.py:42-48) as anti-joins: already-loaded samples and
     already-loaded expression samplenames are skipped, not duplicated.
+
+    The steps run concurrently (module docstring): a failing step's
+    error is raised after every other step has finished.
     """
     if isinstance(config, str):
         import yaml
@@ -337,27 +389,34 @@ def create_project(spark: SparkSession, project_dir: str, config: dict | str) ->
     bucket_by_fk = (config.get("layout") or {}).get("bucket_by_fk")
     bucket_by_fk = int(bucket_by_fk) if bucket_by_fk else None
 
-    samples = load_samples(spark, config["samples"], config.get("sample_columns"))
-    _write_new(catalog, samples, "samples", ["sample_id"], incremental)
+    def samples() -> None:
+        df = load_samples(spark, config["samples"], config.get("sample_columns"))
+        _write_new(catalog, df, "samples", ["sample_id"], incremental)
 
+    def expression(manifest, what: str, table: str, key: str) -> None:
+        _write_new(catalog, ingest_expression(spark, manifest, what), table,
+                   ["samplename", key], incremental)
+
+    steps = {"samples": samples}
     rna = config.get("rna") or {}
     if rna.get("expression"):
         genes = [(s, g) for s, g, _ in rna["expression"]]
         isos = [(s, i) for s, _, i in rna["expression"] if i]
-        _write_new(catalog, ingest_expression(spark, genes, "gene"),
-                   "gene_expression", ["samplename", "gene"], incremental)
+        steps["gene_expression"] = partial(
+            expression, genes, "gene", "gene_expression", "gene")
         if isos:
-            _write_new(catalog, ingest_expression(spark, isos, "transcript"),
-                       "transcript_expression", ["samplename", "transcript"],
-                       incremental)
+            steps["transcript_expression"] = partial(
+                expression, isos, "transcript", "transcript_expression",
+                "transcript")
     if rna.get("junctions"):
         # unfiltered pass + QC-filtered pass (create_project.py:119-155)
-        ingest_junctions(spark, catalog, rna["junctions"], incremental=incremental,
-                         bucket_by_fk=bucket_by_fk)
-        ingest_junctions(spark, catalog, rna["junctions"],
-                         min_unique_reads=int(rna.get("min_unique_reads", 3)),
-                         filtered=True, incremental=incremental,
-                         bucket_by_fk=bucket_by_fk)
+        steps["all_junctions"] = partial(
+            ingest_junctions, spark, catalog, rna["junctions"],
+            incremental=incremental, bucket_by_fk=bucket_by_fk)
+        steps["junctions"] = partial(
+            ingest_junctions, spark, catalog, rna["junctions"],
+            min_unique_reads=int(rna.get("min_unique_reads", 3)),
+            filtered=True, incremental=incremental, bucket_by_fk=bucket_by_fk)
 
     snps = (config.get("snps") or {})
     # vcf.yaml-equivalent knobs (reference vcf.yaml:1-9 + variant_impacts):
@@ -367,6 +426,8 @@ def create_project(spark: SparkSession, project_dir: str, config: dict | str) ->
         missing_impact=vcf_params.get("missing_impact", "ignore"),
         type_dict=vcf_params.get("variant_impacts"),
         split_multiallelic=bool(vcf_params.get("split_multiallelic", False)),
+        incremental=incremental,
+        bucket_by_fk=bucket_by_fk,
     )
     gate = snps.get("filter") or {}
     gate_kw = dict(
@@ -378,20 +439,20 @@ def create_project(spark: SparkSession, project_dir: str, config: dict | str) ->
     # filtered family either gets its own pre-filtered file list (the
     # reference's shape) or derives from the unfiltered list with the
     # explicit FILTER/qual gate when ``snps.filter`` is configured.
-    for key, rna in (("variants", False), ("rna_variants", True)):
+    for key, is_rna in (("variants", False), ("rna_variants", True)):
         files = snps.get(key)
         if files:
-            ingest_variants(spark, catalog, files, rna=rna,
-                            incremental=incremental, bucket_by_fk=bucket_by_fk,
-                            **vcf_kw)
+            steps[key] = partial(ingest_variants, spark, catalog, files,
+                                 rna=is_rna, **vcf_kw)
         filt_files = snps.get(f"filtered_{key}")
         if filt_files:
-            ingest_variants(spark, catalog, filt_files, rna=rna, filtered=True,
-                            incremental=incremental, bucket_by_fk=bucket_by_fk,
-                            **vcf_kw)
+            steps[f"filtered_{key}"] = partial(
+                ingest_variants, spark, catalog, filt_files, rna=is_rna,
+                filtered=True, **vcf_kw)
         elif files and gate:
-            ingest_variants(spark, catalog, files, rna=rna, filtered=True,
-                            incremental=incremental, bucket_by_fk=bucket_by_fk,
-                            **vcf_kw, **gate_kw)
+            steps[f"filtered_{key}"] = partial(
+                ingest_variants, spark, catalog, files, rna=is_rna,
+                filtered=True, **vcf_kw, **gate_kw)
 
+    _concurrently(spark, steps)
     return catalog

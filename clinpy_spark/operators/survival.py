@@ -498,11 +498,13 @@ def logrank_stratified(
         F.col(event_col).cast("int").alias("__e"),
         (F.col(group_col) == F.lit(group_a)).alias("__a"),
     )
+    # Leavers count the subjects with a non-NULL event, as
+    # _two_arm_grid's d + c does: a NULL-event subject is in no risk set.
     per_t = base.groupBy("__s", "__t").agg(
         F.sum(F.when(F.col("__a"), F.col("__e")).otherwise(0)).alias("da"),
-        F.sum(F.when(F.col("__a"), 1).otherwise(0)).alias("ra"),
+        F.count(F.when(F.col("__a"), F.col("__e"))).alias("ra"),
         F.sum("__e").alias("d"),
-        F.count(F.lit(1)).alias("r"),
+        F.count("__e").alias("r"),
     )
     per_t = (
         per_t.withColumn("na", _at_risk(F.col("ra"), "__s"))

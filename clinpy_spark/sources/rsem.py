@@ -2,8 +2,9 @@
 
 The reference reads per-sample TSVs with pandas, drops length columns,
 renames to canonical lowercase names, and stamps the sample id (P11/P14).
-Here the same shape as a Spark csv scan — schema declared up front so
-the scan prunes and nothing is inferred.
+Here the same shape as a Spark csv scan — the header is read on the
+driver (:func:`~clinpy_spark.sources.tsv.read_tsv`), so building the
+DataFrame runs no Spark job and nothing is inferred.
 """
 
 from __future__ import annotations
@@ -11,11 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clinpy_spark.sources.tsv import read_tsv
+
 
 def read_rsem_genes(spark: SparkSession, path: str, samplename: str) -> DataFrame:
     """RSEM ``*.genes.results`` -> (samplename, gene, expected_count,
     tpm, fpkm). Reference rna_functions.py:15-21."""
-    df = spark.read.csv(path, sep="\t", header=True, inferSchema=False)
+    df = read_tsv(spark, path)
     return df.select(
         F.lit(samplename).alias("samplename"),
         F.col("gene_id").alias("gene"),
@@ -28,7 +31,7 @@ def read_rsem_genes(spark: SparkSession, path: str, samplename: str) -> DataFram
 def read_rsem_isoforms(spark: SparkSession, path: str, samplename: str) -> DataFrame:
     """RSEM ``*.isoforms.results`` -> (samplename, transcript,
     expected_count, tpm, fpkm, isopct). Reference rna_functions.py:23-27."""
-    df = spark.read.csv(path, sep="\t", header=True, inferSchema=False)
+    df = read_tsv(spark, path)
     return df.select(
         F.lit(samplename).alias("samplename"),
         F.col("transcript_id").alias("transcript"),

@@ -92,7 +92,10 @@ def coerce_csq(col: Column, type_name: str) -> Column:
 def csq_struct(entry: Column, fields: list[str], types: dict[str, str] | None) -> Column:
     """One pipe-packed CSQ entry ("a|b|c") -> typed struct: positional
     split per ``fields``, '' -> NULL, then per-field coercion. The parse
-    core of :func:`read_vcf`, reusable over any string column."""
+    core of :func:`read_vcf`, reusable over any string column. The
+    field names are literals (``named_struct``), so they hold in a
+    projection that also carries a generator, where aliases inside an
+    expression are dropped."""
     out_fields = [f for f in fields if types is None or f in types]
 
     def _one(i, name):
@@ -100,10 +103,11 @@ def csq_struct(entry: Column, fields: list[str], types: dict[str, str] | None) -
         base = F.when(raw == "", None).otherwise(raw)
         if types is not None:
             base = coerce_csq(base, types[name])
-        return base.alias(name)
+        return F.lit(name), base
 
-    return F.struct(*[
-        _one(i, name) for i, name in enumerate(fields) if name in out_fields
+    return F.named_struct(*[
+        part for i, name in enumerate(fields) if name in out_fields
+        for part in _one(i, name)
     ])
 
 
@@ -219,65 +223,73 @@ def read_vcf(
     format_keys = format_keys if format_keys is not None else vcf_format_keys(path)
     types = normalize_type_dict(type_dict)
 
+    # Output columns by name; assigning a name again replaces the column
+    # in place, so the order is that of a withColumn chain. At most three
+    # projections: the parse (with the allele explode when splitting),
+    # the per-allele rewrite plus the CSQ explode, and the CSQ expansion.
     lines = spark.read.text(path).filter(~F.col("value").startswith("#"))
     c = F.split("value", "\t")
-    df = lines.select(
-        F.lit(samplename).alias("samplename"),
-        c.getItem(0).alias("chrom"),
-        c.getItem(1).cast("long").alias("pos"),
-        F.when(c.getItem(2) == ".", None).otherwise(c.getItem(2)).alias("id"),
-        c.getItem(3).alias("ref"),
-        c.getItem(4).alias("alt"),
-        F.when(c.getItem(5) == ".", None).otherwise(c.getItem(5)).cast("double").alias("qual"),
-        c.getItem(6).alias("filter"),
-        F.get(c, 7).alias("_info"),       # F.get: NULL (not ANSI error) when
-        F.get(c, 8).alias("_format"),     # the column is absent — sites-only
-        F.get(c, 9).alias("_sample0"),    # VCFs have no FORMAT/sample cols.
-    )
+    cols = {
+        "samplename": F.lit(samplename),
+        "chrom": c.getItem(0),
+        "pos": c.getItem(1).cast("long"),
+        "id": F.when(c.getItem(2) == ".", None).otherwise(c.getItem(2)),
+        "ref": c.getItem(3),
+        "alt": c.getItem(4),
+        "qual": F.when(c.getItem(5) == ".", None).otherwise(c.getItem(5)).cast("double"),
+        "filter": c.getItem(6),
+    }
+    # F.get: NULL (not ANSI error) when the column is absent — sites-only
+    # VCFs have no FORMAT/sample columns.
+    info, fmt, sample0 = F.get(c, 7), F.get(c, 8), F.get(c, 9)
 
     # FORMAT: map keys to the first sample's values (snp_functions.py:98-105).
     # Values are positionally padded to the key count — the VCF spec allows
     # trailing FORMAT fields to be dropped per-sample, and map_from_arrays
     # errors on ragged arrays.
-    keys_arr = F.split("_format", ":")
-    vals_arr = F.split("_sample0", ":")
+    keys_arr = F.split(fmt, ":")
+    vals_arr = F.split(sample0, ":")
     fmt_map = F.map_from_arrays(
         keys_arr, F.transform(keys_arr, lambda _, i: F.get(vals_arr, i))
     )
     for key in format_keys:
-        df = df.withColumn(key, fmt_map.getItem(key.upper()))
-    if "gt" in format_keys:
-        df = (
-            df.withColumn("gt_alleles", gt_alleles_expr(F.col("gt")))
-            .withColumn("gt_phased", gt_phased_expr(F.col("gt")))
-            .withColumn("gt", gt_tuple_expr(F.col("gt")))
-        )
-
+        cols[key] = fmt_map.getItem(key.upper())
+    has_gt = "gt" in format_keys
+    if has_gt:
+        gt = cols["gt"]
+        cols["gt_alleles"] = gt_alleles_expr(gt)
+        cols["gt_phased"] = gt_phased_expr(gt)
+        cols["gt"] = gt_tuple_expr(gt)
     if split_multiallelic:
-        df = df.withColumn(
-            "allele_idx",
-            F.explode(F.sequence(F.lit(1), F.size(F.split("alt", ",")))),
-        ).withColumn("alt", F.element_at(F.split("alt", ","), F.col("allele_idx")))
-        if "gt" in format_keys:
+        cols["allele_idx"] = F.explode(
+            F.sequence(F.lit(1), F.size(F.split(cols["alt"], ","))))
+    if csq_fields:
+        # CSQ=a|b|c,a2|b2|c2 -> array of typed structs -> explode (A9/A10).
+        csq_str = F.regexp_extract(info, r"(?:^|;)CSQ=([^;]*)", 1)
+        one = F.transform(
+            F.split(csq_str, ","),
+            lambda entry: csq_struct(entry, csq_fields, types),
+        )
+        cols["csq"] = F.when(csq_str == "", F.array()).otherwise(one)
+    df = lines.select(*[col.alias(name) for name, col in cols.items()])
+
+    cols = {name: F.col(name) for name in df.columns}
+    if split_multiallelic:
+        cols["alt"] = F.element_at(F.split("alt", ","), F.col("allele_idx"))
+        if has_gt:
             renorm = F.transform(
                 "gt_alleles",
                 lambda a: F.when(a.isNull(), F.lit(None).cast("int"))
                 .when(a == F.col("allele_idx"), 1)
                 .otherwise(0),
             )
-            df = df.withColumn("gt_alleles", renorm).withColumn(
-                "gt", gt_tuple_from_alleles(F.col("gt_alleles"))
-            )
-
-    if csq_fields:
-        # CSQ=a|b|c,a2|b2|c2 -> array of typed structs -> explode (A9/A10).
-        csq_str = F.regexp_extract("_info", r"(?:^|;)CSQ=([^;]*)", 1)
-        one = F.transform(
-            F.split(csq_str, ","),
-            lambda entry: csq_struct(entry, csq_fields, types),
-        )
-        df = df.withColumn("csq", F.when(csq_str == "", F.array()).otherwise(one))
-        if explode_csq:
-            df = df.withColumn("csq", F.explode_outer("csq")).select("*", "csq.*").drop("csq")
-
-    return df.drop("_info", "_format", "_sample0")
+            cols["gt_alleles"] = renorm
+            cols["gt"] = gt_tuple_from_alleles(renorm)
+    explode = bool(csq_fields) and explode_csq
+    if explode:
+        cols["csq"] = F.explode_outer("csq")
+    if split_multiallelic or explode:
+        df = df.select(*[col.alias(name) for name, col in cols.items()])
+    if explode:
+        df = df.select(*[n for n in df.columns if n != "csq"], "csq.*")
+    return df

@@ -437,6 +437,25 @@ def test_stratified_logrank_adjusts_confounded_strata(spark):
     assert strat.chi2 < pooled.chi2 / 4  # adjustment removes most of it
 
 
+def test_stratified_logrank_null_event_single_stratum_is_plain(spark):
+    """A subject with a NULL event is in no risk set of either test, so
+    one stratum still reduces exactly to logrank_test."""
+    from clinpy_spark.operators.survival import (
+        logrank_stratified, logrank_test)
+
+    rows = [("a", 1, 1), ("a", 3, 0), ("a", 4, 1), ("a", 2, None),
+            ("b", 2, 1), ("b", 3, 1), ("b", 5, 0), ("b", 1, None)]
+    df = spark.createDataFrame(rows, "grp string, t long, evt int") \
+        .withColumn("site", F.lit("s0"))
+    plain = logrank_test(df, "t", "evt", "grp", "a", "b").collect()[0]
+    strat = logrank_stratified(
+        df, "t", "evt", "grp", "site", "a", "b").collect()[0]
+    assert plain.chi2 is not None
+    assert (strat.chi2, strat.observed_a, strat.expected_a, strat.n_a,
+            strat.n_b) == tuple(plain)
+    assert strat.n_strata == 1
+
+
 def test_inbreeding_f_closed_form(spark):
     """Two variants, two samples: at v0 p = 1/4, at v1 p = 3/4, so
     each contributes exp-het 0.375. The all-het sample scores

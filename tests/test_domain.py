@@ -58,12 +58,9 @@ def _write(path, text):
         fh.write(text)
 
 
-@pytest.fixture(scope="module")
-def project(spark, tmp_path_factory):
-    raw = tmp_path_factory.mktemp("raw")
-    proj_dir = str(tmp_path_factory.mktemp("proj"))
-    genome_dir = str(tmp_path_factory.mktemp("genome"))
-
+def _raw_project(raw) -> dict:
+    """Write the fixture's raw sample files under ``raw``; return the
+    ``create_project`` config that loads them."""
     _write(raw / "samples.tsv", "Sample_ID\tCohort\tage\n" + "".join(
         f"{s}\t{c}\t{30 + i}\n" for i, (s, c) in enumerate(SAMPLES)))
 
@@ -91,7 +88,7 @@ def project(spark, tmp_path_factory):
     _write(v1, VCF_HEADER + VCF_BODY)
     _write(v2, VCF_HEADER + VCF_BODY2)
 
-    config = {
+    return {
         "samples": str(raw / "samples.tsv"),
         "rna": {
             "expression": expression,
@@ -100,6 +97,13 @@ def project(spark, tmp_path_factory):
         },
         "snps": {"variants": [("s1", str(v1)), ("s3", str(v2))]},
     }
+
+
+@pytest.fixture(scope="module")
+def project(spark, tmp_path_factory):
+    config = _raw_project(tmp_path_factory.mktemp("raw"))
+    proj_dir = str(tmp_path_factory.mktemp("proj"))
+    genome_dir = str(tmp_path_factory.mktemp("genome"))
     catalog = create_project(spark, proj_dir, config)
 
     genome = ProjectCatalog(spark, genome_dir)
@@ -352,6 +356,136 @@ def test_create_project_from_yaml_idempotent_incremental(spark, tmp_path):
     create_project(spark, proj, str(cfg_path))
     counts2 = {t: catalog.table(t).count() for t in tables}
     assert counts2 == counts1
+
+
+def _next_job_id(spark) -> int:
+    """Run a one-job marker action and return its id. Spark numbers jobs
+    in start order, so two markers bracket every job started between
+    them."""
+    sc = spark.sparkContext
+    sc.setJobGroup("test-marker", "marker")
+    sc.parallelize([0], 1).count()
+    return max(sc.statusTracker().getJobIdsForGroup("test-marker"))
+
+
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description"):
+        sc.setLocalProperty(key, None)
+
+
+PROJECT_TABLES = ["samples", "gene_expression", "transcript_expression",
+                  "all_junctions", "sample_to_alljunction", "junctions",
+                  "sample_to_junction", "variants", "sample_variants",
+                  "variant_impacts"]
+
+
+def test_create_project_jobs_stay_in_caller_group(spark, tmp_path, monkeypatch):
+    """The concurrent writes inherit the caller's job group, label their
+    own jobs with their table and leave the caller's description alone;
+    no job only reads a TSV header."""
+    from clinpy_spark.etl import ingest
+
+    config = _raw_project(tmp_path)
+    sc = spark.sparkContext
+    labels = {}
+    write_new = ingest._write_new
+
+    def spy(catalog, df, table, *args, **kwargs):
+        labels[table] = (sc.getLocalProperty("spark.jobGroup.id"),
+                         sc.getLocalProperty("spark.job.description"))
+        return write_new(catalog, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(ingest, "_write_new", spy)
+    first = _next_job_id(spark)
+    try:
+        sc.setJobGroup("etl-test", "caller")
+        create_project(spark, str(tmp_path / "proj"), config)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        _clear_job_group(sc)
+    last = _next_job_id(spark)
+    _clear_job_group(sc)
+
+    jobs = set(sc.statusTracker().getJobIdsForGroup("etl-test"))
+    assert jobs == set(range(first + 1, last))
+    # 24 jobs when each samples and RSEM file ran one to read its header
+    assert len(jobs) == 24 - (1 + 2 * len(SAMPLES))
+    assert labels == {t: ("etl-test", f"create_project: {t}")
+                      for t in PROJECT_TABLES}
+
+
+def test_tsv_readers_run_no_job(spark, tmp_path):
+    from clinpy_spark.etl.ingest import load_samples
+    from clinpy_spark.sources.rsem import read_rsem_genes, read_rsem_isoforms
+
+    config = _raw_project(tmp_path)
+    s, genes, isoforms = config["rna"]["expression"][0]
+    first = _next_job_id(spark)
+    dfs = [load_samples(spark, config["samples"]),
+           read_rsem_genes(spark, genes, s), read_rsem_isoforms(spark, isoforms, s)]
+    assert _next_job_id(spark) == first + 1
+    _clear_job_group(spark.sparkContext)
+    assert dfs[0].columns == ["sample_id", "cohort", "age", "user_annot"]
+    assert [r.gene for r in dfs[1].collect()] == ["g1", "g2", "g3"]
+    assert dfs[2].first().isopct == 100.0
+
+
+def test_create_project_failure_waits_for_every_job(spark, tmp_path):
+    """A missing RSEM file fails its step; create_project raises that
+    error only once every other write has finished."""
+    config = _raw_project(tmp_path)
+    s, genes, isoforms = config["rna"]["expression"][1]
+    missing = str(tmp_path / "gone.genes.results")
+    config["rna"]["expression"][1] = (s, missing, isoforms)
+    with pytest.raises(FileNotFoundError, match="gone.genes.results"):
+        create_project(spark, str(tmp_path / "proj"), config)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    catalog = ProjectCatalog(spark, str(tmp_path / "proj"))
+    assert not catalog.exists("gene_expression")
+    assert all(catalog.exists(t) for t in PROJECT_TABLES if t != "gene_expression")
+
+
+def test_concurrent_writes_keep_every_stats_entry(spark, tmp_path):
+    """More concurrent writers than cores, with frequent thread switches:
+    each table's entry survives the shared _stats.json read-modify-write."""
+    import sys
+    from functools import partial
+
+    from clinpy_spark.etl.ingest import _concurrently
+
+    catalog = ProjectCatalog(spark, str(tmp_path))
+    tables = [f"t{i}" for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        _concurrently(spark, {t: partial(catalog.write, spark.range(i + 1), t)
+                              for i, t in enumerate(tables)})
+    finally:
+        sys.setswitchinterval(interval)
+    assert [catalog.stats(t)["rows"] for t in tables] == list(range(1, 9))
+
+
+@pytest.mark.parametrize("header", [
+    "gene_id\tTPM\tFPKM",
+    '"gene id"\t"TPM"\tFPKM',
+    "a\t\tA\tb",
+])
+@pytest.mark.parametrize("gz", [False, True])
+def test_tsv_header_matches_spark(spark, tmp_path, header, gz):
+    """Driver-read header == Spark's ``header=True`` columns: plain,
+    quoted, gzip, and Spark's renaming of empty and duplicate names."""
+    import gzip
+
+    from clinpy_spark.sources.tsv import read_tsv
+
+    path = str(tmp_path / ("t.tsv.gz" if gz else "t.tsv"))
+    with (gzip.open if gz else open)(path, "wt") as fh:
+        fh.write(header + "\n" + "\t".join("1" * (header.count("\t") + 1)) + "\n")
+    spark_df = spark.read.csv(path, sep="\t", header=True)
+    ours = read_tsv(spark, path)
+    assert ours.columns == spark_df.columns
+    assert ours.dtypes == spark_df.dtypes
+    assert ours.collect() == spark_df.collect()
 
 
 def test_build_genome_catalog_from_gtf(spark, tmp_path):
@@ -682,6 +816,42 @@ def test_split_multiallelic(spark, tmp_path):
     assert miss.alt == "C" and miss.gt_alleles == [None, None] and miss.gt == "(., .)"
     # CSQ replicates across the split (annotation-side matching caveat)
     assert r1.consequence == r2.consequence == "missense_variant"
+
+
+VCF_BASE_SCHEMA = [
+    ("samplename", "string"), ("chrom", "string"), ("pos", "bigint"),
+    ("id", "string"), ("ref", "string"), ("alt", "string"),
+    ("qual", "double"), ("filter", "string"), ("gt", "string"),
+    ("dp", "string"), ("gt_alleles", "array<int>"), ("gt_phased", "boolean"),
+]
+
+
+@pytest.mark.parametrize("split", [False, True])
+@pytest.mark.parametrize("typed", [False, True])
+def test_read_vcf_output_schema(spark, tmp_path, split, typed):
+    """read_vcf's columns, their order and types, with and without
+    split_multiallelic, on the fixture headers (CSQ as strings, or typed
+    and restricted per the config)."""
+    from clinpy_spark.sources.vcf import read_vcf
+
+    vcf = tmp_path / "v.vcf"
+    if typed:
+        _write(vcf, TYPED_HEADER + "chr1\t100\trs1\tA\tG,T\t60.0\tPASS\t"
+               "CSQ=missense_variant|MODERATE|0.001|25|YES\tGT:DP\t0/1:30\n")
+        csq = [("consequence", "string"), ("impact", "string"), ("af", "double"),
+               ("distance", "int"), ("canonical", "boolean")]
+        kw = {"type_dict": TYPED_TYPES}
+    else:
+        _write(vcf, VCF_HEADER + VCF_BODY)
+        csq = [("consequence", "string"), ("impact", "string"),
+               ("symbol", "string"), ("gene", "string")]
+        kw = {}
+    df = read_vcf(spark, str(vcf), "sX", split_multiallelic=split, **kw)
+    allele = [("allele_idx", "int")] if split else []
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == \
+        VCF_BASE_SCHEMA + allele + csq
+    rows = df.collect()
+    assert rows and all(r.consequence is not None for r in rows)
 
 
 def test_corpus_etl_curate_and_export(spark, tmp_path):
